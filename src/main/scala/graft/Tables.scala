@@ -45,12 +45,14 @@ object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     parquetMemoized(spark, s"$sfDir/$name.parquet")
 
-  /** Schema-memoized parquet read of any path — r16: shared with
-    * [[graft.catalog.GraftDatabase.read]], whose per-call footer
-    * inference job every serving read and every `db.sql()` view
-    * registration was paying. Parquet writes always create fresh
-    * part-file names, so any rewrite changes the listing signature
-    * and re-infers.
+  /** Schema-memoized parquet read of any path. Used for the static
+    * corpus tables, where the memo always hits. NOT used by
+    * [[graft.catalog.GraftDatabase.read]]: database tables are mostly
+    * fresh paths, so the memo missed and the extra listing made reads
+    * slower (measured negative in r16 and reverted; see the note on
+    * that method). Parquet writes always create fresh part-file
+    * names, so any rewrite changes the listing signature and
+    * re-infers.
     */
   private[graft] def parquetMemoized(spark: SparkSession,
       path: String): DataFrame = {

@@ -1,5 +1,7 @@
 package graft.catalog
 
+import java.util.Locale
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -729,29 +731,47 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
     * (Datasette's raison d'être). Tables are exposed as temp views
     * under their bare names; the full Spark SQL dialect applies.
     *
+    * Only the tables the query NAMES are registered: a table whose
+    * name occurs, case-insensitively, as an identifier token of the
+    * query text (split on `[^A-Za-z0-9_]+`). Each registration is a
+    * parquet read whose schema inference launches a Spark job, so
+    * registering every table made one query cost one job per table.
+    * The token set is a superset of the relations the query can name
+    * (CTEs, joins, subqueries, string literals), so over-matching
+    * costs an extra read and never drops a table the query uses.
     * Internal underscore tables are queryable too — the reference
     * exposes `_csv_progress_` to its SQL surface (its tests poll
-    * upload progress by query, tests:170-184). Directories that
-    * aren't parquet tables (stream checkpoints, staging) are skipped.
+    * upload progress by query, tests:170-184). A named table that
+    * cannot be read (a corrupt table, an empty `_csv_progress_`
+    * directory) fails the call with its read error. Only
+    * identifier-safe names can be views; "weird ~ name.csv" style
+    * tables remain readable through [[read]].
+    *
+    * Temp views are shared by every database in a session, so a name
+    * this database lacks could still resolve to a view an earlier
+    * call on ANOTHER database registered. Every name the query names that some
+    * graft database registered and that is absent here is dropped
+    * first, so the query fails with table-not-found rather than
+    * reading another database's rows. Views graft did not register
+    * are never touched. Limit: a user temp view defined over a graft
+    * view is refreshed only when the query also names the underlying
+    * table.
     */
   def sql(query: String): DataFrame = {
+    val named = query.split("[^A-Za-z0-9_]+").map(_.toLowerCase(Locale.ROOT)).toSet
     val p = new Path(path)
-    val all =
+    val tables =
       if (!fs.exists(p)) Seq.empty[String]
       else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-    // Only identifier-safe names can be views; "weird ~ name.csv"
-    // style tables remain readable through read(). The skip-on-error
-    // is restricted to INTERNAL underscore dirs (checkpoints/staging
-    // aren't parquet); an unreadable USER table must still throw —
-    // temp views are session-global, so swallowing the error here
-    // would silently serve a stale view registered by an earlier
-    // sql() call, possibly from a different database.
-    all.filter(_.matches("[A-Za-z_][A-Za-z0-9_]*")).foreach { t =>
-      if (t.startsWith("_")) {
-        try read(t).createOrReplaceTempView(t)
-        catch { case _: Exception => () } // not a parquet table
-      } else read(t).createOrReplaceTempView(t)
+        .filter(t => t.matches("[A-Za-z_][A-Za-z0-9_]*") &&
+          named(t.toLowerCase(Locale.ROOT)))
+    val registered = GraftDatabase.viewsOf(spark)
+    tables.foreach { t =>
+      read(t).createOrReplaceTempView(t)
+      registered.add(t.toLowerCase(Locale.ROOT))
     }
+    for (n <- named -- tables.map(_.toLowerCase(Locale.ROOT)) if registered.remove(n))
+      spark.catalog.dropTempView(n)
     spark.sql(query)
   }
 
@@ -925,6 +945,18 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
 }
 
 object GraftDatabase {
+  /** Lower-cased names [[GraftDatabase.sql]] registered as temp views,
+    * per session (temp views are session-scoped) — held weakly, like
+    * [[graft.Tables]]' schema memos, so a dead session's set is
+    * collectable. A name leaves the set when graft drops its view.
+    */
+  private val sqlViews = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.util.Set[String]]())
+
+  private def viewsOf(spark: SparkSession): java.util.Set[String] =
+    sqlViews.computeIfAbsent(spark,
+      _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
+
   def apply(spark: SparkSession, path: String): GraftDatabase =
     new GraftDatabase(spark, path)
 }

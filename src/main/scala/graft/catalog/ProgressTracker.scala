@@ -6,6 +6,7 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,8 @@ class ProgressTracker(db: GraftDatabase) {
 
   /** Parquet schema of the event log — identical shape to what a
     * Spark 1-row append would produce; readable by spark.read.parquet
-    * and the DuckDB oracle alike.
+    * and the DuckDB oracle alike. The one declaration of the layout:
+    * [[sparkSchema]] is derived from it.
     */
   private val progressSchema = MessageTypeParser.parseMessageType(
     """message graft_progress {
@@ -43,6 +45,13 @@ class ProgressTracker(db: GraftDatabase) {
       |  optional binary error (UTF8);
       |  optional int64 seq;
       |}""".stripMargin)
+
+  /** The event log's schema as `spark.read.parquet` would infer it —
+    * converted from [[progressSchema]] by Spark's own converter, so
+    * [[current]] reads without a footer-inference Spark job.
+    */
+  private val sparkSchema =
+    new ParquetToSparkSchemaConverter().convert(progressSchema)
 
   /** One-row metadata append, written DIRECTLY with a ParquetWriter —
     * a progress update must not cost a Spark job (the Spark write
@@ -112,7 +121,7 @@ class ProgressTracker(db: GraftDatabase) {
     */
   def current(): DataFrame = {
     val w = Window.partitionBy(col("id"))
-    spark.read.parquet(path)
+    spark.read.schema(sparkSchema).parquet(path)
       .withColumn("__rn", row_number().over(w.orderBy(col("seq").desc)))
       .withColumn("__started", max(col("started")).over(w))
       .withColumn("__todo", max(col("bytes_todo")).over(w))

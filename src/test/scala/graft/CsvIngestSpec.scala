@@ -3,7 +3,8 @@ package graft
 import java.nio.charset.Charset
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.GraftDatabase
@@ -978,5 +979,122 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
     val cur = t.current().collect().map(r =>
       r.getAs[String]("id") -> r.getAs[Long]("rows_done")).toMap
     assert(cur == Map("t1" -> 25L, "t2" -> 0L))
+  }
+
+  /** Every kind of event the uploaders write, for two tasks. */
+  private def progressLog(name: String): GraftDatabase = {
+    val db = GraftDatabase(spark, scratch(name) + "/db")
+    val t = db.progress
+    t.start("t1", "tbl", 100)
+    t.update("t1", "tbl", 100, 40, 10, seq = 1)
+    t.complete("t1", "tbl", 100, 25)
+    t.start("t2", "other", 50)
+    t.fail("t2", "other", "boom")
+    db
+  }
+
+  test("progress current() has the schema parquet inference gives the log") {
+    val db = progressLog("progress_schema")
+    val inferred = spark.read.parquet(db.tablePath(db.progress.tableName)).schema
+    assert(db.progress.current().schema == inferred)
+  }
+
+  test("constructing progress current() launches no Spark job") {
+    val db = progressLog("progress_jobs")
+    val (cur, jobs) = jobsLaunchedBy(db.progress.current())
+    assert(jobs == 0, s"constructing current() launched $jobs job(s)")
+    assert(cur.count() == 2L)
+  }
+}
+
+/** The SQL surface, [[GraftDatabase.sql]], over a database of several
+  * uploaded tables plus `_csv_progress_`.
+  */
+class SqlSurfaceSpec extends AnyFunSuite with SparkTestBase {
+
+  private def csv(dir: String, name: String, lines: String*): String = {
+    val p = s"$dir/$name.csv"
+    Files.write(Paths.get(p), lines.mkString("\n").getBytes("UTF-8"))
+    p
+  }
+
+  private lazy val db: GraftDatabase = {
+    val dir = scratch("sql_surface")
+    val d = GraftDatabase(spark, s"$dir/db")
+    Seq(
+      csv(dir, "dogs", "name,age,owner_id",
+        "Cleo,5,1", "Pancakes,4,2", "Rex,9,1", "Fido,2,3"),
+      csv(dir, "owners", "id,name", "1,Ana", "2,Bo", "3,Cy"),
+      csv(dir, "toys", "dog,toy,price", "Cleo,ball,2.5", "Rex,rope,4.0",
+        "Rex,bone,1.25"),
+      csv(dir, "cats", "name,lives", "Tom,9", "Kit,7"),
+      csv(dir, "birds", "name,wingspan", "Tweety,0.2", "Polly,0.4")
+    ).foreach { p =>
+      val r = CsvUploader.upload(d, p)
+      assert(r.error.isEmpty, r.error)
+    }
+    d
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("join, CTE, scalar subquery and a mixed-case name match DataFrame twins") {
+    val dogs = db.read("dogs")
+    val owners = db.read("owners")
+    val join = db.sql("""SELECT d.name, o.name AS owner
+                        |FROM dogs d JOIN owners o ON d.owner_id = o.id""".stripMargin)
+    assert(rows(join) == rows(dogs.join(owners, dogs("owner_id") === owners("id"))
+      .select(dogs("name"), owners("name").as("owner"))))
+    assert(join.count() == 4L)
+    val cte = db.sql("""WITH old AS (SELECT name, age FROM dogs WHERE age > 3)
+                       |SELECT name FROM old""".stripMargin)
+    assert(rows(cte) == rows(dogs.filter(col("age") > 3).select("name")))
+    assert(cte.count() == 3L)
+    val sub = db.sql("SELECT name, (SELECT COUNT(*) FROM toys) AS n_toys FROM dogs")
+    assert(rows(sub) ==
+      rows(dogs.select(col("name"), lit(db.read("toys").count()).as("n_toys"))))
+    assert(rows(db.sql("SELECT * FROM DOGS")) == rows(dogs))
+  }
+
+  test("_csv_progress_ is queryable by SQL") {
+    val done = db.sql("""SELECT COUNT(DISTINCT id) FROM _csv_progress_
+                        |WHERE completed IS NOT NULL""".stripMargin).head().getLong(0)
+    assert(done == 5L)
+    assert(done == db.progress.current().filter(col("completed").isNotNull).count())
+  }
+
+  test("an unreadable table fails only the queries that name it") {
+    val broken = Paths.get(db.tablePath("broken"))
+    Files.createDirectories(broken)
+    Files.write(broken.resolve("part-00000.parquet"), "not parquet".getBytes("UTF-8"))
+    try {
+      assert(rows(db.sql("SELECT name FROM cats")) ==
+        rows(db.read("cats").select("name")))
+      intercept[Exception](db.sql("SELECT * FROM broken").collect())
+    } finally db.dropTable("broken")
+  }
+
+  test("constructing a one-table query launches at most one job") {
+    assert(db.listTables().size >= 5)
+    val (df, jobs) = jobsLaunchedBy(db.sql("SELECT COUNT(*) FROM cats"))
+    assert(jobs <= 1, s"db.sql launched $jobs jobs to construct a one-table query")
+    assert(df.head().getLong(0) == 2L)
+  }
+
+  test("a name another database registered does not resolve here") {
+    val dir = scratch("sql_cross_db")
+    val a = GraftDatabase(spark, s"$dir/a")
+    val b = GraftDatabase(spark, s"$dir/b")
+    assert(CsvUploader.upload(a, csv(dir, "pets", "name", "Cleo")).error.isEmpty)
+    assert(CsvUploader.upload(b, csv(dir, "cats", "name", "Tom")).error.isEmpty)
+    assert(rows(a.sql("SELECT name FROM pets")) == Seq("[Cleo]"))
+    val e = intercept[AnalysisException](b.sql("SELECT name FROM pets").collect())
+    assert(e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), e.getMessage)
+    // a temp view graft did not register is left alone
+    spark.range(3).createOrReplaceTempView("sql_surface_user_view")
+    try assert(b.sql("SELECT * FROM sql_surface_user_view").count() == 3L)
+    finally spark.catalog.dropTempView("sql_surface_user_view")
+    assert(rows(a.sql("SELECT name FROM pets")) == Seq("[Cleo]"))
   }
 }
