@@ -178,9 +178,15 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
       .write.mode(SaveMode.Overwrite).parquet(outPath)
   }
 
-  /** Catalog identifier for a bucketed table of this database. */
+  /** Catalog identifier for a bucketed table of this database,
+    * unique per FULL database path ([[ServedArtifact.keyOf]]'s
+    * basename + path-MD5): every served artifact db is named `db`,
+    * and a basename-only identifier let two artifacts re-attach, or
+    * re-point, each other's tables in the session catalog. */
+  private lazy val bucketedPrefix = s"graft_${ServedArtifact.keyOf(path)}_"
+
   private def bucketedIdent(table: String): String =
-    s"graft_${name}_$table".replaceAll("[^A-Za-z0-9_]", "_")
+    s"$bucketedPrefix$table".replaceAll("[^A-Za-z0-9_]", "_")
 
   /** Write a table hash-bucketed (and sorted) by `bucketCol`:
     * repeated joins/aggregations on that key then read the
@@ -228,22 +234,24 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
     * (session-scoped, in-memory) catalog, so a new JVM would
     * otherwise see perfectly good bucket files as unregistered and
     * rebuild them — a build-once layout must survive process
-    * restarts to be worth building. Returns false when the path has
-    * no data (caller then does the real [[writeBucketed]]).
+    * restarts to be worth building. Fails loudly when the path has
+    * no data: callers re-attach artifacts whose sidecar vouches for
+    * the layout, so a missing one is a fault, not an empty table.
     */
   def registerBucketed(table: String, bucketCol: String,
-      nBuckets: Int): Boolean = {
+      nBuckets: Int): Unit = {
     val ident = bucketedIdent(table)
-    if (spark.catalog.tableExists(ident)) return true
-    val p = new Path(tablePath(table))
-    if (!fs.exists(p)) return false
-    val schemaDdl = spark.read.parquet(tablePath(table)).schema.toDDL
-    spark.sql(
-      s"""CREATE TABLE $ident ($schemaDdl) USING PARQUET
-         |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
-         |INTO $nBuckets BUCKETS
-         |LOCATION '${tablePath(table)}'""".stripMargin)
-    true
+    if (!spark.catalog.tableExists(ident)) {
+      if (!fs.exists(new Path(tablePath(table))))
+        throw new IllegalStateException(
+          s"no bucketed layout at ${tablePath(table)}")
+      val schemaDdl = spark.read.parquet(tablePath(table)).schema.toDDL
+      spark.sql(
+        s"""CREATE TABLE $ident ($schemaDdl) USING PARQUET
+           |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
+           |INTO $nBuckets BUCKETS
+           |LOCATION '${tablePath(table)}'""".stripMargin)
+    }
   }
 
   /** Write a table hive-partitioned by `partCols`: scans filtered on

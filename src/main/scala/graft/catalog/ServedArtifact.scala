@@ -2,22 +2,32 @@ package graft.catalog
 
 import org.apache.spark.sql.SparkSession
 
-/** Build-once/serve-many scratch artifact database, shared by every
-  * served-model path (C30/C31 LM models, the C36b quality gate, the
-  * B32 events rollup). One copy of the protocol the pattern's history
-  * demanded: key on the FULL source path (basename + path-MD5 — two
-  * same-named corpora must never share an artifact, the late-r8
-  * review fix), re-check the file-listing signature on EVERY
-  * invocation (a long-lived driver must notice a corpus swap, the r9
-  * fix), re-attach across processes via the sig sidecar table, and
-  * refresh Spark's session-level listing cache before a rebuild reads
-  * a swapped path (FAILED_READ_FILE otherwise). Extracted in r13 —
+/** Build-once/serve-many scratch artifact database, the one copy of
+  * the protocol every served path uses:
+  *   - the C30/C31 LM models (`lmmodel`, `mlmodel`),
+  *   - the C36b quality gate (`qgate`),
+  *   - the B32 events rollup (`evroll`),
+  *   - the E11/E12 text index (`textindex`, bucket count in the key),
+  *   - the bucketed TPC-H layout (`bucketed`, width in the key,
+  *     signed over BOTH `lineitem` and `orders`),
+  *   - the C40c split artifact (`splitart`, `newMod` in the key).
+  *
+  * The protocol the pattern's history demanded: key on the FULL
+  * source path (basename + path-MD5 — two same-named corpora must
+  * never share an artifact, the late-r8 review fix), re-check the
+  * file-listing signature of every source path on EVERY invocation
+  * (a long-lived driver must notice a corpus swap, the r9 fix),
+  * re-attach across processes via the sig sidecar table, and refresh
+  * Spark's session-level listing cache before a rebuild reads a
+  * swapped path (FAILED_READ_FILE otherwise). [[db]] builds only when
+  * stale; [[rebuild]] builds unconditionally under the same locks,
+  * for a build row whose timing is the build. Extracted in r13 —
   * this block existed in four verbatim copies, and two of its three
   * historical bugs had to be fixed in more than one of them.
   */
 object ServedArtifact {
 
-  // (prefix, dir) -> last verified signature; values are tiny strings
+  // artifact key -> last verified signature; values are tiny strings
   // and entries are bounded by distinct served corpora per process
   private val ready =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -45,58 +55,92 @@ object ServedArtifact {
 
   /** The served database for (`prefix`, `dir`, `keyExtra`), building
     * via `build` exactly when the sidecar signature disagrees with
-    * the current listing of `sigSource` (a table path under `dir`).
-    * `extraSig` folds build PARAMETERS into the staleness contract —
-    * an artifact built at keepPct=20 must not serve a keepPct=50
-    * request; use `keyExtra` instead when both parameterizations must
-    * stay servable side by side.
+    * the current listings of `sigSource` (the table paths the build
+    * reads — the bucketed TPC-H layout names two). `extraSig` folds
+    * build PARAMETERS into the staleness contract — an artifact built
+    * at keepPct=20 must not serve a keepPct=50 request; use
+    * `keyExtra` instead when both parameterizations must stay
+    * servable side by side.
     */
   def db(spark: SparkSession, prefix: String, dir: String,
-      sigSource: String, extraSig: String = "", keyExtra: String = "")(
+      sigSource: Seq[String], extraSig: String = "", keyExtra: String = "")(
       build: GraftDatabase => Unit): GraftDatabase = {
-    val key = s"${prefix}_${keyOf(dir, keyExtra)}"
-    val d = GraftDatabase(spark,
-      s"${graft.operators.CsvQueries.scratchRoot}/$key/db")
-    // Unlistable source = LOUD error, not a "missing" sentinel: a
-    // served artifact's corpus must be listable, and treating an IO
-    // hiccup as staleness would kick off a spurious full rebuild on
-    // the serving path mid-incident (r13 review).
-    val listing = graft.sources.ParquetStats.listingSig(spark, sigSource)
-      .getOrElse(throw new IllegalStateException(
-        s"served-artifact source not listable: $sigSource"))
-    val sig = if (extraSig.isEmpty) listing else s"$listing#$extraSig"
-    if (ready.get(key) != sig) {
-      locks.computeIfAbsent(key, _ => new Object()).synchronized {
-        // re-check under the lock: a racing thread may have built
-        if (ready.get(key) != sig) {
-          if (!sidecarFresh(spark, d, sig)) {
-            // The signature change proves the files moved under us —
-            // but Spark's session-level listing cache may still plan
-            // the OLD file set for this path. Invalidate before the
-            // rebuild reads.
-            spark.catalog.refreshByPath(sigSource)
-            // The JVM lock above only serializes THREADS; two driver
-            // PROCESSES cold-serving one key would still interleave
-            // SaveMode.Overwrite jobs on the same parquet path (r14
-            // ADVICE). The FS lock serializes across processes, and
-            // the freshness re-check under it turns "lost the race"
-            // into "serve the winner's build".
-            withBuildLock(spark, d) {
-              if (!sidecarFresh(spark, d, sig)) {
-                build(d)
-                d.write(spark.createDataset(Seq(sig))(
-                  org.apache.spark.sql.Encoders.STRING).toDF("sig"),
-                  "artifact_sig", org.apache.spark.sql.SaveMode.Overwrite)
-              }
-            }
-          }
-          ready.put(key, sig)
-          ()
-        }
-      }
-    }
+    val (key, d) = handle(spark, prefix, dir, keyExtra)
+    val sig = signature(spark, sigSource, extraSig)
+    if (ready.get(key) != sig)
+      locked(spark, key, d, sig, sigSource, force = false)(build)
     d
   }
+
+  /** [[db]] with the staleness check skipped: runs `build` under the
+    * same locks, writes the sidecar and marks the artifact ready, so
+    * later [[db]] calls serve what it built. For a build row whose
+    * timing IS the build cost. */
+  def rebuild(spark: SparkSession, prefix: String, dir: String,
+      sigSource: Seq[String], extraSig: String = "", keyExtra: String = "")(
+      build: GraftDatabase => Unit): GraftDatabase = {
+    val (key, d) = handle(spark, prefix, dir, keyExtra)
+    locked(spark, key, d, signature(spark, sigSource, extraSig), sigSource,
+      force = true)(build)
+    d
+  }
+
+  private def handle(spark: SparkSession, prefix: String, dir: String,
+      keyExtra: String): (String, GraftDatabase) = {
+    val key = s"${prefix}_${keyOf(dir, keyExtra)}"
+    (key, GraftDatabase(spark,
+      s"${graft.operators.CsvQueries.scratchRoot}/$key/db"))
+  }
+
+  // Unlistable source = LOUD error, not a "missing" sentinel: a
+  // served artifact's corpus must be listable, and treating an IO
+  // hiccup as staleness would kick off a spurious full rebuild on
+  // the serving path mid-incident (r13 review). One path's signature
+  // is its bare listing, so single-source sidecars keep their format.
+  private def signature(spark: SparkSession, sigSource: Seq[String],
+      extraSig: String): String = {
+    val listing = sigSource.map(p =>
+      graft.sources.ParquetStats.listingSig(spark, p)
+        .getOrElse(throw new IllegalStateException(
+          s"served-artifact source not listable: $p"))).mkString("||")
+    if (extraSig.isEmpty) listing else s"$listing#$extraSig"
+  }
+
+  private def locked(spark: SparkSession, key: String, d: GraftDatabase,
+      sig: String, sigSource: Seq[String], force: Boolean)(
+      build: GraftDatabase => Unit): Unit =
+    locks.computeIfAbsent(key, _ => new Object()).synchronized {
+      // re-check under the lock: a racing thread may have built
+      if (force || ready.get(key) != sig) {
+        if (force || !sidecarFresh(spark, d, sig)) {
+          // The signature change proves the files moved under us —
+          // but Spark's session-level listing cache may still plan
+          // the OLD file set for these paths. Invalidate before the
+          // rebuild reads.
+          sigSource.foreach(spark.catalog.refreshByPath)
+          // The JVM lock above only serializes THREADS; two driver
+          // PROCESSES cold-serving one key would still interleave
+          // SaveMode.Overwrite jobs on the same parquet path (r14
+          // ADVICE). The FS lock serializes across processes, and
+          // the freshness re-check under it turns "lost the race"
+          // into "serve the winner's build".
+          withBuildLock(spark, d) {
+            if (force || !sidecarFresh(spark, d, sig)) {
+              // an interrupted build must leave no sidecar vouching
+              // for its half-written tables
+              ready.remove(key)
+              d.dropTable("artifact_sig")
+              build(d)
+              d.write(spark.createDataset(Seq(sig))(
+                org.apache.spark.sql.Encoders.STRING).toDF("sig"),
+                "artifact_sig", org.apache.spark.sql.SaveMode.Overwrite)
+            }
+          }
+        }
+        ready.put(key, sig)
+        ()
+      }
+    }
 
   /** Is the on-disk sidecar's signature equal to `sig`? Distinguishes
     * the three cases the old catch-all conflated (r14 ADVICE): a

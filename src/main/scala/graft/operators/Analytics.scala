@@ -91,7 +91,7 @@ object Analytics {
       .filter(col("c_mktsegment") === "BUILDING")
     val o = Tables(spark, dir, "orders").filter(col("o_orderdate") < cutoff)
     // JOIN-FIRST shape with a shuffle-hash fact join (r14,
-    // DriveQ100Probe interleaved min-of-5/7 at three scales). The
+    // interleaved min-of-5/7 A/B at three scales). The
     // r10 pre-agg-below-the-join shape aggregated EVERY filtered
     // lineitem (a corpus-wide 15M-group decimal hash agg at 100×)
     // before the selective dims could prune; joining first means the
@@ -121,56 +121,37 @@ object Analytics {
   }
 
   /** H8-as-layout evidence: lineitem/orders bucketed on the orderkey
-    * join key, built ONCE per corpus dir and reused across
-    * invocations (the D9 build-once/serve-many shape — a bucketed
-    * layout is a storage decision, not per-query work; rebuild
-    * triggers only when the source row count changes or the session
-    * catalog is fresh; a layout from a previous process re-attaches
-    * without a rewrite). Cluster-width buckets both sides → the
-    * fact-fact join reads co-located buckets and elides its
-    * exchanges entirely. The bucket count MUST track the machine:
-    * a bucketed scan→join→agg runs as exactly nBuckets tasks (no
-    * AQE re-split), so 16 buckets on a 32-core box idled half the
-    * machine and measured SLOWER than the unbucketed plan at the
-    * 10× board (q3 1.62 s vs 1.51 s) — the layout's exchange win
-    * was erased by the parallelism cap. The count is baked into
-    * the table name so a layout written at one width can never
-    * silently re-attach under another (registerBucketed trusts the
-    * caller's count).
+    * join key — a served artifact ([[graft.catalog.ServedArtifact]])
+    * built once per corpus dir and width, signed over both source
+    * listings, re-attached from disk by a later session or process
+    * (the D9 build-once/serve-many shape — a bucketed layout is a
+    * storage decision, not per-query work). Cluster-width buckets
+    * both sides → the fact-fact join reads co-located buckets and
+    * elides its exchanges entirely. The bucket count MUST track the
+    * machine: a bucketed scan→join→agg runs as exactly nBuckets tasks
+    * (no AQE re-split), so 16 buckets on a 32-core box idled half the
+    * machine and measured SLOWER than the unbucketed plan at the 10×
+    * board (q3 1.62 s vs 1.51 s) — the layout's exchange win was
+    * erased by the parallelism cap. The count is baked into the
+    * artifact key and the table name so a layout written at one width
+    * can never silently re-attach under another (registerBucketed
+    * trusts the caller's count).
     */
-  // once-per-JVM freshness memo: the row-count comparison is itself
-  // two table scans, which would otherwise tax EVERY invocation of a
-  // bucketed query with the check (a serving path must not re-audit
-  // its index per query — same policy as D9's persisted IVF)
-  private val bucketedReady =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  // probe access (DriveQ100Probe A/Bs alternate bucketed shapes)
-  private[graft] def bucketedWarehouseProbe(spark: SparkSession,
-      dir: String): (graft.catalog.GraftDatabase, Int) =
-    bucketedWarehouse(spark, dir)
-
   private def bucketedWarehouse(spark: SparkSession,
       dir: String): (graft.catalog.GraftDatabase, Int) = {
     val n = spark.sparkContext.defaultParallelism
-    val key = s"${new org.apache.hadoop.fs.Path(dir).getName}_$n"
-    val db = graft.catalog.GraftDatabase(spark,
-      s"${CsvQueries.scratchRoot}/bucketed_$key/db")
-    if (!bucketedReady.contains(key)) {
-      Seq((s"lineitem_b$n", "lineitem", "l_orderkey"),
-        (s"orders_b$n", "orders", "o_orderkey")).foreach {
-        case (bt, src, bkey) =>
-          val srcDf = Tables(spark, dir, src)
-          // re-attach an on-disk layout from a previous process if
-          // present; rebuild only when absent or stale by row count
-          val fresh = db.registerBucketed(bt, bkey, n) &&
-            (try db.readBucketed(bt).count() == srcDf.count()
-            catch { case _: Exception => false })
-          if (!fresh) db.writeBucketed(srcDf, bt, bkey, n)
+    val layout = Seq((s"lineitem_b$n", "lineitem", "l_orderkey"),
+      (s"orders_b$n", "orders", "o_orderkey"))
+    val db = graft.catalog.ServedArtifact.db(spark, "bucketed", dir,
+      layout.map { case (_, src, _) => s"$dir/$src.parquet" },
+      keyExtra = s"b$n") { d =>
+      layout.foreach { case (bt, src, bkey) =>
+        d.writeBucketed(Tables(spark, dir, src), bt, bkey, n)
       }
-      bucketedReady.add(key)
-      ()
     }
+    // the bucket metadata lives in the session catalog: a sidecar
+    // fresh from another session or process re-attaches the layout
+    layout.foreach { case (bt, _, bkey) => db.registerBucketed(bt, bkey, n) }
     (db, n)
   }
 
@@ -251,7 +232,7 @@ object Analytics {
     *
     * Scale-adaptive SHJ gate (r14): past [[BigJoinRows]] lineitem
     * rows the SMJ sorts dominate and the filtered sides hash locally
-    * — measured at the 100× join scale (DriveQ100Probe, interleaved):
+    * — measured at the 100× join scale (interleaved A/B):
     * unhinted 7.17 s vs all-SHJ 4.09 s — while BELOW it the same
     * hints BLOCK AQE's dim broadcasts and LOSE up to 2.3× (10×:
     * 0.75 → 1.73 s). The regime signal is the exact parquet-footer
@@ -960,7 +941,7 @@ object Analytics {
     * [[graft.catalog.ServedArtifact]] protocol). */
   def eventsRollup(spark: SparkSession, dir: String): DataFrame =
     graft.catalog.ServedArtifact.db(spark, "evroll", dir,
-      s"$dir/events.parquet") { d =>
+      Seq(s"$dir/events.parquet")) { d =>
       buildEventsRollup(d, events(spark, dir))
     }.read("events_q15",
       "event_type string, q15_ms bigint, n_events bigint, " +

@@ -792,7 +792,7 @@ object Curation {
   def qualityGateServed(spark: SparkSession, dir: String,
       keepPct: Int = 20): DataFrame = {
     val db = graft.catalog.ServedArtifact.db(spark, "qgate", dir,
-      s"$dir/documents.parquet", extraSig = s"keepPct=$keepPct") { d =>
+      Seq(s"$dir/documents.parquet"), extraSig = s"keepPct=$keepPct") { d =>
       buildQualityGate(d, "qgate", docs(spark, dir), keepPct)
     }
     qualityGateFromModel(db, "qgate", docs(spark, dir)).drop("q")

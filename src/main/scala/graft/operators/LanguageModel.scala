@@ -350,10 +350,10 @@ object LanguageModel {
       expr(s"(pos - 1) div ${width}L").as("stage"))
   }
 
-  // Corpus-model memo (the TextIndex servedIndex pattern): the D9
-  // artifact is a storage decision, not per-query work — build once
-  // per corpus dir into a scratch warehouse; a model from a previous
-  // process re-attaches when its sidecar matches the corpus. r9: the
+  // Corpus-model memo: the D9 artifact is a storage decision, not
+  // per-query work — build once per corpus dir into a scratch
+  // warehouse; a model from a previous process re-attaches when its
+  // sidecar matches the corpus. r9: the
   // staleness signal is the corpus file LISTING (name/len/modtime —
   // an O(files) driver metadata call, no Spark job), not a row
   // count: a same-count content change now invalidates too, and the
@@ -367,7 +367,7 @@ object LanguageModel {
   private def servedCorpusModel(spark: SparkSession,
       dir: String): graft.catalog.GraftDatabase =
     graft.catalog.ServedArtifact.db(spark, "lmmodel", dir,
-      s"$dir/documents.parquet") { db =>
+      Seq(s"$dir/documents.parquet")) { db =>
       buildLmModel(db,
         Tables(spark, dir, "documents").select(col("doc_id"), col("text")),
         "corpus")
@@ -480,7 +480,7 @@ object LanguageModel {
   private def servedMlDb(spark: SparkSession, dir: String,
       targetSrcs: Seq[String]): graft.catalog.GraftDatabase =
     graft.catalog.ServedArtifact.db(spark, "mlmodel", dir,
-      s"$dir/documents.parquet",
+      Seq(s"$dir/documents.parquet"),
       keyExtra = targetSrcs.mkString(",")) { db =>
       buildMlModel(db,
         Tables(spark, dir, "documents")

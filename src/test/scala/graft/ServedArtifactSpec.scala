@@ -42,7 +42,7 @@ class ServedArtifactSpec extends AnyFunSuite with SparkTestBase {
     val old = System.currentTimeMillis() - 45L * 60 * 1000
     fs.setTimes(lock, old, old)
     val db = ServedArtifact.db(spark, "tstale", dir,
-      s"$dir/documents.parquet") { d =>
+      Seq(s"$dir/documents.parquet")) { d =>
       builds.incrementAndGet()
       d.write(spark.range(1).toDF("x"), "t",
         org.apache.spark.sql.SaveMode.Overwrite)
@@ -66,7 +66,7 @@ class ServedArtifactSpec extends AnyFunSuite with SparkTestBase {
     val done = new java.util.concurrent.CountDownLatch(1)
     val t = new Thread(() => {
       ServedArtifact.db(spark, "theld", dir,
-        s"$dir/documents.parquet") { d =>
+        Seq(s"$dir/documents.parquet")) { d =>
         builds.incrementAndGet()
         d.write(spark.range(1).toDF("x"), "t",
           org.apache.spark.sql.SaveMode.Overwrite)
@@ -117,7 +117,7 @@ class ServedArtifactSpec extends AnyFunSuite with SparkTestBase {
     val done = new java.util.concurrent.CountDownLatch(1)
     val t = new Thread(() => {
       ServedArtifact.db(spark, "tsight", dir,
-        s"$dir/documents.parquet") { d =>
+        Seq(s"$dir/documents.parquet")) { d =>
         builds.incrementAndGet()
         d.write(spark.range(1).toDF("x"), "t",
           org.apache.spark.sql.SaveMode.Overwrite)
@@ -154,12 +154,39 @@ class ServedArtifactSpec extends AnyFunSuite with SparkTestBase {
     // an interrupted earlier build: artifact_sig DIR exists, no files
     fs.mkdirs(new Path(dbPath, "artifact_sig"))
     val db = ServedArtifact.db(spark, "thalf", dir,
-      s"$dir/documents.parquet") { d =>
+      Seq(s"$dir/documents.parquet")) { d =>
       builds.incrementAndGet()
       d.write(spark.range(1).toDF("x"), "t",
         org.apache.spark.sql.SaveMode.Overwrite)
     }
     assert(builds.get() == 1, "uncommitted sidecar must trigger a rebuild")
     assert(db.read("t").count() == 1)
+  }
+
+  test("rebuild builds unconditionally; an interrupted rebuild leaves the artifact stale") {
+    val dir = corpusDir("served_rebuild")
+    val builds = new AtomicInteger(0)
+    def serve(entry: String) = {
+      val build = (d: graft.catalog.GraftDatabase) => {
+        builds.incrementAndGet()
+        d.write(spark.range(1).toDF("x"), "t",
+          org.apache.spark.sql.SaveMode.Overwrite)
+        if (entry == "failing") throw new RuntimeException("build died")
+      }
+      val src = Seq(s"$dir/documents.parquet")
+      if (entry == "db") ServedArtifact.db(spark, "trebuild", dir, src)(build)
+      else ServedArtifact.rebuild(spark, "trebuild", dir, src)(build)
+    }
+    serve("db")
+    serve("db")
+    assert(builds.get() == 1, "a fresh artifact is served, not rebuilt")
+    serve("rebuild")
+    assert(builds.get() == 2, "rebuild must not consult freshness")
+    serve("db")
+    assert(builds.get() == 2, "db serves what rebuild built")
+    intercept[RuntimeException](serve("failing"))
+    serve("db")
+    assert(builds.get() == 4,
+      "a rebuild that died mid-build must not leave its artifact marked fresh")
   }
 }

@@ -27,7 +27,7 @@ for both engines alike; that is the point of a like-for-like probe.
 Timestamps keep their original parquet physical type (events is
 TIMESTAMP(NANOS)) via pyarrow with store-schema v2.6.
 """
-import sys, json, os, time, glob
+import sys, json, os, time, glob, hashlib
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pyarrow.compute as pc
@@ -211,19 +211,34 @@ SCALE10 += sorted(ASYMMETRIC.keys() - set(SCALE10))
 # bucket count mirrors TextIndex.bucketsFor (r15 OPT: corpus-size-
 # derived, ~32 MB/bucket, floor 4 cap 4096) so the twin reads the
 # same artifact the spark bench pass wrote
-def _n_buckets():
+def _n_buckets(corpus_dir):
     # recursive walk, matching fs.getContentSummary: a partitioned /
     # nested corpus dir would otherwise count inode sizes and disagree
     # with the Spark side near a 32 MB boundary (r15 ADVICE)
-    p = f"{OUT}/documents.parquet"
+    p = f"{corpus_dir}/documents.parquet"
     if os.path.isfile(p):
         bytes_ = os.path.getsize(p)
     else:
         bytes_ = sum(os.path.getsize(os.path.join(root, f))
                      for root, _, files in os.walk(p) for f in files)
     return int(min(4096, max(4, bytes_ // (32 << 20) + 1)))
-_NB = _n_buckets() if os.path.exists(f"{OUT}/documents.parquet") else 4
-_IDX = f"/root/repo/target/graft_scratch/textindex_scale10_{_NB}/db"
+
+# CsvQueries.scratchRoot: target/graft_scratch under the repo root
+SCRATCH_ROOT = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "target", "graft_scratch")
+
+def served_db(prefix, corpus_dir, key_extra):
+    """ServedArtifact's scratch db for (prefix, corpus dir, keyExtra):
+    keyOf = basename + "_" + the first 6 bytes of the hex MD5 of
+    "<path>|<keyExtra>" (the path as Hadoop normalizes it)."""
+    path = os.path.normpath(corpus_dir)
+    digest = hashlib.md5(f"{path}|{key_extra}".encode("utf-8")).hexdigest()
+    return os.path.join(SCRATCH_ROOT,
+                        f"{prefix}_{os.path.basename(path)}_{digest[:12]}",
+                        "db")
+
+_NB = _n_buckets(OUT) if os.path.exists(f"{OUT}/documents.parquet") else 4
+_IDX = served_db("textindex", OUT, f"b{_NB}")
 _PB = f"postings_b{_NB}"
 SERVED_TWINS = {
     "search_hybrid_rrf_served": ("search_hybrid_rrf", f"""
