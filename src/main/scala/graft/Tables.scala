@@ -12,68 +12,8 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred-schema memo keyed on (session, path, file-listing
-    * signature) — every schema-less `spark.read.parquet` launches a
-    * footer-inference JOB (visible as the leading ~30 ms single-stage
-    * job on every wave ledger; on a many-file table at cluster scale
-    * it reads every footer), and a bench/verify run re-pays it per
-    * query. Pinning the schema is what a production catalog does; the
-    * listing signature ([[graft.sources.ParquetStats.listingSig]] —
-    * the served-model staleness contract) keeps the memo exactly as
-    * fresh as the data, so a rewritten path re-infers. The SESSION in
-    * the key matters: parquet schema inference is conf-dependent
-    * (`spark.sql.legacy.parquet.nanosAsLong`, set by [[eventsWithMs]]
-    * before NANOS-encoded reads), and a JVM-global memo would leak
-    * one session's conf-shaped schema into another — Bench/Verify run
-    * one session, so they keep the full benefit. The memo is held in
-    * a WEAK per-session map (ADVICE r12): the old string key used
-    * `identityHashCode(spark)`, which is not unique — after a session
-    * is GC'd (or by coincidence between two live sessions) another
-    * session could collide onto the same key and be served a schema
-    * inferred under the OTHER session's conf, the exact nanosAsLong
-    * leak the session scoping exists to prevent. Identity-keyed weak
-    * references are collision-free among live sessions by
-    * construction, and a dead session's entries become collectable
-    * instead of accumulating until a size-cap clear. Driver-side
-    * listing only, no job.
-    */
-  private val schemaMemos = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[
-        String, org.apache.spark.sql.types.StructType]]())
-
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    parquetMemoized(spark, s"$sfDir/$name.parquet")
-
-  /** Schema-memoized parquet read of any path. Used for the static
-    * corpus tables, where the memo always hits. NOT used by
-    * [[graft.catalog.GraftDatabase.read]]: database tables are mostly
-    * fresh paths, so the memo missed and the extra listing made reads
-    * slower (measured negative in r16 and reverted; see the note on
-    * that method). Parquet writes always create fresh part-file
-    * names, so any rewrite changes the listing signature and
-    * re-infers.
-    */
-  private[graft] def parquetMemoized(spark: SparkSession,
-      path: String): DataFrame = {
-    graft.sources.ParquetStats.listingSig(spark, path) match {
-      case None => spark.read.parquet(path) // unreadable: fail as before
-      case Some(sig) =>
-        val memo = schemaMemos.synchronized {
-          var m = schemaMemos.get(spark)
-          if (m == null) {
-            m = new java.util.concurrent.ConcurrentHashMap[
-              String, org.apache.spark.sql.types.StructType]()
-            schemaMemos.put(spark, m)
-          }
-          m
-        }
-        if (memo.size > 4096) memo.clear() // scratch churn cap
-        val sch = memo.computeIfAbsent(s"$path#$sig",
-          _ => spark.read.parquet(path).schema)
-        spark.read.schema(sch).parquet(path)
-    }
-  }
+    graft.sources.ParquetStats.read(spark, s"$sfDir/$name.parquet")
 
   /** `events` with an exact epoch-ms `ms` column, adaptive to how the
     * generator stored `ts`. Three physical encodings have shipped:

@@ -80,24 +80,9 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
       mode: SaveMode = SaveMode.ErrorIfExists): Unit =
     df.write.mode(mode).parquet(tablePath(table))
 
-  // NOT schema-memoized — measured NEGATIVE (r16, two reversed-order
-  // A/B reps of the upload/serve suite: 10.75 vs 10.12 and 10.60 vs
-  // 8.54 s): database tables are mostly FRESH scratch paths (every
-  // upload row rewrites its db; the progress table changes under the
-  // poller), so the Tables.parquetMemoized listing-signature memo
-  // never hits and each read pays an extra listing + a second
-  // DataFrame construction on top of the same inference job. The
-  // memo stays on the static corpus tables (graft.Tables), where it
-  // always hits.
-  def read(table: String): DataFrame = spark.read.parquet(tablePath(table))
-
-  /** Read with a caller-supplied schema (DDL string): parquet schema
-    * inference otherwise launches a footer-reading Spark JOB at
-    * DataFrame-construction time, which a zero-pre-action serving
-    * path (TextIndex.searchRanked) cannot afford per query.
-    */
-  def read(table: String, schemaDdl: String): DataFrame =
-    spark.read.schema(schemaDdl).parquet(tablePath(table))
+  /** Construction reads one footer on the driver and launches no Spark job. */
+  def read(table: String): DataFrame =
+    graft.sources.ParquetStats.read(spark, tablePath(table))
 
   /** User tables only — internal tables are underscore-prefixed like
     * the reference's `_csv_progress_`.
@@ -245,9 +230,9 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
       if (!fs.exists(new Path(tablePath(table))))
         throw new IllegalStateException(
           s"no bucketed layout at ${tablePath(table)}")
-      val schemaDdl = spark.read.parquet(tablePath(table)).schema.toDDL
+      val columns = read(table).schema.toDDL
       spark.sql(
-        s"""CREATE TABLE $ident ($schemaDdl) USING PARQUET
+        s"""CREATE TABLE $ident ($columns) USING PARQUET
            |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
            |INTO $nBuckets BUCKETS
            |LOCATION '${tablePath(table)}'""".stripMargin)
@@ -742,8 +727,8 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
     * Only the tables the query NAMES are registered: a table whose
     * name occurs, case-insensitively, as an identifier token of the
     * query text (split on `[^A-Za-z0-9_]+`). Each registration is a
-    * parquet read whose schema inference launches a Spark job, so
-    * registering every table made one query cost one job per table.
+    * [[read]] (a listing and a footer on the driver), so registering
+    * every table made one query pay one read per table.
     * The token set is a superset of the relations the query can name
     * (CTEs, joins, subqueries, string literals), so over-matching
     * costs an extra read and never drops a table the query uses.
@@ -916,7 +901,7 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
 
   /** Snapshot read of a specific version (time travel). */
   def readVersioned(table: String, version: Int): DataFrame =
-    spark.read.parquet(
+    graft.sources.ParquetStats.read(spark,
       new Path(versionsDir(table), vName(version)).toString)
 
   /** (version, n_files, bytes, published_ms) per published version,
@@ -954,9 +939,9 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
 
 object GraftDatabase {
   /** Lower-cased names [[GraftDatabase.sql]] registered as temp views,
-    * per session (temp views are session-scoped) — held weakly, like
-    * [[graft.Tables]]' schema memos, so a dead session's set is
-    * collectable. A name leaves the set when graft drops its view.
+    * per session (temp views are session-scoped) — held weakly, so a
+    * dead session's set is collectable. A name leaves the set when
+    * graft drops its view.
     */
   private val sqlViews = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, java.util.Set[String]]())

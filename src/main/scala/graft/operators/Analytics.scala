@@ -943,9 +943,7 @@ object Analytics {
     graft.catalog.ServedArtifact.db(spark, "evroll", dir,
       Seq(s"$dir/events.parquet")) { d =>
       buildEventsRollup(d, events(spark, dir))
-    }.read("events_q15",
-      "event_type string, q15_ms bigint, n_events bigint, " +
-        "sum_value decimal(38,6)")
+    }.read("events_q15")
 
   /** B31 served from the rollup: each window is the sum of its 4
     * quarter buckets — same analytic hop enumeration, input 5–6

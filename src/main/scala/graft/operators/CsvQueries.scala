@@ -20,10 +20,12 @@ import graft.sources.CsvUploader
   */
 object CsvQueries {
 
-  /** Scratch space inside the repo (driver runs from anywhere).
-    * Shared across operator modules so the layout lives in one place.
+  /** Scratch space under the working directory's `target/`, so two
+    * checkouts never share served artifacts. Shared across operator
+    * modules so the layout lives in one place.
     */
-  private[graft] val scratchRoot = "/root/repo/target/graft_scratch"
+  private[graft] val scratchRoot =
+    new java.io.File("target/graft_scratch").getCanonicalPath
 
   private[operators] def scratch(qname: String, sfDir: String): String = {
     val key = new org.apache.hadoop.fs.Path(sfDir).getName

@@ -763,11 +763,7 @@ object Curation {
     */
   def qualityGateFromModel(db: graft.catalog.GraftDatabase, name: String,
       docs: DataFrame, passthrough: Seq[String] = Nil): DataFrame = {
-    // DDL read: schema inference would launch a footer job at
-    // DataFrame construction on this zero-pre-action serving path
-    val thr = db.read(s"${name}_thresholds",
-        "source string, negq_star double, doc_star bigint, " +
-          "n_kept bigint, n_docs bigint, keep_pct int")
+    val thr = db.read(s"${name}_thresholds")
       .withColumnRenamed("source", "__src")
     scoredDocs(docs, passthrough).drop("n_tokens")
       .join(broadcast(thr), col("source") <=> col("__src"))

@@ -207,36 +207,18 @@ object TextIndex {
     require(terms.nonEmpty, "empty query")
     val t = terms.distinct
     val idx = db.readBucketed(table)
-    // fixed schema: skips the parquet footer-inference job spark.read
-    // would launch at plan time (the last driver pre-action here)
-    val corpus = db.read(s"${table}_corpus",
-        "batch_id BIGINT, n_docs BIGINT, total_len BIGINT")
+    val corpus = db.read(s"${table}_corpus")
       .agg(sum(col("n_docs")).cast("double").as("__n"),
         sum(col("total_len")).cast("double").as("__l"))
     // One batch-df row per (batch, term), so a global conditional sum
     // over the pruned scan pivots the ≤|terms| totals into one row; a
-    // term absent from the corpus sums to NULL → df 0.0, as before.
-    // Indexes written before the `_df` artifact existed (r10) serve
-    // via the pre-r10 on-the-fly aggregation over the pruned postings
-    // scan — one row per (term, doc_id), so COUNT is df — instead of
-    // failing on the missing path; the existence probe is one driver
-    // FS metadata call, no job.
-    val dfRow =
-      if (db.tableExists(s"${table}_df")) {
-        val dfAggs = t.zipWithIndex.map { case (term, i) =>
-          sum(when(col("term") === term, col("df")))
-            .cast("double").as(s"__df$i")
-        }
-        db.readBucketed(s"${table}_df")
-          .filter(col("term").isin(t: _*))
-          .agg(dfAggs.head, dfAggs.tail: _*)
-      } else {
-        val dfAggs = t.zipWithIndex.map { case (term, i) =>
-          sum(when(col("term") === term, lit(1L)))
-            .cast("double").as(s"__df$i")
-        }
-        idx.filter(col("term").isin(t: _*)).agg(dfAggs.head, dfAggs.tail: _*)
-      }
+    // term absent from the corpus sums to NULL → df 0.0.
+    val dfAggs = t.zipWithIndex.map { case (term, i) =>
+      sum(when(col("term") === term, col("df"))).cast("double").as(s"__df$i")
+    }
+    val dfRow = db.readBucketed(s"${table}_df")
+      .filter(col("term").isin(t: _*))
+      .agg(dfAggs.head, dfAggs.tail: _*)
     val scalars = broadcast(corpus.crossJoin(dfRow))
     val parts = t.zipWithIndex.map { case (term, i) =>
       idx.filter(col("term") === term)

@@ -507,11 +507,8 @@ object TextQueries {
     * long-lived sessions don't strand corpus-scale cache entries.
     */
   def fluency(spark: SparkSession, dir: String,
-      persist: Boolean = true,
       maxBroadcastVocab: Int = sys.env.getOrElse(
         "SPARK_GRAFT_FLUENCY_VOCAB_CAP", "262144").toInt): DataFrame = {
-    // persist=false exists for graft.tools.DriveFluencyProbe's
-    // with/without comparison — production callers keep the default;
     // maxBroadcastVocab=0 forces the join path (the equality spec's
     // lever, and the knob for clusters whose executors are tighter
     // on memory than the default ~tens-of-MB vocabulary bound)
@@ -554,10 +551,8 @@ object TextQueries {
         .select(col("doc_id"), col("s.fluency").as("fluency"),
           col("s.n_bigrams").as("n_bigrams"))
     }
-    val t = if (persist)
-      graft.CacheHygiene.unpersistAfterUse(
-        t0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    else t0
+    val t = graft.CacheHygiene.unpersistAfterUse(
+      t0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // the two filters consume the same aggregated exchange
     // (ReuseExchange dedups it)
     val cnt = cntOf(t)

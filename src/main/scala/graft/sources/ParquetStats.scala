@@ -1,10 +1,13 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 import scala.language.existentials // parquet's Statistics[_ <: Comparable[_]]
@@ -45,14 +48,14 @@ object ParquetStats {
     *
     * Deliberate staleness caveat (ADVICE r12): a file rewritten
     * in-place to the IDENTICAL byte length within one mtime tick
-    * yields the same signature, so consumers ([[graft.Tables]]'s
-    * schema memo, [[longColumnRange]]'s bounds memo, the served-model
-    * sidecars) would serve the pre-rewrite metadata. This is the
-    * listing-only contract's price and it is kept on purpose: a
-    * content-derived component would put a footer read on EVERY
-    * table read's driver path — the exact per-read cost the memos
-    * exist to remove — to close a window that real table commits
-    * (new part files, different sizes, atomic renames) never hit.
+    * yields the same signature, so consumers ([[longColumnRange]]'s
+    * bounds memo, the served-model sidecars) would serve the
+    * pre-rewrite metadata. This is the listing-only contract's price
+    * and it is kept on purpose: a content-derived component would put
+    * a read of every file on every memo lookup — the exact per-call
+    * cost the memos exist to remove — to close a window that real
+    * table commits (new part files, different sizes, atomic renames)
+    * never hit.
     * Writers that rewrite in place same-length within a tick (test
     * scratch dirs at worst) must touch the file or write a fresh
     * name to invalidate.
@@ -70,6 +73,61 @@ object ParquetStats {
         .sorted.mkString("|"))
     } catch { case NonFatal(_) => None }
   }
+
+  /** Parquet read of `path` (a file, or a table directory with or
+    * without partition subdirectories) whose construction launches no
+    * Spark job. A schema-less `spark.read.parquet` runs a footer-
+    * inference job; without schema merging that job reads ONE footer,
+    * of the first data file by full path (`ParquetUtils.splitFiles`'
+    * order). This reads that footer on the driver and converts it with
+    * Spark's own `readSchemaFromFooter`, under a converter built from
+    * the session's conf at call time, so `nanosAsLong` and the other
+    * reader flags apply exactly as in the job. Partition columns are
+    * still discovered from the directory names. Falls back to the
+    * plain read when schema merging is on, there is no data file, or
+    * the footer is unreadable, so every error stays Spark's own.
+    * Spark would prefer a `_metadata` summary file; graft writes none.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    val sqlConf = spark.sessionState.conf
+    if (sqlConf.isParquetSchemaMergingEnabled) return None
+    try {
+      val conf = spark.sessionState.newHadoopConf()
+      val root = new Path(path)
+      val fs = root.getFileSystem(conf)
+      firstDataFile(fs, fs.getFileStatus(root)).map { f =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(sqlConf))
+      }
+    } catch { case NonFatal(_) => None }
+  }
+
+  /** The first leaf under `st` by full path, skipping the names Spark's
+    * file index hides. Depth-first over sorted listings, a directory
+    * sorting as `name/`, visits leaves in full-path order without a
+    * recursive listing of the whole table.
+    */
+  private def firstDataFile(fs: FileSystem,
+      st: FileStatus): Option[FileStatus] =
+    if (!st.isDirectory) Some(st)
+    else fs.listStatus(st.getPath)
+      .filterNot { c =>
+        val n = c.getPath.getName
+        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")
+      }
+      .sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
+      .iterator.flatMap(firstDataFile(fs, _)).nextOption()
 
   /** Shared footer walker: fold `f` over every column chunk of every
     * parquet file under `dir` (recursive listing, `_`/`.` entries

@@ -189,4 +189,11 @@ class ServedArtifactSpec extends AnyFunSuite with SparkTestBase {
     assert(builds.get() == 4,
       "a rebuild that died mid-build must not leave its artifact marked fresh")
   }
+
+  test("served artifacts and test corpora live under the working directory") {
+    val target = new java.io.File("target").getCanonicalPath + "/"
+    Seq(graft.operators.CsvQueries.scratchRoot, scratch("scratch_root_probe"))
+      .foreach(r => assert(new java.io.File(r).getCanonicalPath.startsWith(target),
+        s"$r is outside $target"))
+  }
 }

@@ -31,8 +31,13 @@ trait SparkTestBase {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Test scratch under the working directory's `target/`, so two
+    * checkouts' suites never share corpora. */
+  val scratchRoot: String =
+    new java.io.File("target/test_scratch").getCanonicalPath
+
   def scratch(name: String): String = {
-    val dir = s"/root/repo/target/test_scratch/$name"
+    val dir = s"$scratchRoot/$name"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete(); ()

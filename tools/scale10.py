@@ -223,7 +223,8 @@ def _n_buckets(corpus_dir):
                      for root, _, files in os.walk(p) for f in files)
     return int(min(4096, max(4, bytes_ // (32 << 20) + 1)))
 
-# CsvQueries.scratchRoot: target/graft_scratch under the repo root
+# CsvQueries.scratchRoot: target/graft_scratch under the working directory
+# of the Spark side (the repo root, where sbt runs)
 SCRATCH_ROOT = os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "target", "graft_scratch")
 

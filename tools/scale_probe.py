@@ -14,8 +14,8 @@ parquet file is one split, so Spark runs the whole scan+explode
 stage on one core (and DuckDB's row-group parallelism equally
 starves — its own numbers improved ~3x when sharded). A 100 TB
 corpus is always many files; probing with one file measures the
-wrong regime. graft.tools.DriveFluencyProbe localizes per-stage cost
-when a query stops scaling.
+wrong regime. When a query stops scaling, graft.tools.DriveJobProfile
+breaks its time down per Spark job and stage.
 """
 import sys, json, time, glob, os
 import duckdb
