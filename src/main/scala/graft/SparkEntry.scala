@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory
+/** Driver contract — see SURVEY.md (repo root) §2 for the inventory
   * behind each query key, and §6 for how they're verified.
   */
 object SparkEntry {

@@ -54,12 +54,15 @@ object TopK {
     override def outputEncoder: Encoder[Seq[T]] = outEnc
   }
 
+  /** [[topk]]'s total order: score desc, id asc. */
+  val bestFirst: Ordering[ScoredId] =
+    Ordering.by((s: ScoredId) => (-s.score, s.id))
+
   /** Column form: `topk(k)(scoreCol, idCol)` → array<struct<score,id>>
     * ordered best-first.
     */
   def topk(k: Int)(score: Column, id: Column): Column =
-    udaf(new BoundedTopK[ScoredId](k,
-        Ordering.by((s: ScoredId) => (-s.score, s.id)),
+    udaf(new BoundedTopK[ScoredId](k, bestFirst,
         ExpressionEncoder[List[ScoredId]](),
         ExpressionEncoder[Seq[ScoredId]]()),
       ExpressionEncoder[ScoredId]())

@@ -1,9 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.sources.ParquetStats.readRows
 
 /** E11/E12: persisted inverted text index + keyword search
   * (SURVEY.md §2.E) — the corpus-exploration surface a training-data
@@ -52,54 +59,43 @@ object TextIndex {
     val tok = tokenized(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    val (postings, lens0, _) = batchArtifacts(tok, batchId = -1L)
-    // r16 OPT (guide §1.4/§2.4): the 1-row `_corpus` stats are an
-    // OBSERVATION on the `_len` write pass — the separate
-    // lens.agg(count, sum) action over the persisted tokenize (one
-    // more job + driver gap on a 12-job build) is folded into the
-    // write that streams the same rows anyway. Same values by
-    // construction: n_docs counts the lens rows, total_len sums dl.
-    val obs = new org.apache.spark.sql.Observation(s"${table}_corpus_stats")
-    val lens = lens0.observe(obs, count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("total_len"))
+    val (postings, lens, stats) = batchArtifacts(tok, batchId = -1L)
     // postings first: its tokenize materializes the shared cache.
     db.writeBucketed(postings, table, "term", nBuckets)
-    // r16 OPT (guide §2.6 overlap independent jobs): `_len` (reads
-    // the persisted tokenize) and `_df` (an exchange-free agg over
-    // the JUST-WRITTEN postings layout — column-pruned to `term`,
-    // term bucketing satisfies the groupBy's clustering, so never a
-    // second tokenize pass; batch-keyed like `_corpus`: base build =
-    // batch −1, G10 appends publish partials, serving SUMS —
-    // replay-safe, no read-modify-write) are independent of each
-    // other. Submitting both from a 2-thread pool back-fills the
-    // cluster through each write's commit/DDL tail instead of paying
-    // the two tails sequentially. Failures propagate: Await rethrows.
+    // r16 OPT (guide §2.6 overlap independent jobs): `_len` and the
+    // 1-row `_corpus` stats (both over the persisted tokenize) and
+    // `_df` (an exchange-free agg over the JUST-WRITTEN postings
+    // layout — column-pruned to `term`, term bucketing satisfies the
+    // groupBy's clustering, so never a second tokenize pass;
+    // batch-keyed like `_corpus`: base build = batch −1, G10 appends
+    // publish partials, serving SUMS — replay-safe, no
+    // read-modify-write) are independent of each other. Submitting
+    // them to a 2-thread pool back-fills the cluster through each
+    // write's commit/DDL tail instead of paying the tails
+    // sequentially. The stats are their own aggregate, not a
+    // `Dataset.observe` on the `_len` write: an Observation keeps a
+    // query listener on the session, and that listener logged an
+    // ERROR for every later query of the session that failed analysis.
     val dfs = db.readBucketed(table).groupBy(col("term"))
       .agg(count(lit(1)).as("df"))
       .select(lit(-1L).as("batch_id"), col("term"), col("df"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val fLen = scala.concurrent.Future(
-        db.writeBucketed(lens, s"${table}_len", "doc_id", nBuckets))
-      val fDf = scala.concurrent.Future(
-        db.writeBucketed(dfs, s"${table}_df", "term", nBuckets))
-      scala.concurrent.Await.result(fLen,
-        scala.concurrent.duration.Duration.Inf)
-      scala.concurrent.Await.result(fDf,
-        scala.concurrent.duration.Duration.Inf)
+    val outcomes = try {
+      Seq(
+        scala.concurrent.Future(
+          db.writeBucketed(lens, s"${table}_len", "doc_id", nBuckets)),
+        scala.concurrent.Future(
+          db.writeBucketed(dfs, s"${table}_df", "term", nBuckets)),
+        scala.concurrent.Future(db.write(stats, s"${table}_corpus",
+          org.apache.spark.sql.SaveMode.Overwrite))
+      ).map(f => scala.concurrent.Await.ready(f,
+        scala.concurrent.duration.Duration.Inf).value.get)
     } finally pool.shutdown()
-    // batch-keyed stats row (base build = batch −1), from the
-    // observation riding the `_len` write: same LocalTableScan write
-    // the old 1-row stats frame planned, minus its corpus-scale agg.
-    val st = obs.get
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val stats = Seq((-1L, st("n_docs").asInstanceOf[Long],
-        Option(st("total_len")).map(_.asInstanceOf[Long])))
-      .toDF("batch_id", "n_docs", "total_len")
-    db.write(stats, s"${table}_corpus", org.apache.spark.sql.SaveMode.Overwrite)
+    // every write has ended before the tokenize is released; only
+    // then does the first failure surface
+    outcomes.collectFirst { case scala.util.Failure(e) => throw e }
     } finally tok.unpersist(blocking = false)
   }
 
@@ -183,29 +179,61 @@ object TextIndex {
     * score doubles are bit-identical across engines — the same
     * portability discipline as E10's integer-sums-one-division; ln
     * is monotone, so per-term contributions keep BM25's ordering
-    * behavior).
+    * behavior). Rows come in (score desc, doc_id) order.
     *
+    * Two tiers answer, bit-equal in rows and schema (spec-pinned):
+    *
+    * RESIDENT, while the index's four table dirs (postings, `_len`,
+    * `_df`, `_corpus`) hold at most [[graft.catalog.ResidentArtifact.budget]]
+    * on-disk bytes (1/64 of the driver heap cap; the gate sums the
+    * listing, no job). The first request reads the tables on the
+    * driver into primitive arrays — term → (doc_id, tf) sorted by
+    * doc_id plus the term's df summed over batches, doc_id → dl,
+    * and N and total_len — and every request scores in plain Scala
+    * with the pinned parenthesization below, returning a local
+    * DataFrame: constructing and collecting it launch no Spark job.
+    * Each request re-lists the dirs: unchanged files serve the copy,
+    * files only ADDED (a `StreamingTextIndex.appendBatch`; its
+    * per-batch `_df`/`_corpus` partials sum exactly) are read and
+    * folded in alone, and any other change (a rebuild, a replayed
+    * batch) reloads. A copy costs ~4.5× the index's on-disk bytes of
+    * heap — 12 bytes per posting and 16 per document, plus a map entry
+    * and two arrays per distinct term (2.3 MB for a 2k-document index,
+    * 0.5 MB on disk), even though positions are never read.
+    *
+    * SPARK, above the budget or when the copy cannot answer exactly
+    * (a null N/total_len, a duplicate doc_id, a non-integral doc_id).
     * Serving cost ∝ the query terms' postings: each term is a
     * bucket-pruned scan (doc_id, tf); candidates assemble with a
     * full-outer join chain (absent term → tf 0, contribution 0);
     * the dl normalization joins `<table>_len` on doc_id — the join
     * input is already hash-partitioned by doc_id from the candidate
     * join, and the len table's doc_id bucketing spares ITS exchange.
-    *
     * N/total_len/df ride IN the plan as one broadcast 1-row frame
-    * (r9 VERDICT #3): the previous shape collect()ed them first —
-    * two sequential driver jobs before the real query even planned,
-    * which dominated serve latency (and D13 pays it per hybrid
-    * query). df comes from the build-time `_df` artifact (a
-    * bucket-pruned O(|terms|)-row scan), so the whole serve is ONE
-    * job. The values are identical exact longs cast to double and
-    * the score parenthesization is unchanged, so bit equality with
-    * the oracle is unaffected. No corpus scan anywhere.
+    * (r9 VERDICT #3), so constructing the frame launches no job.
+    * The values are identical exact longs cast to double on both
+    * tiers, so bit equality with the oracle holds on both.
     */
   def searchRanked(db: graft.catalog.GraftDatabase, table: String,
-      terms: Seq[String], k: Int): DataFrame = {
+      terms: Seq[String], k: Int): DataFrame =
+    searchRanked(db, table, terms, k, graft.catalog.ResidentArtifact.budget)
+
+  /** [[searchRanked]] with the resident tier's admission budget given
+    * — 0 forces the Spark tier. */
+  private[graft] def searchRanked(db: graft.catalog.GraftDatabase,
+      table: String, terms: Seq[String], k: Int,
+      residentBudget: Long): DataFrame = {
     require(terms.nonEmpty, "empty query")
     val t = terms.distinct
+    graft.catalog.ResidentArtifact.get(db.spark, "bm25",
+        Seq(table, s"${table}_len", s"${table}_df", s"${table}_corpus")
+          .map(db.tablePath), residentBudget)(new Bm25Loader(db, table))
+      .flatMap(_.search(db.spark, t, k))
+      .getOrElse(rankedPlan(db, table, t, k))
+  }
+
+  private def rankedPlan(db: graft.catalog.GraftDatabase, table: String,
+      t: Seq[String], k: Int): DataFrame = {
     val idx = db.readBucketed(table)
     val corpus = db.read(s"${table}_corpus")
       .agg(sum(col("n_docs")).cast("double").as("__n"),
@@ -230,8 +258,8 @@ object TextIndex {
         .select(col("doc_id"), col("dl").cast("double").as("__dl")),
       Seq("doc_id"))
       .crossJoin(scalars)
-    // Pinned operation order — the oracle SQL parenthesizes
-    // identically; any reassociation breaks bit equality.
+    // Pinned operation order — the oracle SQL and Bm25.search
+    // parenthesize identically; any reassociation breaks bit equality.
     val bNorm = lit(1.2) * (lit(0.25) + ((lit(0.75) * col("__dl")) * col("__n")) / col("__l"))
     val score = t.zipWithIndex.map { case (term, i) =>
       val df = coalesce(col(s"__df$i"), lit(0.0))
@@ -242,6 +270,180 @@ object TextIndex {
     withLen.select(col("doc_id"), score.as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
+  }
+
+  /** One term of the resident index: its postings sorted by doc_id
+    * and its df summed over batches (0 when no `_df` row names it). */
+  private final case class Bm25Term(docs: Array[Long], tfs: Array[Int],
+      df: Long)
+
+  /** The resident copy of one BM25 index. `n`/`totalLen` are None
+    * when no `_corpus` row carries a value (SQL's SUM of no values). */
+  private final class Bm25(docIdType: DataType,
+      terms: Map[String, Bm25Term], lenIds: Array[Long],
+      lenDl: Array[Long], n: Option[Long], totalLen: Option[Long]) {
+
+    /** Top-k rows of [[rankedPlan]] for the distinct terms `t`, or None
+      * when only the plan can answer (its NULL arithmetic). */
+    def search(spark: SparkSession, t: Seq[String],
+        k: Int): Option[DataFrame] = {
+      if (k < 0 || n.isEmpty || totalLen.isEmpty || totalLen.get == 0L)
+        return None
+      val nD = n.get.toDouble
+      val lD = totalLen.get.toDouble
+      val hits = t.map(terms.get)
+      val dfs = hits.map(_.fold(0L)(_.df).toDouble)
+      // doc_id → tf per query term; an absent term stays 0.0, the
+      // plan's coalesce(tf, 0.0)
+      val tfs = new mutable.LongMap[Array[Double]]()
+      hits.zipWithIndex.foreach {
+        case (Some(e), i) =>
+          var j = 0
+          while (j < e.docs.length) {
+            tfs.getOrElseUpdate(e.docs(j), new Array[Double](t.length))(i) =
+              e.tfs(j).toDouble
+            j += 1
+          }
+        case _ =>
+      }
+      val scored = tfs.iterator.flatMap { case (doc, tf) =>
+        val at = java.util.Arrays.binarySearch(lenIds, doc)
+        if (at < 0) None // the plan's inner join with `_len`
+        else {
+          val dl = lenDl(at).toDouble
+          val bNorm = 1.2 * (0.25 + ((0.75 * dl) * nD) / lD)
+          var score = 0.0
+          var i = 0
+          while (i < t.length) {
+            val idf = ((nD - dfs(i)) + 0.5) / (dfs(i) + 0.5)
+            val c = (idf * (tf(i) * 2.2)) / (tf(i) + bNorm)
+            score = if (i == 0) c else score + c
+            i += 1
+          }
+          Some((doc, score))
+        }
+      }.toArray
+      // Spark's ORDER BY score DESC, doc_id: SQL double order (-0.0 =
+      // 0.0, NaN largest), ties by id
+      val top = scored.sortWith { case ((d1, s1), (d2, s2)) =>
+        val c = if (s1 == s2) 0 else java.lang.Double.compare(s1, s2)
+        c > 0 || (c == 0 && d1 < d2)
+      }.take(k)
+      val rows = top.map { case (doc, score) =>
+        Row(docIdOut(doc), score)
+      }.toSeq
+      Some(spark.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("doc_id", docIdType), StructField("score", DoubleType)))))
+    }
+
+    private def docIdOut(doc: Long): Any = docIdType match {
+      case LongType    => doc
+      case IntegerType => doc.toInt
+      case ShortType   => doc.toShort
+      case ByteType    => doc.toByte
+    }
+
+    /** This copy plus the rows of the given data files (postings,
+      * `_len`, `_df`, `_corpus`); a (term, doc_id) or doc_id already
+      * present throws — the plan's joins would multiply it. */
+    def plus(conf: Configuration, files: Seq[Seq[Path]]): Bm25 = {
+      val Seq(postingFiles, lenFiles, dfFiles, corpusFiles) = files
+      val post = mutable.HashMap[String,
+        (mutable.ArrayBuilder.ofLong, mutable.ArrayBuilder.ofInt)]()
+      postingFiles.foreach(f => readRows(conf, f, Seq("term", "doc_id", "tf")) {
+        g =>
+          if (has(g, "term") && has(g, "doc_id")) {
+            val (ds, ts) = post.getOrElseUpdate(g.getString("term", 0),
+              (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofInt))
+            ds += long(g, "doc_id")
+            ts += math.toIntExact(long(g, "tf"))
+          }
+      })
+      val dfAdd = mutable.HashMap[String, Long]()
+      dfFiles.foreach(f => readRows(conf, f, Seq("term", "df")) { g =>
+        if (has(g, "term") && has(g, "df")) {
+          val term = g.getString("term", 0)
+          dfAdd(term) = dfAdd.getOrElse(term, 0L) + long(g, "df")
+        }
+      })
+      val ids = new mutable.ArrayBuilder.ofLong
+      val dls = new mutable.ArrayBuilder.ofLong
+      lenFiles.foreach(f => readRows(conf, f, Seq("doc_id", "dl")) { g =>
+        if (has(g, "doc_id")) { ids += long(g, "doc_id"); dls += long(g, "dl") }
+      })
+      var (nOut, lOut) = (n, totalLen)
+      corpusFiles.foreach(f =>
+        readRows(conf, f, Seq("n_docs", "total_len")) { g =>
+          if (has(g, "n_docs")) nOut = Some(nOut.getOrElse(0L) + long(g, "n_docs"))
+          if (has(g, "total_len"))
+            lOut = Some(lOut.getOrElse(0L) + long(g, "total_len"))
+        })
+      var next = terms
+      (post.keySet ++ dfAdd.keySet).foreach { term =>
+        val old = terms.getOrElse(term, Bm25Term(Array.empty, Array.empty, 0L))
+        val (ds, ts) = post.get(term).map { case (d, t) => (d.result(), t.result()) }
+          .getOrElse((Array.emptyLongArray, Array.emptyIntArray))
+        val (docs, tfs) = sortedUnion(old.docs, old.tfs, ds, ts)
+        next = next.updated(term,
+          Bm25Term(docs, tfs, old.df + dfAdd.getOrElse(term, 0L)))
+      }
+      val (lenIdsOut, lenDlOut) =
+        sortedUnion(lenIds, lenDl, ids.result(), dls.result())
+      new Bm25(docIdType, next, lenIdsOut, lenDlOut, nOut, lOut)
+    }
+  }
+
+  private def has(g: org.apache.parquet.example.data.Group,
+      c: String): Boolean = g.getFieldRepetitionCount(c) > 0
+
+  /** An integral column as a long, whatever its physical width; NULL
+    * throws (the plan would carry it into a NULL score). */
+  private def long(g: org.apache.parquet.example.data.Group,
+      c: String): Long = {
+    require(has(g, c), s"NULL $c")
+    g.getType.getType(c).asPrimitiveType.getPrimitiveTypeName match {
+      case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 =>
+        g.getLong(c, 0)
+      case _ => g.getInteger(c, 0).toLong
+    }
+  }
+
+  /** Merge `(ids, vals)` into the id-sorted `(baseIds, baseVals)`;
+    * an id on both sides, or twice in the new ones, throws. */
+  private def sortedUnion[V: scala.reflect.ClassTag](baseIds: Array[Long],
+      baseVals: Array[V], ids: Array[Long],
+      vals: Array[V]): (Array[Long], Array[V]) = {
+    val order = ids.indices.sortBy(ids(_)).toArray
+    val outIds = new Array[Long](baseIds.length + ids.length)
+    val outVals = new Array[V](outIds.length)
+    var (a, b, o) = (0, 0, 0)
+    while (o < outIds.length) {
+      val takeBase = b == order.length ||
+        (a < baseIds.length && baseIds(a) < ids(order(b)))
+      if (takeBase) { outIds(o) = baseIds(a); outVals(o) = baseVals(a); a += 1 }
+      else { outIds(o) = ids(order(b)); outVals(o) = vals(order(b)); b += 1 }
+      require(o == 0 || outIds(o - 1) < outIds(o),
+        s"doc_id ${outIds(o)} appears twice")
+      o += 1
+    }
+    (outIds, outVals)
+  }
+
+  private final class Bm25Loader(db: graft.catalog.GraftDatabase,
+      table: String) extends graft.catalog.ResidentArtifact.Loader[Bm25] {
+    private def conf = db.spark.sessionState.newHadoopConf()
+    def load(files: Seq[Seq[Path]]): Bm25 = {
+      val docIdType = graft.sources.ParquetStats
+        .footerSchema(db.spark, db.tablePath(table))
+        .map(_("doc_id").dataType)
+        .collect { case t @ (LongType | IntegerType | ShortType | ByteType) => t }
+        .getOrElse(throw new UnsupportedOperationException(
+          s"$table: the resident tier serves integral doc_ids only"))
+      new Bm25(docIdType, Map.empty, Array.emptyLongArray,
+        Array.emptyLongArray, None, None).plus(conf, files)
+    }
+    def fold(prior: Bm25, added: Seq[Seq[Path]]): Bm25 =
+      prior.plus(conf, added)
   }
 
   /** Bucket count for a corpus of `bytes` on-disk parquet: ~32 MB of

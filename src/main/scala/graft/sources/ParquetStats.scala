@@ -1,10 +1,15 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
@@ -60,19 +65,23 @@ object ParquetStats {
     * scratch dirs at worst) must touch the file or write a fresh
     * name to invalidate.
     */
-  def listingSig(spark: SparkSession, dir: String): Option[String] = {
+  def listingSig(spark: SparkSession, dir: String): Option[String] =
+    listing(spark.sessionState.newHadoopConf(), dir).map(_
+      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
+      .sorted.mkString("|"))
+
+  /** The top-level entries [[listingSig]] signs: `dir`'s children
+    * minus `_`/`.` names. None when the path is missing or
+    * unreadable. */
+  private[graft] def listing(conf: Configuration,
+      dir: String): Option[Seq[FileStatus]] =
     try {
       val p = new Path(dir)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      Some(fs.listStatus(p)
-        .filterNot { s =>
-          val n = s.getPath.getName
-          n.startsWith("_") || n.startsWith(".")
-        }
-        .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .sorted.mkString("|"))
+      Some(p.getFileSystem(conf).listStatus(p).toSeq.filterNot { s =>
+        val n = s.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      })
     } catch { case NonFatal(_) => None }
-  }
 
   /** Parquet read of `path` (a file, or a table directory with or
     * without partition subdirectories) whose construction launches no
@@ -94,7 +103,33 @@ object ParquetStats {
       case None         => spark.read.parquet(path)
     }
 
-  private def footerSchema(spark: SparkSession,
+  /** Every row of one parquet `file`, projected to the top-level
+    * `columns`, read on the driver with parquet-hadoop's example
+    * `Group` reader: no Spark job, no session. For the small served
+    * artifacts a driver keeps resident
+    * ([[graft.catalog.ResidentArtifact]]); anything corpus-sized
+    * belongs in a Spark plan. A missing column or an unreadable file
+    * throws.
+    */
+  private[graft] def readRows(conf: Configuration, file: Path,
+      columns: Seq[String])(each: Group => Unit): Unit = {
+    val projected = new GroupReadSupport {
+      override def init(ctx: InitContext): ReadSupport.ReadContext = {
+        val schema = ctx.getFileSchema
+        new ReadSupport.ReadContext(new MessageType(schema.getName,
+          columns.map(c => schema.getType(schema.getFieldIndex(c))).asJava))
+      }
+    }
+    val reader = ParquetReader.builder(projected, file).withConf(conf).build()
+    try {
+      var g = reader.read()
+      while (g != null) { each(g); g = reader.read() }
+    } finally reader.close()
+  }
+
+  /** The Spark schema [[read]] would give `path`, from one footer;
+    * None where [[read]] falls back to inference. */
+  private[graft] def footerSchema(spark: SparkSession,
       path: String): Option[StructType] = {
     val sqlConf = spark.sessionState.conf
     if (sqlConf.isParquetSchemaMergingEnabled) return None

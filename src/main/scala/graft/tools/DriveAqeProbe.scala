@@ -14,7 +14,7 @@ package graft.tools
 object DriveAqeProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/repo/target/scale10")
+      new java.io.File("target/scale10").getCanonicalPath)
     val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -9,7 +9,8 @@ import graft.GraftSession
   */
 object DriveDecontamProbe {
   def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/target/scale10")
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      new java.io.File("target/scale10").getCanonicalPath)
     val spark = GraftSession.local(32)
 
     def t[A](name: String)(f: => A): A = {

@@ -12,7 +12,7 @@ import graft.Tables
 object DriveLmProbe {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/repo/target/scale10")
+      new java.io.File("target/scale10").getCanonicalPath)
     val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -11,7 +11,7 @@ import graft.streaming.StreamingCsvIngest
 object DriveStreaming {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.local(4)
-    val dir = "/root/repo/target/drive/stream"
+    val dir = new java.io.File("target/drive/stream").getCanonicalPath
     org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(dir), true)
     Files.createDirectories(Paths.get(s"$dir/incoming"))

@@ -11,7 +11,8 @@ import graft.Tables
   */
 object DriveSubstrProbe {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/repo/target/scale10")
+    val dir = args.headOption.getOrElse(
+      new java.io.File("target/scale10").getCanonicalPath)
     val w = 12
     val spark = graft.GraftSession.local(32)
     def time(label: String)(f: => Long): Unit = {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 object DriveTriProbe {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/repo/target/scale10")
+      new java.io.File("target/scale10").getCanonicalPath)
     val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -11,7 +11,8 @@ import graft.functions.TextFunctions._
   */
 object RepPlan {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/repo/target/scale10")
+    val dir = args.headOption.getOrElse(
+      new java.io.File("target/scale10").getCanonicalPath)
     val spark = graft.GraftSession.local(32)
     def time(label: String)(f: => Long): Unit = {
       var best = Long.MaxValue

@@ -196,4 +196,16 @@ class ServedArtifactSpec extends AnyFunSuite with SparkTestBase {
       .foreach(r => assert(new java.io.File(r).getCanonicalPath.startsWith(target),
         s"$r is outside $target"))
   }
+
+  test("no program file under src/main or tools names the checkout's absolute path") {
+    val root = new java.io.File(".").getCanonicalFile
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val hits = Seq("src/main", "tools")
+      .flatMap(d => files(new java.io.File(root, d)))
+      .filter(f => f.getName.endsWith(".scala") || f.getName.endsWith(".py"))
+      .filter(f => new String(java.nio.file.Files.readAllBytes(f.toPath),
+        java.nio.charset.StandardCharsets.UTF_8).contains(root.getPath))
+    assert(hits.isEmpty, s"${root.getPath} is named in ${hits.mkString(", ")}")
+  }
 }

@@ -16,13 +16,13 @@ Usage:
   python3 tools/grown_probe.py build   # materialize target/grown10
   python3 tools/grown_probe.py duckdb [oracleSqlJson]
 Spark side:
-  SPARK_GRAFT_SF_DIR=/root/repo/target/grown10 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=$PWD/target/grown10 SPARK_GRAFT_CPUS=32 \
     SPARK_GRAFT_ONLY=pipeline_clean_corpus sbt -batch "runMain graft.Bench"
 """
 import sys, json, time, os
 import duckdb
 
-OUT = "/root/repo/target/grown10"
+OUT = os.path.abspath("target/grown10")
 COPIES = 10
 SHARDS = 20
 

@@ -13,7 +13,7 @@ Usage:
   python3 tools/scale10.py merge <spark_bench_full.json> <duckdb.json>
                                           # -> BENCH_SCALE10.json
 Spark side (between duckdb and merge):
-  SPARK_GRAFT_SF_DIR=/root/repo/target/scale10 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=$PWD/target/scale10 SPARK_GRAFT_CPUS=32 \
     SPARK_GRAFT_ONLY=<SCALE10 list> sbt -batch "runMain graft.Bench"
 
 Replication semantics: copy k offsets every primary/foreign key by
@@ -33,7 +33,7 @@ import pyarrow.parquet as pq
 import pyarrow.compute as pc
 
 SF_DIR = "/root/testdata/sf0.1"
-OUT = "/root/repo/target/scale10"
+OUT = os.path.abspath("target/scale10")
 COPIES = 10
 SHARDS_PER_COPY = 2  # 10 copies x 2 = 20 files per table
 

@@ -14,7 +14,7 @@ Usage:
   python3 tools/scale_joins.py build   [K]       # -> target/scale<K>joins
   python3 tools/scale_joins.py duckdb  [K] [R]   # json on stdout
 Spark side:
-  SPARK_GRAFT_SF_DIR=/root/repo/target/scale<K>joins \
+  SPARK_GRAFT_SF_DIR=$PWD/target/scale<K>joins \
     SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ONLY=q3_shipping_priority,q5_region_revenue \
     sbt -batch "runMain graft.Bench"
 """
@@ -25,7 +25,7 @@ import pyarrow.compute as pc
 
 SF_DIR = "/root/testdata/sf0.1"
 K = int(sys.argv[2]) if len(sys.argv) > 2 else 100
-OUT = f"/root/repo/target/scale{K}joins"
+OUT = os.path.abspath(f"target/scale{K}joins")
 
 UNSCALED = ["region", "nation"]
 KEYS = {

@@ -6,7 +6,7 @@ Builds a 100x duplication of sf0.1 documents (500k docs) as a
 content queries over it. Pair with the Spark side:
 
   SPARK_GRAFT_ONLY=text_token_stats,text_fluency,dedup_exact_hash,curate_repetition \
-  SPARK_GRAFT_SF_DIR=/root/repo/target/scale_probe \
+  SPARK_GRAFT_SF_DIR=$PWD/target/scale_probe \
   SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Bench"
 
 The multi-file layout matters for BOTH engines: a single ~5 MB
@@ -20,7 +20,7 @@ breaks its time down per Spark job and stage.
 import sys, json, time, glob, os
 import duckdb
 
-PROBE = "/root/repo/target/scale_probe"
+PROBE = os.path.abspath("target/scale_probe")
 NAMES = ["text_token_stats", "text_fluency", "dedup_exact_hash",
          "curate_repetition"]
 
