@@ -4,9 +4,15 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
   *
-  * Local-mode defaults tuned for the test harness (local[32], 32
-  * shuffle partitions); on a real cluster the same settings are
-  * supplied by spark-submit and AQE re-plans shuffles at runtime.
+  * [[configure]] applies the settings every timed and checked run
+  * uses (Bench, Verify, the specs, the flow benchmark): AQE with
+  * byte-sized coalescing, the broadcast threshold, no automatic
+  * bucketed-scan pruning, UTC, nanosecond timestamps as longs.
+  * [[local]] adds a `local[cores]` master with one shuffle partition
+  * per core, `cores` defaulting to the JVM's available processors.
+  * Each setting is a constant; a caller that wants another value sets
+  * `.config(key, value)` on the builder after `configure`, since the
+  * last setting of a key wins.
   */
 object GraftSession {
 
@@ -18,26 +24,18 @@ object GraftSession {
     // parallelismFirst=true re-expands every tiny shuffle to
     // defaultParallelism tasks, so a 32-core local session pays 32
     // task dispatches per sub-MB stage (measured ~25% of sub-second
-    // query wall time at sf0.1). The advisory size is the tension
-    // knob: bytes misprice CPU-heavy stages (a small-bytes shuffle
-    // into an expensive verify join wants width), so the default
-    // stays modest and both knobs are env-overridable for operators
-    // whose workloads skew one way.
-    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "1MB"))
+    // query wall time at sf0.1). The advisory size is the tension:
+    // bytes misprice CPU-heavy stages (a small-bytes shuffle into an
+    // expensive verify join wants width), so it stays modest.
+    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1MB")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.autoBroadcastJoinThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "10MB"))
-    // Join-strategy preference knob (r14): preferSortMergeJoin=false
-    // lets the planner pick shuffled-hash wherever one side hashes
-    // locally (broadcast still wins below the threshold). Surgical
-    // hints carried the measured q3 win; this stays env-only until a
-    // full-board sweep at 1x AND 10x shows a clean aggregate win
-    // (r15 candidate d).
-    .config("spark.sql.join.preferSortMergeJoin",
-      sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
+    .config("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    // preferSortMergeJoin=false (r14) lets the planner pick shuffled-
+    // hash wherever one side hashes locally; surgical hints carried
+    // the measured q3 win and no full-board sweep at 1x and 10x has
+    // shown an aggregate win for the global flip.
+    .config("spark.sql.join.preferSortMergeJoin", "true")
     // Every bucketed read in this engine is DELIBERATE — the layout
     // exists for bucket PRUNING (text-index term probes) or exchange
     // elision (q3/q5 twins, _len joins). Spark's

@@ -101,14 +101,13 @@ object GraftFunctions {
     * for candidate generation under any sketch contents; see
     * [[expressions.PrefixByRarity]].
     */
-  def prefixByRarity(sh: Column, serializedCms: Array[Byte],
-      threshold: Double): Column =
+  def prefixByRarity(spark: SparkSession, sh: Column,
+      serializedCms: Array[Byte], threshold: Double): Column =
     // broadcast ONCE per call — the Column (and any self-join reuse
     // of it) shares one broadcast handle instead of shipping the
     // ~1 MiB sketch bytes inside every stage's task binary
     toCol(PrefixByRarity(toExpr(sh),
-      org.apache.spark.sql.SparkSession.active.sparkContext
-        .broadcast(serializedCms), threshold))
+      spark.sparkContext.broadcast(serializedCms), threshold))
 
   /** PCA projection of a float vector under a literal basis (see
     * [[expressions.PcaProjection]]).
@@ -267,22 +266,6 @@ object GraftFunctions {
   def cellResidual(vec: Column, cell: Column,
       cents: Array[Array[Double]]): Column =
     toCol(CellResidual(toExpr(vec), toExpr(cell), cents))
-
-  /** Idempotent SQL-name registration on an existing session (the
-    * driver hands us its own session; extensions cover sessions we
-    * build ourselves).
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_cosine",
-      es => CosineSimilarity(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash60",
-      es => SimHash60(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_rolling_hash64",
-      es => RollingHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_zorder",
-      es => ZOrderLong(es), "built-in")
-  }
 }
 
 /** Session extension wiring graft functions into SQL by name:

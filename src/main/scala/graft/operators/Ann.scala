@@ -303,9 +303,9 @@ object Ann {
     * population: quantizer-training members are systematically
     * closer to the centroids they themselves defined — the classic
     * train/holdout gap, measured at ~+20% mean distance for an
-    * in-distribution holdout against 16 cells × ~15 members
-    * (tools/DriftProbe) — so a base-relative monitor would cry drift
-    * on every perfectly clean increment. The first increment
+    * in-distribution holdout against 16 cells × ~15 members — so a
+    * base-relative monitor would cry drift on every perfectly clean
+    * increment. The first increment
     * therefore CALIBRATES the monitor (no verdicts until a second
     * batch lands), and every later batch is judged out-of-sample
     * against out-of-sample. `minSupport` on both sides keeps

@@ -22,8 +22,8 @@ import graft.Tables
   * path flips a value and the round's CORRECTNESS row goes red.
   *
   * Floors are set with margin below the measured recalls at all three
-  * SFs (tools/DriveRecallProbe, 2026-08: ivf .76-1.0, pq .34-.38,
-  * ivfpq .34-.42, refine .74-.80, hnsw .98-1.0, lsh .67-.71,
+  * SFs (2026-08: ivf .76-1.0, pq .34-.38, ivfpq .34-.42,
+  * refine .74-.80, hnsw .98-1.0, lsh .67-.71,
   * semantic .26-.29, pca .76-1.0; r15: hnsw_routed .92-1.0 at
   * nProbe=8/16, .84-1.0 at nProbe=4) — they catch structural
   * regressions, not noise:

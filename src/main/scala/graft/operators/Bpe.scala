@@ -45,15 +45,11 @@ object Bpe {
 
   /** Bound on the collected (word, count) vocabulary for the in-core
     * trainer; above it the distributed round loop runs. ~100 bytes
-    * per entry ⇒ ≲100 MB of driver heap at the default. Env knob so
-    * a cluster driver with more headroom can raise it (the bench
-    * regime never comes close).
+    * per entry ⇒ ≲100 MB of driver heap (the bench regime never
+    * comes close). `learnMergesOf`'s `maxDriverVocab` overrides it
+    * per call; 0 forces the distributed loop.
     */
-  private[operators] val MaxDriverVocab: Int =
-    sys.env.get("SPARK_GRAFT_BPE_MAX_DRIVER_VOCAB")
-      .flatMap(v => scala.util.Try(v.toInt).toOption)
-      .getOrElse(1 << 20) // malformed value → default, not an
-                          // ExceptionInInitializerError (r15 ADVICE)
+  private[operators] val MaxDriverVocab: Int = 1 << 20
 
   /** Character symbols of a word (initial BPE state). */
   private def chars(c: Column): Column =

@@ -67,15 +67,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(sha2(col("text"), 256)).as("n_distinct"))
 
-  /** Per-doc distinct 3-shingle arrays, kept for index join + verify. */
-  private def docShingles(spark: SparkSession, dir: String): DataFrame =
-    docShinglesOf(Tables(spark, dir, "documents"))
-
-  private def docShinglesOf(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id"),
-      shingleArray(tokens(col("text")), 3).as("shingles"))
-
   /** Same sets, but as sorted arrays of 64-bit shingle hashes: set
     * sizes and intersections are identical (collisions: ~n²/2⁶⁵), and
     * long arrays are an order of magnitude cheaper to cache, shuffle
@@ -84,9 +75,6 @@ object Dedup {
     */
   private def docShingleHashes(spark: SparkSession, dir: String): DataFrame =
     docShingleHashesOf(Tables(spark, dir, "documents"))
-
-  private[graft] def docShingleHashesProbe(spark: SparkSession,
-      dir: String): DataFrame = docShingleHashes(spark, dir)
 
   private def docShingleHashesOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), shingleHashColumn(col("text")).as("sh"))
@@ -165,12 +153,6 @@ object Dedup {
     out
   }
 
-  // probe shims (tools only — graft.tools sits outside `operators`)
-  private[graft] def shingleHashColumnProbe(text: Column): Column =
-    shingleHashColumn(text)
-  private[graft] def ngramJaccardOfHashedProbe(docs: DataFrame,
-      threshold: Double): DataFrame = ngramJaccardOfHashed(docs, threshold)
-
   /** [[ngramJaccardOf]] over an already-persisted hashed-shingle
     * frame (doc_id, sh sorted array<long>) — the entry the cleaning
     * composite and minhash share when the arrays are already cached.
@@ -185,8 +167,8 @@ object Dedup {
       .readFrom(new java.io.ByteArrayInputStream(sketch)).totalCount
     val w = pinWidth(docs.sparkSession, totalShingles)
     val prefix = docs.select(col("doc_id"),
-      explode(prefixByRarity(col("sh"), sketch, threshold))
-        .as("shingle"))
+      explode(prefixByRarity(docs.sparkSession, col("sh"), sketch,
+        threshold)).as("shingle"))
     // Width-pinned like the verify joins (see [[verifyJaccard]]):
     // this join's shuffle rows are 16 bytes each but its reduce side
     // generates the candidate pairs — the operator's most
@@ -210,11 +192,10 @@ object Dedup {
     * sub-second sf0.1 wall time — the cost the AQE byte advisory
     * exists to avoid) up to full cluster width long before the data
     * is large enough for coalescing to starve the stages. Clamped to
-    * defaultParallelism; rows-per-task is env-tunable for sweeps.
+    * defaultParallelism.
     */
   private[operators] def pinWidth(spark: SparkSession, costRows: Long): Int = {
-    val perTask = sys.env.getOrElse(
-      "SPARK_GRAFT_PIN_ROWS_PER_TASK", "49152").toLong
+    val perTask = 49152L
     math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
       (costRows + perTask - 1) / perTask)).toInt
   }
@@ -1155,10 +1136,6 @@ object Dedup {
       maxOcc: Int = 1000): DataFrame =
     substringPairsOf(Tables(spark, dir, "documents"), w, maxOcc)
 
-  /** Probe access to the shared window-hash scan (tools only). */
-  private[graft] def windowHashesProbe(docs: DataFrame, w: Int): DataFrame =
-    windowHashes(docs, w)
-
   def substringPairsOf(docs: DataFrame, w: Int, maxOcc: Int): DataFrame = {
     // One tokenize scan, all-codegen, no growing broadcast:
     //
@@ -1275,16 +1252,6 @@ object Dedup {
   // ---------------------------------------------------------------
   // C32: winnowing fingerprints (MOSS), rightmost-min tie-break
   // ---------------------------------------------------------------
-
-  /** Portable 60-bit gram hash (md5 prefix — bit-identical in DuckDB
-    * via ('0x'||substr(md5(g),1,15))::BIGINT) for the oracle pin;
-    * xxhash64 is the production path. Winnowing SELECTION depends on
-    * hash VALUES (per-window minimum), not just equality, so the pin
-    * needs a cross-engine hash, not merely a collision-free one.
-    */
-  private def gramHash60(g: Column, portable: Boolean): Column =
-    if (portable) conv(substring(md5(g), 1, 15), 16, 10).cast("long")
-    else xxhash64(g)
 
   /** C32 core: winnowing fingerprint selection (Schleimer, Wilkerson
     * & Aiken 2003, the MOSS paper): hash every k-token gram, slide a

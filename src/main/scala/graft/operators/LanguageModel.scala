@@ -72,11 +72,8 @@ object LanguageModel {
     // perplexityTrigramOf): above the byte threshold the fused gate
     // is skipped outright so the join path's aggregation is the only
     // corpus pass.
-    val gateMaxBytes: Long = sys.env.getOrElse(
-      "SPARK_GRAFT_LM3_GATE_MAX_BYTES",
-      (8L * 1024 * 1024 * 1024).toString).toLong
     val underGateBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-      .min(BigInt(Long.MaxValue)).toLong <= gateMaxBytes
+      .min(BigInt(Long.MaxValue)).toLong <= GateMaxBytes
     if (maxBroadcastModel > 0 && underGateBytes) {
       val gf = graft.functions.GraftFunctions
       val gateRow: Seq[org.apache.spark.sql.Row] =
@@ -119,8 +116,7 @@ object LanguageModel {
     (m, vocab.size.toLong)
   }
 
-  private def defaultModelCap: Int = sys.env.getOrElse(
-    "SPARK_GRAFT_LM_MODEL_CAP", "262144").toInt
+  private val defaultModelCap = 262144
 
   /** E21's broadcast-model cap. r10: the gate is FUSED into the
     * model build — GramCountsAgg counts all 1..3-grams into
@@ -133,8 +129,14 @@ object LanguageModel {
     * mis-estimates cost 6.7 s at 10×; r10 removes the standalone
     * gate job entirely.)
     */
-  private def defaultTrigramCap: Int = sys.env.getOrElse(
-    "SPARK_GRAFT_LM3_MODEL_CAP", "262144").toInt
+  private val defaultTrigramCap = 262144
+
+  /** File-stats bound (no job) above which the bigram and trigram
+    * paths skip the fused broadcast gate and go straight to the join
+    * path; see [[perplexityTrigramOf]] for why bytes only bound the
+    * wasted gate pass rather than predict the vocabulary.
+    */
+  private val GateMaxBytes = 8L << 30
 
   /** Bigram counts, context totals, distinct-token count of a
     * (doc_id, text) train split. The bigram table comes from ONE
@@ -750,11 +752,8 @@ object LanguageModel {
     // Bytes can't PREDICT vocabulary (a synthetic corpus stays tiny-
     // vocab for GB; web text blows the cap in MB), so the threshold
     // only needs to bound the wasted work, not detect overflow.
-    val gateMaxBytes: Long = sys.env.getOrElse(
-      "SPARK_GRAFT_LM3_GATE_MAX_BYTES",
-      (8L * 1024 * 1024 * 1024).toString).toLong
     val underGateBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-      .min(BigInt(Long.MaxValue)).toLong <= gateMaxBytes
+      .min(BigInt(Long.MaxValue)).toLong <= GateMaxBytes
     val gateRow: Seq[org.apache.spark.sql.Row] =
       if (maxBroadcastModel > 0 && underGateBytes)
         docs.filter(col("doc_id") % holdMod =!= 0)

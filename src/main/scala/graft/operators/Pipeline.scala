@@ -22,12 +22,8 @@ object Pipeline {
   def cleanCorpus(spark: SparkSession, dir: String,
       minQuality: Double = 0.7, lang: String = "en",
       nearDupThreshold: Double = 0.8,
-      smallMaxBytes: Long = sys.env.getOrElse(
-        "SPARK_GRAFT_CLEAN_SMALL_MAX_BYTES",
-        (2L * 1024 * 1024 * 1024).toString).toLong,
-      smallMaxTextBytes: Long = sys.env.getOrElse(
-        "SPARK_GRAFT_CLEAN_SMALL_MAX_TEXT_BYTES",
-        (8L * 1024 * 1024 * 1024).toString).toLong): DataFrame = {
+      smallMaxBytes: Long = 2L << 30,
+      smallMaxTextBytes: Long = 8L << 30): DataFrame = {
     // One-pass gates: GateStats folds the seven regex passes of
     // qualityScore+langId into a single byte scan (same counts, same
     // double arithmetic — spec-pinned); the corpus-scale part of the
@@ -136,9 +132,7 @@ object Pipeline {
     // Between this bound and smallMaxTextBytes the AQE-decided small
     // path keeps running; above that, the persisted width-pinned
     // shape.
-    lazy val bcastSmall = textBytes.exists(_ <= sys.env.getOrElse(
-      "SPARK_GRAFT_CLEAN_BCAST_MAX_TEXT_BYTES",
-      (1L * 1024 * 1024 * 1024).toString).toLong)
+    lazy val bcastSmall = textBytes.exists(_ <= (1L << 30))
     def hintIf(d: DataFrame): DataFrame = if (bcastSmall) broadcast(d) else d
     if (smallCorpus) {
       // r12 probe, kept as a negative result (DriveCleanAb at 10×,

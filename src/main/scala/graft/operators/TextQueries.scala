@@ -18,6 +18,12 @@ object TextQueries {
       : org.apache.spark.sql.Column =
     regexp_extract_all(lower(c), lit("\\S+"), lit(0))
 
+  /** Vocabulary bound under which [[tfidfTopTerms]] and [[fluency]]
+    * broadcast their vocabulary-sized tables; each call's
+    * `maxBroadcastVocab` overrides it, 0 forcing the join path.
+    */
+  private val MaxBroadcastVocab = 262144
+
   /** E1: token counting — whitespace tokens + BPE-ish estimate. */
   def tokenStats(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "documents").select(
@@ -91,8 +97,7 @@ object TextQueries {
     * (single-row broadcast), not a separate driver-side count().
     */
   def tfidfTopTerms(spark: SparkSession, dir: String,
-      maxBroadcastVocab: Int = sys.env.getOrElse(
-        "SPARK_GRAFT_FLUENCY_VOCAB_CAP", "262144").toInt): DataFrame = {
+      maxBroadcastVocab: Int = MaxBroadcastVocab): DataFrame = {
     val d = Tables(spark, dir, "documents")
     val gf = graft.functions.GraftFunctions
     val pairs = d
@@ -507,8 +512,7 @@ object TextQueries {
     * long-lived sessions don't strand corpus-scale cache entries.
     */
   def fluency(spark: SparkSession, dir: String,
-      maxBroadcastVocab: Int = sys.env.getOrElse(
-        "SPARK_GRAFT_FLUENCY_VOCAB_CAP", "262144").toInt): DataFrame = {
+      maxBroadcastVocab: Int = MaxBroadcastVocab): DataFrame = {
     // maxBroadcastVocab=0 forces the join path (the equality spec's
     // lever, and the knob for clusters whose executors are tighter
     // on memory than the default ~tens-of-MB vocabulary bound)

@@ -5,11 +5,11 @@ import org.apache.spark.sql.execution.ExplainMode
 
 import graft.{GraftSession, SparkEntry}
 
-/** r15 OPT deliverable helper: dump `.explain("formatted")` of named
-  * declared queries to `plans/r15/<query>_<suffix>.txt` (the judge
-  * checks plan claims against these files). Usage:
+/** Dump `.explain("formatted")` of named declared queries to
+  * `<outDir>/<query>_<suffix>.txt` (how `plans/r15` and `plans/r16`
+  * were written; plan claims are checked against these files). Usage:
   *
-  *   sbt "runMain graft.tools.DrivePlanDump before q3_shipping_priority ..."
+  *   sbt "runMain graft.tools.DrivePlanDump plans/r16 before q3_shipping_priority ..."
   *
   * SPARK_GRAFT_SF_DIR picks the data dir (default sf0.01 — plan
   * SHAPE is what the files pin, and operators with fixture side
@@ -17,18 +17,18 @@ import graft.{GraftSession, SparkEntry}
   */
 object DrivePlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: DrivePlanDump <suffix> <query>...")
-    val suffix = args.head
+    require(args.length >= 3,
+      "usage: DrivePlanDump <outDir> <suffix> <query>...")
+    val outDir = java.nio.file.Paths.get(args(0))
+    val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val outDir = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r16"))
     java.nio.file.Files.createDirectories(outDir)
-    for (n <- args.tail) {
+    for (n <- args.drop(2)) {
       val txt =
         try {
           val df = SparkEntry.queries(n)(spark, sfDir)

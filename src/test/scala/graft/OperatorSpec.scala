@@ -205,7 +205,8 @@ class ExpressionSpec extends AnyFunSuite with SparkTestBase {
       .stat.countMinSketch("h", 1e-4, 0.99, 42).toByteArray
     val tau = 0.8
     val prefixes = df
-      .select(col("doc_id"), prefixByRarity(col("sh"), cms, tau).as("p"))
+      .select(col("doc_id"),
+        prefixByRarity(spark, col("sh"), cms, tau).as("p"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     // prefix size contract: |s| - ceil(tau*|s|) + 1 rarest shingles
     docs.foreach { case (id, sh) =>
@@ -220,14 +221,31 @@ class ExpressionSpec extends AnyFunSuite with SparkTestBase {
     val bos = new java.io.ByteArrayOutputStream()
     garbage.writeTo(bos)
     val g = df.select(col("doc_id"),
-        prefixByRarity(col("sh"), bos.toByteArray, tau).as("p"))
+        prefixByRarity(spark, col("sh"), bos.toByteArray, tau).as("p"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     assert(g(1L).intersect(g(2L)).nonEmpty,
       "prefix lemma must hold under a degenerate sketch")
     // empty input → empty prefix
     val e = Seq((9L, Seq.empty[Long])).toDF("doc_id", "sh")
-      .select(prefixByRarity(col("sh"), cms, tau)).head().getSeq[Long](0)
+      .select(prefixByRarity(spark, col("sh"), cms, tau)).head().getSeq[Long](0)
     assert(e.isEmpty)
+  }
+
+  test("ngramJaccard needs no active or default session on the calling thread") {
+    val want = Dedup.ngramJaccard(spark, sf).collect().toSet
+    var got: scala.util.Try[Set[Row]] = null
+    val t = new Thread(() => {
+      // the active session is inherited by a new thread; the default
+      // is global and is put back before the test thread goes on
+      val default = org.apache.spark.sql.SparkSession.getDefaultSession
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      org.apache.spark.sql.SparkSession.clearDefaultSession()
+      try got = scala.util.Try(Dedup.ngramJaccard(spark, sf).collect().toSet)
+      finally default.foreach(org.apache.spark.sql.SparkSession.setDefaultSession)
+    })
+    t.start(); t.join()
+    assert(want.nonEmpty)
+    assert(got.get == want)
   }
 
   test("collapseWs ≡ trim(regexp_replace(\\s+, ' ')) on edge inputs") {

@@ -1,0 +1,50 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Rules on the library's own source: its defaults are constants, not
+  * environment reads, and it carries no probe programs or shims.
+  * Operators take their gates as parameters, and a session setting is
+  * overridden with `.config(key, value)` after `GraftSession.configure`.
+  */
+class SourceScanSpec extends AnyFunSuite {
+
+  private def scalaFiles(dir: String): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
+      else Seq(f)
+    walk(new java.io.File(dir)).filter(_.getName.endsWith(".scala"))
+  }
+
+  private def text(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8)
+
+  test("src/main reads no env var but the bench contract's three") {
+    val contract =
+      Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY")
+    val read = """(sys\.env|System\.getenv)""".r
+    val named = """^(?:\.(?:get|getOrElse|apply|contains))?\(\s*"([^"]*)"""".r
+    val offenders = for {
+      f <- scalaFiles("src/main")
+      src = text(f)
+      m <- read.findAllMatchIn(src).toSeq
+      name = named.findFirstMatchIn(src.substring(m.end)).map(_.group(1))
+      if !name.exists(contract)
+    } yield s"${f.getPath}: ${name.getOrElse(src.substring(m.start).take(40))}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("graft/tools holds at most two programs") {
+    val tools = new java.io.File("src/main/scala/graft/tools").list()
+    assert(tools.length <= 2, tools.sorted.mkString(", "))
+  }
+
+  test("no probe shim remains under graft/operators") {
+    // embeddingLshMultiProbe is multi-probe LSH, an algorithm's name
+    val shim = """def\s+(\w*(?<!Multi)Probe)\b""".r
+    val hits = scalaFiles("src/main/scala/graft/operators").flatMap(f =>
+      shim.findAllMatchIn(text(f)).map(m => s"${f.getName}: ${m.group(1)}"))
+    assert(hits.isEmpty, hits.mkString(", "))
+  }
+}
