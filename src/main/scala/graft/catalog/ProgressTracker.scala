@@ -69,6 +69,7 @@ class ProgressTracker(db: GraftDatabase) {
       s"part-${java.util.UUID.randomUUID().toString}.parquet")
     val writer = ExampleParquetWriter
       .builder(HadoopOutputFile.fromPath(file, conf))
+      .withConf(conf) // else the builder parses a default Configuration per row
       .withType(progressSchema)
       .build()
     try {

@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Whitespace-delimited tokens. */
-  val WsToken = "\\S+"
-
   /** BPE-ish pre-tokenizer: letter runs, single digits, isolated
     * punctuation — a deterministic stand-in for a real BPE vocab that
     * preserves the shape (counts ≫ ws tokens on digit/punct-heavy
@@ -133,16 +130,8 @@ object TextFunctions {
       "es" -> g.getField("c_es"), "fr" -> g.getField("c_fr")))
 
   /** Normalized-content fingerprint: lower + collapse whitespace →
-    * md5. Portable to any engine for verification; the production
-    * path can swap in xxhash64 (same normalization) for a cheap
-    * 64-bit key.
+    * md5. Portable to any engine for verification.
     */
   def fingerprint(c: Column): Column =
     md5(to_binary(lower(GraftFunctions.collapseWs(c)), lit("utf-8")))
-
-  /** 64-bit engine-native fingerprint (xxhash64) over the same
-    * normalization — the cheap production variant of [[fingerprint]].
-    */
-  def fingerprint64(c: Column): Column =
-    xxhash64(lower(GraftFunctions.collapseWs(c)))
 }

@@ -2,13 +2,14 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+import org.apache.parquet.hadoop.{CodecFactory, Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
@@ -113,18 +114,29 @@ object ParquetStats {
     */
   private[graft] def readRows(conf: Configuration, file: Path,
       columns: Seq[String])(each: Group => Unit): Unit = {
-    val projected = new GroupReadSupport {
-      override def init(ctx: InitContext): ReadSupport.ReadContext = {
-        val schema = ctx.getFileSchema
-        new ReadSupport.ReadContext(new MessageType(schema.getName,
-          columns.map(c => schema.getType(schema.getFieldIndex(c))).asJava))
-      }
-    }
-    val reader = ParquetReader.builder(projected, file).withConf(conf).build()
+    // read options built from `conf` with a codec factory of its own:
+    // the default options and ParquetReader's builder each parse a new
+    // Configuration (Hadoop's default XML) on every open
+    val codecs = new CodecFactory(conf, 0)
     try {
-      var g = reader.read()
-      while (g != null) { each(g); g = reader.read() }
-    } finally reader.close()
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+        HadoopReadOptions.builder(conf, file).withCodecFactory(codecs).build())
+      try {
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        val projected = new MessageType(schema.getName,
+          columns.map(c => schema.getType(schema.getFieldIndex(c))).asJava)
+        reader.setRequestedSchema(projected)
+        val io = new ColumnIOFactory().getColumnIO(projected, schema)
+        var pages = reader.readNextRowGroup()
+        while (pages != null) {
+          val records =
+            io.getRecordReader(pages, new GroupRecordConverter(projected))
+          var i = 0L
+          while (i < pages.getRowCount) { each(records.read()); i += 1 }
+          pages = reader.readNextRowGroup()
+        }
+      } finally reader.close()
+    } finally codecs.release()
   }
 
   /** The Spark schema [[read]] would give `path`, from one footer;
@@ -164,6 +176,12 @@ object ParquetStats {
       .sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
       .iterator.flatMap(firstDataFile(fs, _)).nextOption()
 
+  /** The footer of one data file, row-group metadata included, read
+    * without opening the file for its data. */
+  private def footerOf(st: FileStatus, conf: Configuration): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, conf),
+      ParquetMetadataConverter.NO_FILTER)
+
   /** Shared footer walker: fold `f` over every column chunk of every
     * parquet file under `dir` (recursive listing, `_`/`.` entries
     * skipped). `f` returns None to abort — the whole fold becomes
@@ -188,18 +206,14 @@ object ParquetStats {
             !name.startsWith("_") && !name.startsWith(".")) {
           files += 1
           if (files > maxFiles) return None
-          val reader =
-            ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-          try {
-            reader.getFooter.getBlocks.asScala.foreach { b =>
-              b.getColumns.asScala.foreach { c =>
-                f(acc, c) match {
-                  case Some(next) => acc = next
-                  case None       => return None
-                }
+          footerOf(st, conf).getBlocks.asScala.foreach { b =>
+            b.getColumns.asScala.foreach { c =>
+              f(acc, c) match {
+                case Some(next) => acc = next
+                case None       => return None
               }
             }
-          } finally reader.close()
+          }
         }
       }
       Some(acc)
@@ -246,10 +260,7 @@ object ParquetStats {
             !name.startsWith("_") && !name.startsWith(".")) {
           files += 1
           if (files > maxFiles) return None
-          val reader =
-            ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-          try total += reader.getRecordCount
-          finally reader.close()
+          total += footerOf(st, conf).getBlocks.asScala.map(_.getRowCount).sum
         }
       }
       countMemo.put(key, total)

@@ -55,12 +55,9 @@ object StreamingDedup {
     * watermark is required.
     */
   def incrementalNoveltyStreamManaged(old: DataFrame, stream: DataFrame,
-      fpp: Double = 0.01, persistIndex: Boolean = true): NoveltyServing = {
-    val distinctTexts = old.select(col("text")).distinct()
-    val oldDistinct =
-      if (persistIndex)
-        distinctTexts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else distinctTexts
+      fpp: Double = 0.01): NoveltyServing = {
+    val oldDistinct = old.select(col("text")).distinct()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nOld = math.max(oldDistinct.count(), 1L)
     val bloom = oldDistinct.stat.bloomFilter("text", nOld, fpp)
     val bytes = {
@@ -148,16 +145,4 @@ object StreamingDedup {
     graft.operators.Pipeline.splitAssignRows(db, name,
       stream.withWatermark("ts", watermark), minShared,
       carry = Seq("ts"))
-
-  /** Convenience form of [[incrementalNoveltyStreamManaged]] — with
-    * NO persistent index (there is no handle to release it through,
-    * and a leaked corpus-scale cache per call is worse than the
-    * per-batch re-scan). In a long-lived session prefer the managed
-    * form, which persists the verify index and `close()`s it when
-    * the query stops.
-    */
-  def incrementalNoveltyStream(old: DataFrame, stream: DataFrame,
-      fpp: Double = 0.01): DataFrame =
-    incrementalNoveltyStreamManaged(old, stream, fpp,
-      persistIndex = false).results
 }

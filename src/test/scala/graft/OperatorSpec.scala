@@ -232,7 +232,11 @@ class ExpressionSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ngramJaccard needs no active or default session on the calling thread") {
-    val want = Dedup.ngramJaccard(spark, sf).collect().toSet
+    val out = Dedup.ngramJaccard(spark, sf)
+    val want = out.collect().toSet
+    // the result stays re-actionable: its rarity broadcast is released
+    // by ContextCleaner, never destroyed after the first action
+    assert(out.collect().toSet == want)
     var got: scala.util.Try[Set[Row]] = null
     val t = new Thread(() => {
       // the active session is inherited by a new thread; the default

@@ -1205,6 +1205,38 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       panel(dist.docLengthQuantiles(spark, sf)))
   }
 
+  test("C38 quality streaming twin: streamed quality-histogram appends serve the one-pass quality panel") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dist = graft.operators.Distribution
+    val db = GraftDatabase(spark, scratch("q_hist_stream") + "/db")
+    val docs = Tables(spark, sf, "documents")
+      .select(col("doc_id"), col("source"), col("text"))
+    val ids = docs.select("doc_id").collect().map(_.getLong(0)).sorted
+    val cut = ids(ids.length / 2)
+    dist.buildQualityHistogram(db, "qh", docs.filter(col("doc_id") < cut))
+    val late = docs.filter(col("doc_id") >= cut).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+    val mem = MemoryStream[(Long, String, String)]
+    val q = graft.streaming.StreamingCuration
+      .maintainQualityHistogram(db, "qh",
+        mem.toDF().toDF("doc_id", "source", "text"))
+      .option("checkpointLocation", scratch("q_hist_ckpt"))
+      .start()
+    try {
+      val (h1, h2) = late.splitAt(late.length / 2)
+      mem.addData(h1: _*)
+      q.processAllAvailable()
+      mem.addData(h2: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    def panel(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
+    assert(panel(dist.quantilesFromHistogram(db, "qh")) ==
+      panel(dist.qualityQuantiles(spark, sf)))
+  }
+
   test("G17: streamed hybrid RRF serving equals the batch fusion per query") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

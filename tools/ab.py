@@ -2,7 +2,7 @@
 flow workload.
 
     python3 tools/ab.py --parent REV --workload W --pairs N --seeds S \
-        [--seconds 15] [--trace 0|1] [--out FILE]
+        [--seconds 15] [--trace 0|1] [--extra m1,m2] [--out FILE]
 
 Run from the root of a checkout. `git archive REV` is extracted into
 target/ab/parent-<sha> (reused when it is already there), and each pair
@@ -25,6 +25,13 @@ of the median and the parent's IQR/median. A metric reads:
   gain        the change won >= 90% of the pairs and its median is
               better by more than the parent's IQR;
   flat        anything else.
+
+`--extra` adds a second table of workload metrics that BENCHMARK.json
+does not list, read from the run's `perfbench metrics` line (and its
+`perfbench layers` line under --trace 1), e.g. `append_s_p50,serve_s_p95`,
+so the mechanism can be shown next to the claim. It gives q1/median/q3
+per side and the pairs the change won, and no verdict. A metric whose
+unit ends in `/s` counts as better higher, any other as better lower.
 
 It reads BENCHMARK.json and calls perfbench/run.py; it changes
 neither. A run that exits non-zero stops the tool with its stderr.
@@ -82,8 +89,14 @@ def run_once(root, workload, seed, seconds, trace):
     if p.returncode != 0:
         raise SystemExit(f"{root} seed {seed} exited {p.returncode}:\n"
                          f"{p.stderr[-3000:]}")
-    last = json.loads(p.stdout.strip().splitlines()[-1])
+    lines = p.stdout.strip().splitlines()
+    last = json.loads(lines[-1])
     last["wall_s"] = time.time() - t
+    last["workload_metrics"] = {}
+    for line in lines:
+        for tag in ("perfbench metrics ", "perfbench layers "):
+            if line.startswith(tag):
+                last["workload_metrics"].update(json.loads(line[len(tag):]))
     return last
 
 
@@ -93,6 +106,10 @@ def quartiles(values):
         return v, v, v
     q1, _, q3 = statistics.quantiles(values, n=4)
     return q1, statistics.median(values), q3
+
+
+def fmt(q):
+    return "/".join(f"{x:.4g}" for x in q)
 
 
 def verdict(parent, change, better, bound, pairs_won, pairs):
@@ -118,8 +135,11 @@ def main():
     ap.add_argument("--seeds", required=True)
     ap.add_argument("--seconds", type=int, default=15)
     ap.add_argument("--trace", type=int, default=0, choices=(0, 1))
+    ap.add_argument("--extra", default="",
+                    help="comma list of workload metrics to tabulate too")
     ap.add_argument("--out")
     a = ap.parse_args()
+    extras = [m for m in a.extra.split(",") if m]
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
@@ -164,13 +184,33 @@ def main():
     print(f"{'metric':<26} {'parent q1/med/q3':>28} {'change q1/med/q3':>28}"
           f" {'won':>6} {'shift':>8} {'p.IQR/med':>9} {'bound':>6}  verdict")
     for name, r in rows.items():
-        def fmt(q):
-            return "/".join(f"{x:.4g}" for x in q)
         shift = "n/a" if r["shift"] is None else f"{100 * r['shift']:+.1f}%"
         bound = "-" if r["bound"] is None else f"{r['bound']:.2f}"
         print(f"{name:<26} {fmt(r['parent']):>28} {fmt(r['change']):>28}"
               f" {r['won']:>3}/{r['pairs']:<2} {shift:>8}"
               f" {100 * r['parent_iqr_frac']:>8.1f}% {bound:>6}  {r['verdict']}")
+    extra_rows = {}
+    for name in extras:
+        if any(name not in r["workload_metrics"]
+               for rs in runs.values() for r in rs):
+            print(f"ab: {name} is not in every run's metrics; skipped",
+                  file=sys.stderr)
+            continue
+        unit = runs["parent"][0]["workload_metrics"][name]["unit"]
+        pv = [r["workload_metrics"][name]["value"] for r in runs["parent"]]
+        cv = [r["workload_metrics"][name]["value"] for r in runs["change"]]
+        sign = 1.0 if unit.endswith("/s") else -1.0
+        extra_rows[name] = {
+            "unit": unit, "better": "higher" if sign > 0 else "lower",
+            "parent": quartiles(pv), "change": quartiles(cv),
+            "won": sum(1 for p, c in zip(pv, cv) if sign * (c - p) > 0),
+            "pairs": len(pv), "parent_values": pv, "change_values": cv}
+    if extra_rows:
+        print(f"\n{'extra metric':<26} {'parent q1/med/q3':>28}"
+              f" {'change q1/med/q3':>28} {'won':>6}  unit (better)")
+        for name, r in extra_rows.items():
+            print(f"{name:<26} {fmt(r['parent']):>28} {fmt(r['change']):>28}"
+                  f" {r['won']:>3}/{r['pairs']:<2}  {r['unit']} ({r['better']})")
     for side in ("parent", "change"):
         rs = runs[side]
         print(f"{side}: correct {sum(r['correct'] for r in rs)}/{len(rs)}, "
@@ -179,7 +219,8 @@ def main():
         with open(a.out, "w") as f:
             json.dump({"parent": sha, "workload": a.workload, "seeds": seeds,
                        "seconds": a.seconds, "trace": a.trace,
-                       "metrics": rows, "runs": runs}, f, indent=1)
+                       "metrics": rows, "extra": extra_rows,
+                       "runs": runs}, f, indent=1)
             f.write("\n")
 
 
