@@ -771,50 +771,38 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
   /** Compact a table to ~targetBytes files: streaming appends and
     * per-batch inserts accumulate small files, and at scale the file
     * count (driver memory, listing time, task overhead) degrades
-    * every later scan.
+    * every later scan. The rewrite publishes through [[replaceTable]]'s
+    * swap, with its crash recovery and its reader contract.
+    */
+  def compact(table: String, targetBytes: Long = 128L * 1024 * 1024): Unit = {
+    restoreStranded(table)
+    val bytes = fs.getContentSummary(new Path(tablePath(table))).getLength
+    replaceTable(read(table).repartition(
+      math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)), table)
+  }
+
+  /** Replace `table`'s contents with `df`: write to a scratch dir,
+    * rename current out to `_old_<table>`, rename the new files in,
+    * drop the backup. Unlike `SaveMode.Overwrite` on the live path —
+    * which DELETES the current files before the job's first commit, so
+    * a concurrent reader planning mid-write sees an empty or partial
+    * table — the readable window here is two metadata renames. Built
+    * for the served-model maintainers (G22 gate recalibration): a
+    * serving stream re-plans the static side per micro-batch and must
+    * never observe a half-published model.
     *
     * NOT atomic for concurrent readers: HDFS/local rename cannot swap
     * two directories in one operation, so a reader racing the swap
     * can observe a missing table path for the instant between the two
     * renames. Crash-safe, though: data is never lost — a crash
     * between the renames strands the table in `_old_<table>`, which
-    * the next compact() restores before proceeding. True atomic swap
-    * needs a table format with a metadata pointer (manifest), out of
-    * scope here.
-    */
-  def compact(table: String, targetBytes: Long = 128L * 1024 * 1024): Unit = {
-    val src = new Path(tablePath(table))
-    val prevBak = new Path(tablePath(s"_old_$table"))
-    if (!fs.exists(src) && fs.exists(prevBak)) renameOrThrow(prevBak, src)
-    val bytes = fs.getContentSummary(src).getLength
-    val parts = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val tmp = new Path(tablePath(s"_compact_$table"))
-    read(table).repartition(parts).write
-      .mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val bak = new Path(tablePath(s"_old_$table"))
-    fs.delete(bak, true)
-    renameOrThrow(src, bak)
-    renameOrThrow(tmp, src)
-    fs.delete(bak, true)
-  }
-
-  /** Replace `table`'s contents with `df` via the [[compact]] swap
-    * protocol: write to a scratch dir, rename current out to
-    * `_old_<table>`, rename the new files in, drop the backup. Unlike
-    * `SaveMode.Overwrite` on the live path — which DELETES the
-    * current files before the job's first commit, so a concurrent
-    * reader planning mid-write sees an empty or partial table — the
-    * readable window here is two metadata renames. Built for the
-    * served-model maintainers (G22 gate recalibration): a serving
-    * stream re-plans the static side per micro-batch and must never
-    * observe a half-published model. Crash between the renames
-    * strands the table in `_old_<table>`; the next replaceTable (or
-    * compact) restores it first, same recovery as compact.
+    * the next replaceTable (or compact) restores before proceeding.
+    * True atomic swap needs a table format with a metadata pointer
+    * (manifest), out of scope here.
     */
   def replaceTable(df: DataFrame, table: String): Unit = {
+    restoreStranded(table)
     val src = new Path(tablePath(table))
-    val prevBak = new Path(tablePath(s"_old_$table"))
-    if (!fs.exists(src) && fs.exists(prevBak)) renameOrThrow(prevBak, src)
     val tmp = new Path(tablePath(s"_swap_$table"))
     fs.delete(tmp, true)
     df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
@@ -823,6 +811,13 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
     if (fs.exists(src)) renameOrThrow(src, bak)
     renameOrThrow(tmp, src)
     fs.delete(bak, true)
+  }
+
+  /** Undo a swap that crashed between its two renames. */
+  private def restoreStranded(table: String): Unit = {
+    val src = new Path(tablePath(table))
+    val bak = new Path(tablePath(s"_old_$table"))
+    if (!fs.exists(src) && fs.exists(bak)) renameOrThrow(bak, src)
   }
 
   // ---- H18: versioned tables (snapshot reads / time travel) ------

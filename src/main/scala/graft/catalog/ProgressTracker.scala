@@ -122,7 +122,7 @@ class ProgressTracker(db: GraftDatabase) {
     */
   def current(): DataFrame = {
     val w = Window.partitionBy(col("id"))
-    spark.read.schema(sparkSchema).parquet(path)
+    graft.sources.ParquetStats.read(spark, path, sparkSchema)
       .withColumn("__rn", row_number().over(w.orderBy(col("seq").desc)))
       .withColumn("__started", max(col("started")).over(w))
       .withColumn("__todo", max(col("bytes_todo")).over(w))

@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.charset.Charset
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.catalog.GraftDatabase
 
@@ -15,6 +15,13 @@ import graft.catalog.GraftDatabase
   *   (header row, all-string schema) → one-pass distributed type
   *   inference → typed cast → parquet table in the target database,
   *   with `_csv_progress_` bookkeeping and error capture.
+  *
+  * This object holds the CSV sniff and parse, and the reader dialect
+  * ([[csvOptions]], [[sparkCharset]], [[lineSepFor]], [[decodeCp1252]])
+  * the fixed-width reader and the streaming twins share. Naming,
+  * progress, the charset and split scopes, the write and error capture
+  * are the one envelope every format's upload goes through ([[Upload]]),
+  * whose result is [[UploadResult]].
   *
   * Differences from the reference, by design: the decode+parse is a
   * splittable distributed scan instead of a single-threaded
@@ -46,20 +53,10 @@ object CsvUploader {
       delimiter: Option[String] = None,
       alter: Boolean = false,
       progressIntervalMs: Long = 250L,
-      multiLine: Option[Boolean] = None): UploadResult = {
-    val spark = db.spark
-    val p = new Path(csvPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = tableName.getOrElse(db.tableNameForFile(csvPath))
-    val resolved = db.resolveTableName(base)
-    val started = java.time.Instant.now().toString
-
-    // size lookup inside the error envelope: a missing path must land
-    // in _csv_progress_.error like every other failure, not throw
-    var bytesTodo = 0L
-    try {
-      bytesTodo = fs.getContentSummary(p).getLength
-      db.progress.start(taskId, resolved, bytesTodo, started)
+      multiLine: Option[Boolean] = None): UploadResult =
+    Upload.run(db, csvPath, tableName, Seq(".csv"), taskId,
+        progressIntervalMs) {
+      val spark = db.spark
       val (encoding, sniff) = detectEncodingAndSniff(spark, csvPath,
         sniffBytes)
       val windowText = decodeSniff(encoding, sniff)
@@ -81,61 +78,37 @@ object CsvUploader {
       val multi = multiLine.getOrElse(
         windowText.exists(quotedNewline(_, delimCh)) ||
           quotedNewlineInOtherParts(spark, csvPath, encoding, delimCh))
-      withLegacyCharsets(spark, needsLegacyCharset(encoding)) {
-       withAdaptiveSplits(spark, bytesTodo) {
-        val raw =
-          if (alter) readRawEvolving(spark, csvPath, encoding, delim,
-            multi)
-          else {
-            // header-as-schema guard: a window truncated at the sniff
-            // bound with no complete second record may hold a CUT
-            // header — providing it as schema would silently narrow
-            // the table. One complete data record proves the header
-            // ended inside the window.
-            // the window scanner only knows \n / \r\n record ends —
-            // a charset whose records terminate otherwise (cp1047's
-            // NEL) would yield the whole window as one giant
-            // "header", so only a plain-\n lineSep qualifies
-            // … and the window scanner splits on a single CHARACTER:
-            // with an explicit multi-char delimiter it would mis-split
-            // the header and hand Spark wrong column names as a
-            // provided schema (permissive mode then silently pads
-            // every row) — fall through to Spark's own header naming
-            // instead (r15 ADVICE).
-            val sniffHeader = windowText
-              .filter(_ => delim.length == 1)
-              .filter(_ => lineSepFor(encoding).forall(_ == "\n"))
-              .flatMap { t =>
-              val scanned = scanWindow(t, if (delim.isEmpty) ',' else delim.head)
-              if (sniff.length == sniffBytes && scanned.fieldCounts.size < 2)
-                None
-              else Some(scanned.header)
-            }
-            dictZipColumns(readRaw(spark, csvPath, encoding, delim,
-              multi, sniffHeader = sniffHeader), windowText, delim, encoding)
+      Upload.Sniffed(encoding, () => Upload.Parsed.inferred(
+        if (alter) readRawEvolving(spark, csvPath, encoding, delim, multi)
+        else {
+          // header-as-schema guard: a window truncated at the sniff
+          // bound with no complete second record may hold a CUT
+          // header — providing it as schema would silently narrow
+          // the table. One complete data record proves the header
+          // ended inside the window.
+          // the window scanner only knows \n / \r\n record ends —
+          // a charset whose records terminate otherwise (cp1047's
+          // NEL) would yield the whole window as one giant
+          // "header", so only a plain-\n lineSep qualifies
+          // … and the window scanner splits on a single CHARACTER:
+          // with an explicit multi-char delimiter it would mis-split
+          // the header and hand Spark wrong column names as a
+          // provided schema (permissive mode then silently pads
+          // every row) — fall through to Spark's own header naming
+          // instead (r15 ADVICE).
+          val sniffHeader = windowText
+            .filter(_ => delim.length == 1)
+            .filter(_ => lineSepFor(encoding).forall(_ == "\n"))
+            .flatMap { t =>
+            val scanned = scanWindow(t, delimCh)
+            if (sniff.length == sniffBytes && scanned.fieldCounts.size < 2)
+              None
+            else Some(scanned.header)
           }
-        val (types, rows) = TypeInference.inferWithCount(raw)
-        val typed = TypeInference.applyTypes(raw, types)
-        // Live mid-load progress (reference updates every 10 rows,
-        // __init__.py:186-190): task metrics of the write job flow to
-        // _csv_progress_ while the load runs; complete() then records
-        // the exact totals.
-        new graft.catalog.ProgressReporter(db, taskId, resolved, bytesTodo,
-          progressIntervalMs).around {
-          db.write(typed, resolved, SaveMode.ErrorIfExists)
-        }
-        db.progress.complete(taskId, resolved, bytesTodo, rows)
-        UploadResult(db.name, resolved, taskId, rows, bytesTodo, encoding,
-          types, None)
-       }
-      }
-    } catch {
-      case e: Exception =>
-        db.progress.fail(taskId, resolved, String.valueOf(e.getMessage))
-        UploadResult(db.name, resolved, taskId, 0L, bytesTodo, "", Nil,
-          Some(String.valueOf(e.getMessage)))
+          dictZipColumns(readRaw(spark, csvPath, encoding, delim,
+            multi, sniffHeader = sniffHeader), windowText, delim)
+        }))
     }
-  }
 
   /** Batch upload with bounded parallelism — the shape a corpus
     * build actually ingests with (thousands of files per epoch; the
@@ -213,12 +186,12 @@ object CsvUploader {
     * the detected encoding AND the sniff window itself, so the
     * multiline probe reuses the same read.
     */
-  private[sources] def detectEncodingAndSniff(spark: SparkSession, csvPath: String,
+  private[graft] def detectEncodingAndSniff(spark: SparkSession, csvPath: String,
       sniffBytes: Int): (String, Array[Byte]) = {
     val p = new Path(csvPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = partFiles(fs, p)
-    val target = parts.headOption.getOrElse(p)
+    val target = partFiles(fs, p).headOption.getOrElse(
+      throw new IllegalArgumentException(s"no files to sniff in $csvPath"))
     val window = readWindow(fs, target, sniffBytes)
     (EncodingDetector.detectBytes(window,
       truncated = window.length == sniffBytes), window)
@@ -284,20 +257,12 @@ object CsvUploader {
     * micro-batch, long after start() returned — so the legacy
     * escape hatch is set STICKY on the session when the detected
     * charset needs it (it stays set for the query's lifetime, by
-    * design), and cp1252 — which the batch path decodes via the
-    * latin-1+translate trick — streams through Java's own
-    * windows-1252 charset under the same conf. Returns the charset
-    * name to hand the reader; throws (loudly, like the batch path)
-    * for the undecodable verdicts.
+    * design).
     */
-  private[graft] def streamingCharset(spark: SparkSession,
-      encoding: String): String = {
-    if (needsLegacyCharset(encoding) ||
-        encoding == EncodingDetector.Cp1252)
+  private[graft] def legacyCharsetsForStream(spark: SparkSession,
+      encoding: String): Unit =
+    if (needsLegacyCharset(encoding))
       spark.conf.set("spark.sql.legacy.javaCharsets", "true")
-    if (encoding == EncodingDetector.Cp1252) "windows-1252"
-    else sparkCharset(encoding)
-  }
 
   /** RFC 4180 quoted-newline scan: does the text contain a newline
     * INSIDE a quoted field? That is the one CSV shape Spark's default
@@ -382,12 +347,11 @@ object CsvUploader {
     */
   private[graft] def decodeSniff(encoding: String,
       sniff: Array[Byte]): Option[String] = {
-    val csName = encoding match {
-      case EncodingDetector.Cp1252 => "windows-1252"
-      case e => scala.util.Try(sparkCharset(e)).getOrElse(return None)
-    }
+    val csName = scala.util.Try(sparkCharset(encoding)).getOrElse(return None)
     scala.util.Try {
-      val t = new String(sniff, Charset.forName(csName))
+      val t0 = new String(sniff, Charset.forName(csName))
+      val t =
+        if (encoding == EncodingDetector.Cp1252) t0.map(cp1252Char) else t0
       // strip a decoded BOM (U+FEFF) — to the probes it is content
       // and would hide a quoted first header field from atFieldStart
       if (t.nonEmpty && t.charAt(0) == 65279.toChar) t.substring(1) else t
@@ -408,7 +372,7 @@ object CsvUploader {
   private[graft] def sniffDelimiter(text: String,
       truncated: Boolean): String = {
     val scored = DelimiterCandidates.map { d =>
-      val all = recordFieldCounts(text, d)
+      val all = scanWindow(text, d).fieldCounts
       // a truncated window's final record may be cut mid-field
       val counts = if (truncated && all.nonEmpty) all.init else all
       if (counts.size < 2) (d, 1, 0.0)
@@ -428,18 +392,16 @@ object CsvUploader {
       .headOption.map(_._1.toString).getOrElse(",")
   }
 
-  /** Fields per record under candidate delimiter `d` — see
-    * [[scanWindow]]. */
-  private def recordFieldCounts(text: String, d: Char): Seq[Int] =
-    scanWindow(text, d).fieldCounts
-
   /** cp1252 differs from latin-1 ONLY in 0x80–0x9F (27 defined
     * printables there: € ™ smart quotes Š Œ Ž …). Spark's CSV reader
-    * accepts a fixed charset list that excludes cp1252, so the
-    * distributed decode reads latin-1 — byte-lossless, each 0x8x/0x9x
-    * byte becomes the same-numbered C1 control char — and this
-    * translate projection remaps those code points. Exactly
-    * equivalent to a native cp1252 decode, and it stays in codegen.
+    * accepts a fixed charset list that excludes cp1252, so every cp1252
+    * decode — batch and streaming scans, and the sniff window — reads
+    * latin-1 (byte-lossless: each 0x8x/0x9x byte becomes the
+    * same-numbered C1 control char) and then remaps those code points
+    * ([[decodeCp1252]], [[cp1252Char]]). Exactly a native cp1252
+    * decode for every byte cp1252 defines; its five undefined codes
+    * keep their latin-1 code points (in the sniff window they make the
+    * detector answer latin-1 instead).
     */
   private lazy val (cp1252From, cp1252To) = {
     val defined = (0x80 to 0x9F)
@@ -453,6 +415,20 @@ object CsvUploader {
     if (i >= 0) cp1252To(i) else ch
   }
 
+  /** A frame read with `sparkCharset(encoding)`, decoded: for cp1252,
+    * column names remapped on the driver and every column through one
+    * `translate` projection — stateless and in codegen, so a stream
+    * takes it unchanged; any other charset passes through. */
+  private[graft] def decodeCp1252(df: DataFrame,
+      encoding: String): DataFrame =
+    if (encoding != EncodingDetector.Cp1252) df
+    else {
+      import org.apache.spark.sql.functions.{col, translate}
+      val renamed = df.toDF(df.columns.map(_.map(cp1252Char)): _*)
+      renamed.select(renamed.columns.map(c =>
+        translate(col(c), cp1252From, cp1252To).as(c)): _*)
+    }
+
   /** The reference's duplicate-header contract (`dict(zip(headers,
     * row))`, `__init__.py:180`): duplicate column names COLLAPSE —
     * the surviving column carries the LAST duplicate's values at the
@@ -465,14 +441,9 @@ object CsvUploader {
     * untouched; the evolving path keeps per-file union semantics.
     */
   private def dictZipColumns(df: DataFrame, windowText: Option[String],
-      delimiter: String, encoding: String): DataFrame = {
+      delimiter: String): DataFrame = {
     val d = if (delimiter.isEmpty) ',' else delimiter.head
-    val names0 = windowText.map(headerFields(_, d)).getOrElse(return df)
-    // cp1252 headers are decoded latin-1 and fixed up in readRaw —
-    // apply the same fix so the restored names match the data path
-    val names =
-      if (encoding == EncodingDetector.Cp1252) names0.map(_.map(cp1252Char))
-      else names0
+    val names = windowText.map(scanWindow(_, d).header).getOrElse(return df)
     // Duplicates detected CASE-INSENSITIVELY: Python's dict is
     // case-sensitive, but Spark's analyzer and the parquet writer are
     // not (default caseSensitive=false) — 'ID' and 'id' cannot
@@ -491,14 +462,8 @@ object CsvUploader {
     }: _*)
   }
 
-  /** First RFC 4180 record of the decoded window as unquoted fields
-    * (doubled quotes collapse; a quoted newline stays inside its
-    * field) — the header, for [[dictZipColumns]]'s duplicate check. */
-  private[graft] def headerFields(text: String, d: Char): Seq[String] =
-    scanWindow(text, d).header
-
   /** The charset to hand Spark's reader: cp1252 decodes as latin-1
-    * and is fixed up column-wise afterwards; a UTF-32BE file (always
+    * and is fixed up by [[decodeCp1252]]; a UTF-32BE file (always
     * BOM-detected) reads through the generic BOM-aware "UTF-32"
     * charset, the only 32-bit form Spark's CSV reader accepts.
     * UTF-32LE has NO correct distributed path: the reader would
@@ -534,14 +499,6 @@ object CsvUploader {
     case e => e
   }
 
-  /** Distributed parse with an all-string schema — inference is ours
-    * (§A3), never the CSV reader's.
-    *
-    * UTF-16 needs an explicit lineSep: without it Hadoop splits
-    * records on the raw 0x0A byte, cutting the 2-byte newline in
-    * half; with it Spark encodes "\n" in the declared charset and
-    * splits on the full sequence.
-    */
   /** Charsets outside Spark's default CSV allowlist, admitted through
     * the `spark.sql.legacy.javaCharsets` escape hatch. The CJK and
     * Cyrillic entries are split-safe for a distributed decode because
@@ -666,6 +623,27 @@ object CsvUploader {
     }
   }
 
+  /** The reader dialect of every CSV scan — the upload's, and the
+    * streaming twin's static sniff and stream: header row, all-string
+    * columns, the sniffed charset ([[sparkCharset]]) with its lineSep
+    * ([[lineSepFor]]), the delimiter, and RFC 4180 doubled-quote
+    * escaping, the reference csv.reader's default dialect
+    * (doublequote=True, no backslash escapes). Spark's own default
+    * escape is `\` — under it a quoted field containing `""hi""`
+    * tears mid-record. Setting the escape char to the quote char IS
+    * univocity's double-quote mode, and makes backslash a literal
+    * byte, matching Python exactly.
+    */
+  private[graft] def csvOptions(encoding: String,
+      delimiter: String): Map[String, String] =
+    Map("header" -> "true", "inferSchema" -> "false",
+      "encoding" -> sparkCharset(encoding), "sep" -> delimiter,
+      "escape" -> "\"") ++ lineSepFor(encoding).map("lineSep" -> _)
+
+  /** Distributed parse with an all-string schema — inference is ours
+    * (§A3), never the CSV reader's — in the [[csvOptions]] dialect,
+    * decoded by [[decodeCp1252]].
+    */
   private def readRaw(spark: SparkSession, csvPath: String,
       encoding: String, delimiter: String = ",",
       multiline: Boolean = false,
@@ -694,30 +672,13 @@ object CsvUploader {
             org.apache.spark.sql.types.StringType, nullable = true)))
       }
     val reader0 = spark.read
-      .option("header", "true")
-      .option("encoding", sparkCharset(encoding))
-      .option("sep", delimiter)
-      .option("inferSchema", "false")
-      // RFC 4180 doubled-quote escaping, the reference csv.reader's
-      // default dialect (doublequote=True, no backslash escapes).
-      // Spark's own default escape is `\` — under it a quoted field
-      // containing `""hi""` tears mid-record. Setting the escape char
-      // to the quote char IS univocity's double-quote mode, and makes
-      // backslash a literal byte, matching Python exactly.
-      .option("escape", "\"")
+      .options(csvOptions(encoding, delimiter))
       // A15: whole-file parse iff a quoted newline was detected (or
       // forced) — records may then span raw newlines, like the
       // reference's csv.reader
       .option("multiLine", multiline.toString)
     val reader = provided.fold(reader0)(reader0.schema)
-    val df = applyLineSep(reader, encoding).csv(csvPath)
-    if (encoding == EncodingDetector.Cp1252) {
-      import org.apache.spark.sql.functions.{col, translate}
-      // header names were decoded latin-1 too — fix them JVM-side
-      val renamed = df.toDF(df.columns.map(_.map(cp1252Char)): _*)
-      renamed.select(renamed.columns.map(c =>
-        translate(col(c), cp1252From, cp1252To).as(c)): _*)
-    } else df
+    decodeCp1252(reader.csv(csvPath), encoding)
   }
 
   /** Schema-evolving parse (SURVEY §2.A11): the reference's
@@ -736,17 +697,12 @@ object CsvUploader {
     import org.apache.spark.sql.functions.{col, lit}
     val p = new Path(csvPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files: Seq[Path] =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(_.isFile).map(_.getPath)
-          .filterNot(_.getName.startsWith("_")).sortBy(_.getName).toSeq
-      else Seq(p)
-    val perFile = files.map(f => f -> readRaw(spark, f.toString, encoding,
-      delimiter, multiline))
+    val perFile = partFiles(fs, p).map(f => readRaw(spark, f.toString,
+      encoding, delimiter, multiline))
     val unionCols = perFile.foldLeft(Vector.empty[String]) {
-      case (acc, (_, df)) => acc ++ df.columns.filterNot(acc.contains)
+      (acc, df) => acc ++ df.columns.filterNot(acc.contains)
     }
-    perFile.map { case (_, df) =>
+    perFile.map { df =>
       val have = df.columns.toSet
       df.select(unionCols.map(c =>
         if (have(c)) col(c) else lit(null: String).as(c)): _*)

@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, length => strlen, nullif, substring, trim}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -16,10 +15,11 @@ import graft.catalog.GraftDatabase
   * sniffable about the layout itself (the charset still is, via the
   * same ≤2 MiB window as CSV).
   *
-  * Contract mirrors [[CsvUploader.upload]] exactly where it can:
-  * same naming + `_2`/`_3` conflict suffixes, same `_csv_progress_`
-  * bookkeeping with live mid-load updates, same error capture, same
-  * one-pass distributed type inference and typed cast. Field
+  * Contract is [[CsvUploader.upload]]'s, through the same envelope
+  * ([[Upload]]): same naming + `_2`/`_3` conflict suffixes, same
+  * `_csv_progress_` bookkeeping with live mid-load updates, same error
+  * capture, same adaptive split size, same one-pass distributed type
+  * inference and typed cast. Field
   * semantics: each field is `substring(line, start, width)` then
   * trimmed (fixed-width pads with spaces — numbers right-aligned,
   * text left-aligned), and a trimmed-empty field is NULL (the
@@ -50,37 +50,12 @@ object FixedWidthUploader {
     require(spec.nonEmpty, "fixed-width upload needs a non-empty spec")
     require(spec.forall(_._2 > 0),
       s"fixed-width widths must be positive, got $spec")
-    val spark = db.spark
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = tableName.getOrElse(db.tableNameForFile(path))
-    val resolved = db.resolveTableName(base)
-    val started = java.time.Instant.now().toString
-
-    var bytesTodo = 0L
-    try {
-      bytesTodo = fs.getContentSummary(p).getLength
-      db.progress.start(taskId, resolved, bytesTodo, started)
+    Upload.run(db, path, tableName, Seq(".csv"), taskId,
+        progressIntervalMs) {
       val (encoding, _) =
-        CsvUploader.detectEncodingAndSniff(spark, path, sniffBytes)
-      CsvUploader.withLegacyCharsets(spark,
-        CsvUploader.needsLegacyCharset(encoding)) {
-        val raw = readFixed(spark, path, encoding, spec)
-        val (types, rows) = TypeInference.inferWithCount(raw)
-        val typed = TypeInference.applyTypes(raw, types)
-        new graft.catalog.ProgressReporter(db, taskId, resolved, bytesTodo,
-          progressIntervalMs).around {
-          db.write(typed, resolved, SaveMode.ErrorIfExists)
-        }
-        db.progress.complete(taskId, resolved, bytesTodo, rows)
-        CsvUploader.UploadResult(db.name, resolved, taskId, rows, bytesTodo,
-          encoding, types, None)
-      }
-    } catch {
-      case e: Exception =>
-        db.progress.fail(taskId, resolved, String.valueOf(e.getMessage))
-        CsvUploader.UploadResult(db.name, resolved, taskId, 0L, bytesTodo,
-          "", Nil, Some(String.valueOf(e.getMessage)))
+        CsvUploader.detectEncodingAndSniff(db.spark, path, sniffBytes)
+      Upload.Sniffed(encoding, () => Upload.Parsed.inferred(
+        readFixed(db.spark, path, encoding, spec)))
     }
   }
 
@@ -88,29 +63,31 @@ object FixedWidthUploader {
     * reader is the CSV reader with a non-occurring (U+0001) delimiter
     * and quoting disabled: that reuses §A1's whole charset + lineSep
     * dispatch (EBCDIC 0x15/0x25 terminators, UTF-16 charset-encoded
-    * newlines) without a second text-source implementation — Spark's
-    * `text` source reads UTF-8 only.
+    * newlines, cp1252's latin-1 read + remap) without a second
+    * text-source implementation — Spark's `text` source reads UTF-8
+    * only.
     */
   private[graft] def readFixed(spark: SparkSession, path: String,
-      encoding: String, spec: Seq[(String, Int)]): DataFrame = {
-    val reader = spark.read
-      .option("header", "false")
-      .option("encoding", CsvUploader.sparkCharset(encoding))
-      .option("sep", "\u0001")
-      .option("quote", "")
-      .option("inferSchema", "false")
-      .schema(lineSchema)
-    val lines = CsvUploader.applyLineSep(reader, encoding).csv(path)
-    project(lines, spec)
-  }
+      encoding: String, spec: Seq[(String, Int)]): DataFrame =
+    parse(spark.read.options(lineOptions(encoding)).schema(lineSchema)
+      .csv(path), encoding, spec)
+
+  /** The line reader's options: [[CsvUploader.sparkCharset]] and
+    * [[CsvUploader.lineSepFor]], one U+0001-separated column, no
+    * quoting, no header. */
+  private[graft] def lineOptions(encoding: String): Map[String, String] =
+    Map("header" -> "false", "inferSchema" -> "false",
+      "encoding" -> CsvUploader.sparkCharset(encoding), "sep" -> "\u0001",
+      "quote" -> "") ++ CsvUploader.lineSepFor(encoding).map("lineSep" -> _)
 
   private[graft] val lineSchema =
     StructType(Seq(StructField("__line", StringType)))
 
-  /** The substring projection over a one-column `__line` frame —
-    * shared by the batch read and the streaming twin (the projection
-    * is stateless, so it applies to a stream unchanged). */
-  private[graft] def project(lines: DataFrame,
+  /** The cp1252 decode and substring projection over a one-column
+    * `__line` frame read with [[lineOptions]] — shared by the batch
+    * read and the streaming twin (both are stateless, so they apply to
+    * a stream unchanged). */
+  private[graft] def parse(lines: DataFrame, encoding: String,
       spec: Seq[(String, Int)]): DataFrame = {
     val offsets = spec.scanLeft(1) { case (off, (_, w)) => off + w }
     val cols = spec.zip(offsets).map { case ((name, w), start) =>
@@ -121,6 +98,7 @@ object FixedWidthUploader {
     }
     // drop fully-empty physical lines (a trailing terminator is not a
     // record — the CSV reader's own blank-line behavior)
-    lines.filter(strlen(col("__line")) > 0).select(cols: _*)
+    CsvUploader.decodeCp1252(lines, encoding)
+      .filter(strlen(col("__line")) > 0).select(cols: _*)
   }
 }

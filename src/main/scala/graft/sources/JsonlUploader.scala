@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.catalog.GraftDatabase
 
@@ -21,71 +20,42 @@ import graft.catalog.GraftDatabase
   */
 object JsonlUploader {
 
-  case class UploadResult(
-      database: String,
-      tableName: String,
-      taskId: String,
-      rowsDone: Long,
-      bytesTodo: Long,
-      schema: Seq[(String, String)],
-      error: Option[String])
-
   /** The JSONL extension list for [[GraftDatabase.tableNameForFile]]
     * — one naming authority shared with the CSV path.
     */
   val Extensions: Seq[String] = Seq(".jsonl", ".json")
 
+  /** Upload through the shared envelope ([[Upload]]). The result's
+    * `encoding` and `types` are empty — the table's schema is
+    * `db.read(tableName).schema` — and `rowsDone` counts the written
+    * parquet. Line-delimited JSON is byte-splittable like CSV, so the
+    * inference pass and the load both take the adaptive split size.
+    */
   def upload(
       db: GraftDatabase,
       jsonlPath: String,
       tableName: Option[String] = None,
       taskId: String = java.util.UUID.randomUUID().toString,
-      progressIntervalMs: Long = 250L): UploadResult = {
-    val spark = db.spark
-    val p = new Path(jsonlPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = tableName.getOrElse(
-      db.tableNameForFile(jsonlPath, Extensions))
-    val resolved = db.resolveTableName(base)
-    val started = java.time.Instant.now().toString
-
-    // size lookup inside the error envelope, like the CSV path
-    var bytesTodo = 0L
-    try {
-      bytesTodo = fs.getContentSummary(p).getLength
-      db.progress.start(taskId, resolved, bytesTodo, started)
-      // line-delimited JSON is byte-splittable like CSV — same
-      // adaptive split sizing so the schema-inference pass and the
-      // load both use the cluster (r15 OPT; see CsvUploader)
-      CsvUploader.withAdaptiveSplits(spark, bytesTodo) {
-      val df = spark.read.json(jsonlPath)
-      if (df.schema.isEmpty)
-        throw new IllegalArgumentException(
-          s"no JSON records found under $jsonlPath")
-      // _corrupt_record appears when lines fail to parse — surface it
-      // as the loud error the CSV path's parse failures produce, not
-      // a silently half-typed table
-      if (df.schema.fieldNames.contains("_corrupt_record"))
-        throw new IllegalArgumentException(
-          s"malformed JSON lines under $jsonlPath (corrupt-record " +
-            "column present) — fix or drop the bad lines and re-upload")
-      new graft.catalog.ProgressReporter(db, taskId, resolved, bytesTodo,
-        progressIntervalMs).around {
-        db.write(df, resolved, SaveMode.ErrorIfExists)
-      }
-      // count the WRITTEN parquet (footer-stats scan), not the JSON —
-      // the input is read twice total (inference + load), like CSV
-      val rows = db.read(resolved).count()
-      db.progress.complete(taskId, resolved, bytesTodo, rows)
-      UploadResult(db.name, resolved, taskId, rows, bytesTodo,
-        df.schema.fields.toSeq.map(f => f.name -> f.dataType.simpleString),
-        None)
-      }
-    } catch {
-      case e: Exception =>
-        db.progress.fail(taskId, resolved, String.valueOf(e.getMessage))
-        UploadResult(db.name, resolved, taskId, 0L, bytesTodo, Nil,
-          Some(String.valueOf(e.getMessage)))
+      progressIntervalMs: Long = 250L): CsvUploader.UploadResult =
+    Upload.run(db, jsonlPath, tableName, Extensions, taskId,
+        progressIntervalMs) {
+      Upload.Sniffed("", () =>
+        Upload.Parsed(read(db.spark, jsonlPath), None, Nil))
     }
+
+  /** Spark's JSON read of `path` with its schema inferred (one
+    * distributed pass) — also the streaming twin's static sniff. No
+    * record, or a line that fails to parse (the `_corrupt_record`
+    * column), is a loud error, never a silently half-typed table.
+    */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame = {
+    val df = spark.read.json(path)
+    if (df.schema.isEmpty)
+      throw new IllegalArgumentException(s"no JSON records found under $path")
+    if (df.schema.fieldNames.contains("_corrupt_record"))
+      throw new IllegalArgumentException(
+        s"malformed JSON lines under $path (corrupt-record " +
+          "column present) — fix or drop the bad lines and re-upload")
+    df
   }
 }

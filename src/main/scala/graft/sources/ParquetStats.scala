@@ -12,6 +12,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
@@ -100,9 +101,30 @@ object ParquetStats {
     */
   def read(spark: SparkSession, path: String): DataFrame =
     footerSchema(spark, path) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case Some(schema) => read(spark, path, schema)
       case None         => spark.read.parquet(path)
     }
+
+  /** `spark.read.schema(schema).parquet(path)`, except that a directory
+    * whose name Spark's file index hides (`_csv_progress_`) is indexed
+    * directly: the reader logs `All paths were ignored` for such a root
+    * on every read, then reads it anyway. graft's underscore tables
+    * are flat, so their partition schema is empty.
+    */
+  private[graft] def read(spark: SparkSession, path: String,
+      schema: StructType): DataFrame = {
+    val root = new Path(path)
+    if (!hiddenByFileIndex(root.getName) ||
+        !root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .isDirectory(root))
+      spark.read.schema(schema).parquet(path)
+    else {
+      val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, Some(schema))
+      spark.baseRelationToDataFrame(HadoopFsRelation(index,
+        index.partitionSchema, schema, None, new ParquetFileFormat,
+        Map.empty)(spark))
+    }
+  }
 
   /** Every row of one parquet `file`, projected to the top-level
     * `columns`, read on the driver with parquet-hadoop's example
@@ -168,13 +190,14 @@ object ParquetStats {
       st: FileStatus): Option[FileStatus] =
     if (!st.isDirectory) Some(st)
     else fs.listStatus(st.getPath)
-      .filterNot { c =>
-        val n = c.getPath.getName
-        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
-          n.endsWith("._COPYING_")
-      }
+      .filterNot(c => hiddenByFileIndex(c.getPath.getName))
       .sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
       .iterator.flatMap(firstDataFile(fs, _)).nextOption()
+
+  /** The names Spark's file index hides. */
+  private def hiddenByFileIndex(n: String): Boolean =
+    (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+      n.endsWith("._COPYING_")
 
   /** The footer of one data file, row-group metadata included, read
     * without opening the file for its data. */

@@ -1,13 +1,18 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery, Trigger}
 
 import graft.catalog.GraftDatabase
 
-/** Shared exactly-once batch publish + resume-aware progress for the
-  * streaming ingest paths (CSV and JSONL — SURVEY §2.A9/G2).
+/** The one start of the streaming ingest paths (CSV, JSONL and
+  * fixed-width — SURVEY §2.A9/G2): resume-aware progress and an
+  * exactly-once batch publish. Each twin supplies only its source
+  * stream and the typing applied to every micro-batch.
   *
   * `foreachBatch` is only at-least-once (a batch replays if the write
   * succeeded but the checkpoint commit didn't), so a blind append
@@ -20,12 +25,34 @@ import graft.catalog.GraftDatabase
   */
 private[graft] object IngestPublish {
 
+  /** Start ingesting `source` (built on `db.spark.readStream`) into
+    * `table` under progress task `taskId`: the files on disk now, as
+    * AvailableNow micro-batches checkpointed at `_checkpoint_<table>`,
+    * each batch passed through `typing` and published exactly once.
+    * The caller drives the query (processAllAvailable /
+    * awaitTermination).
+    */
+  def start(db: GraftDatabase, table: String, taskId: String,
+      typing: DataFrame => DataFrame)(
+      source: DataStreamReader => DataFrame): StreamingQuery = {
+    val (maxSeqAtStart, counter) = resumeState(db, taskId, table)
+    source(db.spark.readStream)
+      .writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", db.tablePath(s"_checkpoint_$table"))
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        publishBatch(db, table, taskId, typing(batch), batchId,
+          maxSeqAtStart, counter)
+      }
+      .start()
+  }
+
   /** Resume state for `taskId`: (max published seq, cumulative-row
     * counter primed with the recorded rows_done). Starts the progress
     * row if the task has never run.
     */
-  def resumeState(db: GraftDatabase, taskId: String,
-      table: String): (Long, java.util.concurrent.atomic.AtomicLong) = {
+  private def resumeState(db: GraftDatabase, taskId: String,
+      table: String): (Long, AtomicLong) = {
     val (maxSeqAtStart, already): (Long, Long) =
       if (db.progress.exists)
         db.progress.current().filter(col("id") === taskId)
@@ -34,16 +61,15 @@ private[graft] object IngestPublish {
           .getOrElse((-1L, 0L))
       else (-1L, 0L)
     if (maxSeqAtStart < 0L) db.progress.start(taskId, table, bytesTodo = 0L)
-    (maxSeqAtStart,
-      new java.util.concurrent.atomic.AtomicLong(already))
+    (maxSeqAtStart, new AtomicLong(already))
   }
 
   /** Publish one (already typed) micro-batch idempotently and bump
     * progress unless the batch is a replay.
     */
-  def publishBatch(db: GraftDatabase, table: String, taskId: String,
-      typed: DataFrame, batchId: Long, maxSeqAtStart: Long,
-      counter: java.util.concurrent.atomic.AtomicLong): Unit = {
+  private def publishBatch(db: GraftDatabase, table: String,
+      taskId: String, typed: DataFrame, batchId: Long, maxSeqAtStart: Long,
+      counter: AtomicLong): Unit = {
     val n = publishFiles(db, table, typed, batchId)
     if (batchId + 1 > maxSeqAtStart) {
       val total = counter.addAndGet(n)

@@ -1,9 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.catalog.GraftDatabase
@@ -15,76 +12,45 @@ import graft.sources.{CsvUploader, EncodingDetector, TypeInference}
   * every 100, update `_csv_progress_` every 10).
   *
   * Micro-batches take the place of the 100-row insert batches: each
-  * `foreachBatch` publishes to the destination table and writes a
-  * progress row with cumulative counts; new CSV files dropped into
-  * the directory are picked up automatically. At scale this is the
-  * continuous-ingest topology: file-arrival-driven, state bounded by
-  * the file index.
-  *
-  * Exactly-once publish: `foreachBatch` is only at-least-once (a
-  * batch replays if the write succeeded but the checkpoint commit
-  * didn't), so a blind append would duplicate rows. Each batch is
-  * instead staged to a scratch dir and renamed into the table under a
-  * batchId-unique file prefix, with any files from an earlier attempt
-  * of the same batch deleted first — a replay therefore converges to
-  * exactly one copy of the batch no matter where the previous attempt
-  * died. Progress rows are keyed seq=batchId+1 and replayed batches
-  * at-or-below the resume point don't re-count.
+  * one publishes to the destination table exactly once and writes a
+  * progress row with cumulative counts ([[IngestPublish]]); new CSV
+  * files dropped into the directory are picked up automatically. At
+  * scale this is the continuous-ingest topology: file-arrival-driven,
+  * state bounded by the file index.
   */
 object StreamingCsvIngest {
 
-  /** Start ingesting `csvDir` into `db.table`. Schema and charset are
-    * sniffed from files already present (the reference likewise
-    * detects from the first bytes of the upload). Caller drives the
-    * query (processAllAvailable / awaitTermination).
+  /** Start ingesting `csvDir` into `db.table`. Charset and delimiter
+    * are sniffed from the first file's window and the header and type
+    * verdicts from the files already present, exactly as the batch
+    * upload sniffs them (the reference likewise detects from the first
+    * bytes of the upload); the stream reads with the batch upload's
+    * dialect ([[CsvUploader.csvOptions]]). Caller drives the query
+    * (processAllAvailable / awaitTermination).
     */
   def start(db: GraftDatabase, csvDir: String, table: String,
       taskId: String): StreamingQuery = {
     val spark = db.spark
-    val encoding = EncodingDetector.detect(spark, firstFile(spark, csvDir))
-    // legacy-charset conf + reader charset name (sticky for the
-    // query's lifetime — see CsvUploader.streamingCharset)
-    val charset = CsvUploader.streamingCharset(spark, encoding)
+    val sniffBytes = EncodingDetector.DefaultSniffBytes
+    val (encoding, sniff) =
+      CsvUploader.detectEncodingAndSniff(spark, csvDir, sniffBytes)
+    CsvUploader.legacyCharsetsForStream(spark, encoding)
+    val delimiter = CsvUploader.decodeSniff(encoding, sniff)
+      .map(CsvUploader.sniffDelimiter(_, truncated = sniff.length == sniffBytes))
+      .getOrElse(",")
+    val options = CsvUploader.csvOptions(encoding, delimiter)
 
     // Static sniff pass: header + type verdicts from what's on disk.
-    val staticRaw = CsvUploader.applyLineSep(spark.read
-      .option("header", "true").option("encoding", charset)
-      .option("inferSchema", "false")
-      .option("escape", "\""), encoding).csv(csvDir)
-    val types = TypeInference.infer(staticRaw)
+    val staticRaw = spark.read.options(options).csv(csvDir)
+    val types =
+      TypeInference.infer(CsvUploader.decodeCp1252(staticRaw, encoding))
     val stringSchema = StructType(
       staticRaw.columns.map(StructField(_, StringType, nullable = true)))
 
-    // Resume state + exactly-once publish live in [[IngestPublish]]
-    // (shared with the JSONL twin).
-    val (maxSeqAtStart, counter) =
-      IngestPublish.resumeState(db, taskId, table)
-
-    val reader = spark.readStream
-      .option("header", "true").option("encoding", charset)
-      // RFC 4180 doubled-quote escaping, matching the batch uploader
-      .option("escape", "\"")
-      .schema(stringSchema)
-    CsvUploader.lineSepFor(encoding)
-      .fold(reader)(reader.option("lineSep", _))
-      .csv(csvDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", db.tablePath(s"_checkpoint_$table"))
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        IngestPublish.publishBatch(db, table, taskId,
-          TypeInference.applyTypes(batch, types), batchId,
-          maxSeqAtStart, counter)
-      }
-      .start()
-  }
-
-  private[streaming] def firstFile(spark: SparkSession,
-      dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = CsvUploader.partFiles(fs, p)
-    require(files.nonEmpty, s"no files to sniff in $dir")
-    files.head.toString
+    IngestPublish.start(db, table, taskId,
+        TypeInference.applyTypes(_, types)) { reader =>
+      CsvUploader.decodeCp1252(
+        reader.options(options).schema(stringSchema).csv(csvDir), encoding)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.catalog.GraftDatabase
 import graft.sources.{CsvUploader, EncodingDetector, FixedWidthUploader, TypeInference}
@@ -14,9 +14,9 @@ import graft.sources.{CsvUploader, EncodingDetector, FixedWidthUploader, TypeInf
   *
   * The record parse is [[FixedWidthUploader]]'s verbatim: the CSV
   * reader as a charset-aware line reader (non-occurring delimiter,
-  * quoting disabled, §A1's lineSep dispatch) + the stateless
-  * substring projection — both apply to a stream unchanged. Type
-  * verdicts come from a static sniff pass over the files already
+  * quoting disabled, §A1's lineSep dispatch) + the stateless cp1252
+  * decode and substring projection — all apply to a stream unchanged.
+  * Type verdicts come from a static sniff pass over the files already
   * present, like the CSV twin.
   */
 object StreamingFixedWidthIngest {
@@ -25,43 +25,21 @@ object StreamingFixedWidthIngest {
       taskId: String, spec: Seq[(String, Int)]): StreamingQuery = {
     require(spec.nonEmpty, "fixed-width ingest needs a non-empty spec")
     val spark = db.spark
-    val encoding = EncodingDetector.detect(spark, firstFile(spark, dir))
-    // legacy-charset conf + reader charset name (sticky for the
-    // query's lifetime — the EBCDIC/CJK codepages A17 exists for
-    // need the escape hatch per micro-batch, which the batch path's
-    // scoped wrapper cannot provide)
-    val charset = CsvUploader.streamingCharset(spark, encoding)
+    val (encoding, _) = CsvUploader.detectEncodingAndSniff(spark, dir,
+      EncodingDetector.DefaultSniffBytes)
+    // the EBCDIC/CJK codepages A17 exists for need the escape hatch
+    // per micro-batch, and the static pass below runs under it too
+    CsvUploader.legacyCharsetsForStream(spark, encoding)
 
     // static sniff pass: type verdicts from what's on disk
     val types = TypeInference.infer(
       FixedWidthUploader.readFixed(spark, dir, encoding, spec))
 
-    val (maxSeqAtStart, counter) =
-      IngestPublish.resumeState(db, taskId, table)
-
-    val reader = spark.readStream
-      .option("header", "false")
-      .option("encoding", charset)
-      .option("sep", "\u0001")
-      .option("quote", "")
-      .schema(FixedWidthUploader.lineSchema)
-    val lines = CsvUploader.lineSepFor(encoding)
-      .fold(reader)(reader.option("lineSep", _))
-      .csv(dir)
-
-    FixedWidthUploader.project(lines, spec)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", db.tablePath(s"_checkpoint_$table"))
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        IngestPublish.publishBatch(db, table, taskId,
-          TypeInference.applyTypes(batch, types), batchId,
-          maxSeqAtStart, counter)
-      }
-      .start()
+    IngestPublish.start(db, table, taskId,
+        TypeInference.applyTypes(_, types)) { reader =>
+      FixedWidthUploader.parse(
+        reader.options(FixedWidthUploader.lineOptions(encoding))
+          .schema(FixedWidthUploader.lineSchema).csv(dir), encoding, spec)
+    }
   }
-
-  private def firstFile(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    StreamingCsvIngest.firstFile(spark, dir)
 }

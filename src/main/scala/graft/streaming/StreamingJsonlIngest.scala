@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.catalog.GraftDatabase
+import graft.sources.JsonlUploader
 
 /** Streaming JSONL ingest — the continuous form of
   * [[graft.sources.JsonlUploader]], exactly as
@@ -12,34 +13,17 @@ import graft.catalog.GraftDatabase
   * ([[IngestPublish]]).
   *
   * Streams require an explicit schema (no inference mid-stream), so
-  * the schema comes from a static pass over the files already
-  * present — later files must fit it (new fields need a restart,
-  * which re-infers; the batch uploader's native union covers the
-  * one-shot case).
+  * the schema comes from the batch uploader's read of the files
+  * already present — later files must fit it (new fields need a
+  * restart, which re-infers; the batch uploader's native union covers
+  * the one-shot case).
   */
 object StreamingJsonlIngest {
 
   def start(db: GraftDatabase, jsonlDir: String, table: String,
       taskId: String): StreamingQuery = {
-    val spark = db.spark
-    val schema = spark.read.json(jsonlDir).schema
-    require(schema.nonEmpty, s"no JSON records to sniff under $jsonlDir")
-    require(!schema.fieldNames.contains("_corrupt_record"),
-      s"malformed JSON lines under $jsonlDir — fix or drop them first")
-
-    val (maxSeqAtStart, counter) =
-      IngestPublish.resumeState(db, taskId, table)
-
-    spark.readStream
-      .schema(schema)
-      .json(jsonlDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", db.tablePath(s"_checkpoint_$table"))
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        IngestPublish.publishBatch(db, table, taskId, batch, batchId,
-          maxSeqAtStart, counter)
-      }
-      .start()
+    val schema = JsonlUploader.read(db.spark, jsonlDir).schema
+    IngestPublish.start(db, table, taskId, identity)(
+      _.schema(schema).json(jsonlDir))
   }
 }

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Rules on the library's own source: its defaults are constants, not
-  * environment reads, and it carries no probe programs or shims.
+  * environment reads, it carries no probe programs or shims, and the
+  * upload and streaming-ingest lifecycles are each written once.
   * Operators take their gates as parameters, and a session setting is
   * overridden with `.config(key, value)` after `GraftSession.configure`.
   */
@@ -38,6 +39,22 @@ class SourceScanSpec extends AnyFunSuite {
   test("graft/tools holds at most two programs") {
     val tools = new java.io.File("src/main/scala/graft/tools").list()
     assert(tools.length <= 2, tools.sorted.mkString(", "))
+  }
+
+  test("only the upload envelope runs the batch upload lifecycle") {
+    val lifecycle =
+      """progress\s*\.\s*(start|complete|fail)\s*\(|new\s+(graft\.catalog\.)?ProgressReporter\b""".r
+    val sites = scalaFiles("src/main/scala/graft/sources")
+      .filter(f => lifecycle.findFirstIn(text(f)).isDefined).map(_.getName)
+    assert(sites == Seq("Upload.scala"), sites.mkString(", "))
+  }
+
+  test("only IngestPublish starts a streaming ingest query") {
+    val start = """\.\s*(writeStream|foreachBatch)\b""".r
+    val sites = scalaFiles("src/main/scala/graft/streaming")
+      .filter(_.getName.contains("Ingest"))
+      .filter(f => start.findFirstIn(text(f)).isDefined).map(_.getName)
+    assert(sites == Seq("IngestPublish.scala"), sites.mkString(", "))
   }
 
   test("no probe shim remains under graft/operators") {

@@ -966,6 +966,52 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     graft.sources.FixedWidthUploader.upload(db2, fwDir, spec, Some("b"))
     assert(db.read("ledger").except(db2.read("b")).count() == 0)
     assert(db2.read("b").except(db.read("ledger")).count() == 0)
+    // … and for a cp1252 file: both parses hold € and the smart quotes,
+    // not the latin-1 C1 controls their bytes are under ISO-8859-1
+    val cpDir = s"$dir/incoming_cp1252"
+    Files.createDirectories(Paths.get(cpDir))
+    val cpRows = Seq((1L, "€ “q” ™", 5L), (22L, "“smart”", 1250L))
+    val cpBytes = cpRows.map { case (id, name, amt) =>
+      f"$id%4d${name.padTo(8, ' ')}$amt%6d\n" }.mkString
+      .getBytes(java.nio.charset.Charset.forName("windows-1252"))
+    assert(graft.sources.EncodingDetector.detectBytes(cpBytes) ==
+      graft.sources.EncodingDetector.Cp1252)
+    Files.write(Paths.get(s"$cpDir/part1.dat"), cpBytes)
+    val q3 = graft.streaming.StreamingFixedWidthIngest.start(
+      db, cpDir, "ledger_cp", "task-fw2", spec)
+    try q3.processAllAvailable() finally q3.stop()
+    val rb = graft.sources.FixedWidthUploader.upload(db2, cpDir, spec,
+      Some("b_cp"))
+    assert(rb.error.isEmpty && rb.encoding == "windows-1252", rb)
+    val batchRows = db2.read("b_cp").orderBy(col("id")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    assert(batchRows.toSeq == cpRows)
+    assert(db.read("ledger_cp").except(db2.read("b_cp")).count() == 0)
+    assert(db2.read("b_cp").except(db.read("ledger_cp")).count() == 0)
+  }
+
+  test("G2: streaming CSV ingest sniffs the delimiter like the batch upload (A16)") {
+    val dir = scratch("stream_tsv")
+    val tsvDir = s"$dir/incoming"
+    Files.createDirectories(Paths.get(tsvDir))
+    Files.write(Paths.get(s"$tsvDir/part1.tsv"),
+      "name\tage\tnote\nCleo\t5\ta, b\nPancakes\t4\tc\n".getBytes)
+    Files.write(Paths.get(s"$tsvDir/part2.tsv"),
+      "name\tage\tnote\nRex\t3\t\n".getBytes)
+    val db = GraftDatabase(spark, s"$dir/db")
+    val q = StreamingCsvIngest.start(db, tsvDir, "dogs", "task-tsv")
+    try q.processAllAvailable() finally q.stop()
+    val res = graft.sources.CsvUploader.upload(db, tsvDir, Some("dogs_batch"))
+    assert(res.error.isEmpty, res.error)
+    val streamed = db.read("dogs")
+    val batch = db.read("dogs_batch")
+    assert(streamed.schema.map(f => f.name -> f.dataType) ==
+      batch.schema.map(f => f.name -> f.dataType))
+    assert(streamed.columns.toSeq == Seq("name", "age", "note"))
+    assert(streamed.schema("age").dataType.simpleString == "bigint")
+    assert(streamed.count() == 3)
+    assert(streamed.except(batch).count() == 0)
+    assert(batch.except(streamed).count() == 0)
   }
 
   test("G2: streaming fixed-width ingest decodes a cp037 EBCDIC stream") {

@@ -1,0 +1,116 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+
+import graft.catalog.GraftDatabase
+import graft.sources.{CsvUploader, FixedWidthUploader, JsonlUploader}
+
+/** The one batch upload envelope, seen through all three formats: a
+  * failure lands in `_csv_progress_.error` and leaves no table, and
+  * reading the progress log is quiet.
+  */
+class UploadEnvelopeSpec extends AnyFunSuite with SparkTestBase {
+
+  private val ids = 1 to 300
+
+  /** A format: file extension, a well-formed body of `ids`, and its
+    * upload of (db, path, table). */
+  private case class Format(name: String, ext: String, body: String,
+      upload: (GraftDatabase, String, String) => CsvUploader.UploadResult)
+
+  private val formats = Seq(
+    Format("csv", "csv", ids.map(i => s"$i,n$i").mkString("id,name\n", "\n", "\n"),
+      (db, p, t) => CsvUploader.upload(db, p, Some(t))),
+    Format("jsonl", "jsonl",
+      ids.map(i => s"""{"id": $i, "name": "n$i"}""").mkString("", "\n", "\n"),
+      (db, p, t) => JsonlUploader.upload(db, p, Some(t))),
+    Format("fixed-width", "dat",
+      ids.map(i => f"$i%4d" + s"n$i".padTo(6, ' ')).mkString("", "\n", "\n"),
+      (db, p, t) => FixedWidthUploader.upload(db, p,
+        Seq(("id", 4), ("name", 6)), Some(t))))
+
+  private def gzip(bytes: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(out)
+    try gz.write(bytes) finally gz.close()
+    out.toByteArray
+  }
+
+  /** Each fault writes its input under `dir` and returns its path. */
+  private val faults: Seq[(String, (String, Format) => String)] = Seq(
+    "missing path" -> ((dir, f) => s"$dir/missing.${f.ext}"),
+    "truncated .gz" -> { (dir, f) =>
+      val gz = gzip(f.body.getBytes("UTF-8"))
+      val p = s"$dir/truncated.${f.ext}.gz"
+      Files.write(Paths.get(p), java.util.Arrays.copyOf(gz, gz.length / 2))
+      p
+    })
+
+  for (f <- formats; (fault, input) <- faults)
+    test(s"${f.name} upload, $fault: error in _csv_progress_, no table, name reusable") {
+      val dir = scratch(s"envelope_${f.ext}_${fault.replaceAll("\\W+", "_")}")
+      val db = GraftDatabase(spark, s"$dir/db")
+      val bad = f.upload(db, input(dir, f), "t")
+      assert(bad.error.isDefined, s"no error for $bad")
+      assert(bad.tableName == "t" && bad.rowsDone == 0L)
+      val rows = db.progress.current().filter(col("id") === bad.taskId).collect()
+      assert(rows.length == 1)
+      assert(rows.head.getAs[String]("error") == bad.error.get)
+      assert(rows.head.isNullAt(rows.head.fieldIndex("completed")))
+      assert(!db.tableExists("t"), "a failed upload left a table dir")
+      val goodPath = s"$dir/good.${f.ext}"
+      Files.write(Paths.get(goodPath), f.body.getBytes("UTF-8"))
+      val good = f.upload(db, goodPath, "t")
+      assert(good.error.isEmpty, good.error)
+      assert(good.tableName == "t" && good.rowsDone == ids.size.toLong)
+      assert(db.read("t").count() == ids.size.toLong)
+    }
+
+  private def warnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "envelope-spec", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        logged.add(s"${e.getLevel} ${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val ctx = LoggerContext.getContext(false)
+    ctx.getConfiguration.getRootLogger.addAppender(appender, null, null)
+    ctx.updateLoggers()
+    try (body, logged.asScala.toSeq)
+    finally {
+      ctx.getConfiguration.getRootLogger.removeAppender("envelope-spec")
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
+  test("an upload, current() and SQL over _csv_progress_ log no ignored-path warning") {
+    val dir = scratch("envelope_quiet")
+    val db = GraftDatabase(spark, s"$dir/db")
+    Files.write(Paths.get(s"$dir/dogs.csv"), "name,age\nCleo,5\nRex,3\n".getBytes)
+    val ((current, sqlRows), logged) = warnings {
+      assert(CsvUploader.upload(db, s"$dir/dogs.csv").error.isEmpty)
+      (db.progress.current().collect(),
+        db.sql("SELECT * FROM _csv_progress_").collect())
+    }
+    val noise = logged.filter(_.contains("All paths were ignored"))
+    assert(noise.isEmpty, noise.mkString("\n"))
+    assert(current.length == 1 && current.head.getAs[Long]("rows_done") == 2L)
+    // the SQL surface is still the whole event log: every row of the
+    // log's data files, read by name
+    val files = new java.io.File(db.tablePath("_csv_progress_")).listFiles()
+      .map(_.getPath).filter(_.endsWith(".parquet")).toSeq
+    val log = spark.read.parquet(files: _*)
+    assert(db.sql("SELECT * FROM _csv_progress_").schema == log.schema)
+    assert(sqlRows.toSeq.map(_.toString).sorted ==
+      log.collect().toSeq.map(_.toString).sorted)
+  }
+}
