@@ -173,6 +173,10 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
   private def bucketedIdent(table: String): String =
     s"$bucketedPrefix$table".replaceAll("[^A-Za-z0-9_]", "_")
 
+  /** Drop `table`'s bucketed catalog entry, if any; its files stay. */
+  private[graft] def unregisterBucketed(table: String): Unit =
+    spark.sql(s"DROP TABLE IF EXISTS ${bucketedIdent(table)}")
+
   /** Write a table hash-bucketed (and sorted) by `bucketCol`:
     * repeated joins/aggregations on that key then read the
     * co-located layout and skip their exchanges entirely — the
@@ -182,7 +186,7 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
     */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
       nBuckets: Int): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${bucketedIdent(table)}")
+    unregisterBucketed(table)
     // One file per bucket: bucket id = pmod(Murmur3(col), n) — the
     // SAME function repartition(n, col) shuffles by — so after the
     // repartition each write task holds exactly one bucket's rows.
@@ -206,13 +210,14 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
   def readBucketed(table: String): DataFrame =
     spark.table(bucketedIdent(table))
 
-  /** Invalidate the cached file listing after files were added to a
-    * bucketed table's location outside the writer path (the G10
-    * rename-append) — a planned scan otherwise misses them.
-    */
+  /** Drop the cached relation, and its file listing, after files were
+    * added to a bucketed table's location outside the writer path (the
+    * G10 rename-append): a planned scan otherwise misses them. No
+    * bucketed table is cached as data, so unlike `refreshTable` this
+    * re-lists nothing now (~25 ms a table); the next query does. */
   def refreshBucketed(table: String): Unit =
-    if (spark.catalog.tableExists(bucketedIdent(table)))
-      spark.catalog.refreshTable(bucketedIdent(table))
+    spark.sessionState.catalog.invalidateCachedTable(
+      org.apache.spark.sql.catalyst.TableIdentifier(bucketedIdent(table)))
 
   /** Re-attach an existing bucketed layout to THIS session's catalog
     * without rewriting a byte: the bucket metadata lives in the
@@ -224,13 +229,20 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
     * the layout, so a missing one is a fault, not an empty table.
     */
   def registerBucketed(table: String, bucketCol: String,
-      nBuckets: Int): Unit = {
+      nBuckets: Int): Unit =
+    registerBucketed(table, bucketCol, nBuckets, read(table).schema)
+
+  /** [[registerBucketed]] with the `schema` of a table that may hold
+    * no data file (a bucketed write of no rows writes none). */
+  private[graft] def registerBucketed(table: String, bucketCol: String,
+      nBuckets: Int, schema: => org.apache.spark.sql.types.StructType): Unit = {
     val ident = bucketedIdent(table)
     if (!spark.catalog.tableExists(ident)) {
       if (!fs.exists(new Path(tablePath(table))))
         throw new IllegalStateException(
           s"no bucketed layout at ${tablePath(table)}")
-      val columns = read(table).schema.toDDL
+      val columns = graft.sources.ParquetStats
+        .footerSchema(spark, tablePath(table)).getOrElse(schema).toDDL
       spark.sql(
         s"""CREATE TABLE $ident ($columns) USING PARQUET
            |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)

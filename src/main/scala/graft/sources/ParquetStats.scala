@@ -205,6 +205,10 @@ object ParquetStats {
     ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, conf),
       ParquetMetadataConverter.NO_FILTER)
 
+  /** The row count one data file's footer records. */
+  private[graft] def footerRowCount(st: FileStatus, conf: Configuration): Long =
+    footerOf(st, conf).getBlocks.asScala.map(_.getRowCount).sum
+
   /** Shared footer walker: fold `f` over every column chunk of every
     * parquet file under `dir` (recursive listing, `_`/`.` entries
     * skipped). `f` returns None to abort — the whole fold becomes
@@ -283,7 +287,7 @@ object ParquetStats {
             !name.startsWith("_") && !name.startsWith(".")) {
           files += 1
           if (files > maxFiles) return None
-          total += footerOf(st, conf).getBlocks.asScala.map(_.getRowCount).sum
+          total += footerRowCount(st, conf)
         }
       }
       countMemo.put(key, total)

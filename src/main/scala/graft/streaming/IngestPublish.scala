@@ -81,9 +81,10 @@ private[graft] object IngestPublish {
   /** The progress-free core: stage `df` and rename its files into
     * `table` under a batchId-unique prefix, deleting any files from
     * an earlier attempt of the same batch first — a replay converges
-    * to exactly one copy. Returns the staged row count (parquet
-    * footer scan, no source recompute). Shared by ingest progress
-    * publishing and the index-maintenance appends (D10).
+    * to exactly one copy. Returns the staged row count, summed from
+    * the staged files' footers on the driver: no Spark job, no source
+    * recompute. Shared by ingest progress publishing and the
+    * index-maintenance appends (D10).
     */
   def publishFiles(db: GraftDatabase, table: String, df: DataFrame,
       batchId: Long): Long = {
@@ -94,7 +95,9 @@ private[graft] object IngestPublish {
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(staging, true)
     df.write.mode("overwrite").parquet(staging.toString)
-    val n = spark.read.parquet(staging.toString).count()
+    val conf = spark.sessionState.newHadoopConf()
+    val n = fs.listStatus(staging).filter(_.getPath.getName.endsWith(".parquet"))
+      .map(graft.sources.ParquetStats.footerRowCount(_, conf)).sum
     moveUnderPrefix(fs, staging, dest, batchId)
     fs.delete(staging, true)
     n
@@ -113,7 +116,7 @@ private[graft] object IngestPublish {
     * the restart replays it and the earlier-attempt delete converges
     * to exactly one copy.
     */
-  private[streaming] def moveUnderPrefix(
+  def moveUnderPrefix(
       fs: org.apache.hadoop.fs.FileSystem, staging: Path, dest: Path,
       batchId: Long): Unit = {
     val prefix = f"b$batchId%019d-"

@@ -16,10 +16,12 @@ import graft.operators.TextIndex
 import graft.sources.ParquetStats
 import graft.streaming.StreamingTextIndex
 
-/** The driver tier of `StreamingTextIndex.appendBatch`: the files it
-  * writes hold the rows, schema and Spark metadata of the Spark tier's
-  * file for the same bucket, searches over either serve bit-equal, a
-  * replay converges, and the append launches at most one Spark job. */
+/** The driver tier of the text index's one writer, for appends
+  * (`StreamingTextIndex.appendBatch`) and base builds (batch −1 of
+  * `TextIndex.buildIndex`): the files it writes hold the rows, schema
+  * and Spark metadata of the Spark tier's file for the same bucket,
+  * searches over either serve bit-equal, a replay converges, and the
+  * write launches at most one Spark job. */
 class DriverAppendSpec extends AnyFunSuite with SparkTestBase {
 
   private val Driver = Long.MaxValue // a budget every batch fits
@@ -66,17 +68,21 @@ class DriverAppendSpec extends AnyFunSuite with SparkTestBase {
     case other => fail(s"unexpected key types $other")
   }
 
-  /** Append `batch` into fresh dbs through each tier and compare the
-    * published files bucket by bucket. */
-  private def assertSameFiles(name: String, batch: DataFrame): Unit = {
-    val dbs = Seq(Driver, Spark).map { budget =>
+  /** Write one batch into a fresh db through each tier, by
+    * `write(db, budget)` at the driver's `driverBudget` and at the
+    * Spark tier's, and compare the files the batch published bucket by
+    * bucket. The driver side must take one Spark job at most. */
+  private def assertSameFiles(name: String, batchId: Long, driverBudget: Long)(
+      write: (GraftDatabase, Long) => Unit): Unit = {
+    val dbs = Seq(driverBudget, Spark).map { budget =>
       val db = GraftDatabase(spark, scratch(s"driver_append_$name$budget"))
-      StreamingTextIndex.appendBatch(db, "idx", batch, Buckets, 7L, budget)
+      val (_, jobs) = jobsLaunchedBy(write(db, budget))
+      if (budget != Spark) assert(jobs <= 1, s"$name: the driver tier ran $jobs jobs")
       db
     }
     val Seq(onDriver, onSpark) = dbs
     for (t <- tables) {
-      val (d, s) = (batchFiles(onDriver, t, 7L), batchFiles(onSpark, t, 7L))
+      val (d, s) = (batchFiles(onDriver, t, batchId), batchFiles(onSpark, t, batchId))
       assert(d.keySet == s.keySet, s"$name $t: buckets differ")
       for ((bucket, file) <- d) {
         val what = s"$name $t bucket $bucket"
@@ -94,23 +100,99 @@ class DriverAppendSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("driver append: each file holds the rows of the Spark tier's file for its bucket") {
-    for (dir <- oracleSets) {
-      val all = docs(dir)
-      assertSameFiles("sf" + dir.last, all.filter(col("doc_id") % 3 === 0))
-    }
-  }
+  /** [[assertSameFiles]] for `batch` appended as batch 7. */
+  private def assertSameAppend(name: String, batch: DataFrame): Unit =
+    assertSameFiles(name, 7L, Driver)((db, budget) =>
+      StreamingTextIndex.appendBatch(db, "idx", batch, Buckets, 7L, budget))
 
-  test("driver append: empty batch, NULL and empty text, repeated and ubiquitous terms") {
+  /** [[assertSameFiles]] for a base build of `docs` (batch −1), the
+    * driver side at the writer's default budget. */
+  private def assertSameBuild(name: String, docs: DataFrame): Unit =
+    assertSameFiles(s"build_$name", TextIndex.BaseBatch, ResidentArtifact.budget)(
+      (db, budget) => TextIndex.buildIndex(db, "idx", docs, Buckets, budget))
+
+  /** The edge frames: NULL, empty and blank text, a NULL doc_id,
+    * repeated and ubiquitous terms; long and string doc_ids; no rows;
+    * only blank texts. */
+  private def edgeFrames: Seq[(String, DataFrame)] = {
     import spark.implicits._
     val edge = Seq[(java.lang.Long, String)]((1L, "a a b a"), (2L, null),
       (3L, ""), (4L, "a c  a"), (5L, "   "), (null, "a z"), (6L, "b a é"))
     val longIds = edge.toDF("doc_id", "text")
-    assertSameFiles("edge", longIds)
-    assertSameFiles("edge_str", longIds.select(col("doc_id").cast("string")
-      .as("doc_id"), col("text")))
-    assertSameFiles("empty", longIds.limit(0))
-    assertSameFiles("empty_text", Seq((1L, ""), (2L, " ")).toDF("doc_id", "text"))
+    Seq("edge" -> longIds,
+      "edge_str" -> longIds.select(col("doc_id").cast("string").as("doc_id"),
+        col("text")),
+      "empty" -> longIds.limit(0),
+      "empty_text" -> Seq((1L, ""), (2L, " ")).toDF("doc_id", "text"))
+  }
+
+  test("driver append: each file holds the rows of the Spark tier's file for its bucket") {
+    for (dir <- oracleSets) {
+      val all = docs(dir)
+      assertSameAppend("sf" + dir.last, all.filter(col("doc_id") % 3 === 0))
+    }
+  }
+
+  test("driver append: empty batch, NULL and empty text, repeated and ubiquitous terms") {
+    for ((name, frame) <- edgeFrames) assertSameAppend(name, frame)
+  }
+
+  test("base build: the driver tier's batch -1 files hold the rows of the Spark tier's, on the oracle datasets and the edge frames") {
+    for (dir <- oracleSets) assertSameBuild("sf" + dir.last, docs(dir))
+    for ((name, frame) <- edgeFrames) assertSameBuild(name, frame)
+  }
+
+  test("base build: the Spark tier derives _df from the staged postings with no exchange") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
+        case u: org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.add(u.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    val db = GraftDatabase(spark, scratch("driver_append_df_plan"))
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      TextIndex.buildIndex(db, "idx", docs(sf), Buckets, Spark)
+      org.apache.spark.GraftListenerBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    val dfPlans = plans.asScala.toSeq.filter(_.contains("_staging_idx_df"))
+    assert(dfPlans.nonEmpty, plans.asScala.mkString("\n----\n").take(4000))
+    dfPlans.foreach(p => assert(!p.contains("Exchange"), p.take(4000)))
+    // the stage's catalog entries are gone, its files published
+    assert(!spark.catalog.listTables().collect().exists(_.name.contains("staging")))
+    assert(!new java.io.File(db.tablePath("_staging_idx_df")).exists())
+  }
+
+  test("base build: a same-session rebuild that changes doc_id's type serves from the new schema") {
+    import spark.implicits._
+    for (budget <- Seq(ResidentArtifact.budget, Spark)) {
+      val db = GraftDatabase(spark, scratch(s"driver_append_retype$budget"))
+      val longIds = Seq((1L, "alpha beta"), (2L, "beta gamma beta"))
+        .toDF("doc_id", "text")
+      TextIndex.buildIndex(db, "idx", longIds, Buckets, budget)
+      assert(TextIndex.searchAll(db, "idx", Seq("beta")).collect()
+        .map(_.getLong(0)).toSet == Set(1L, 2L))
+      val strIds = Seq(("a", "beta delta"), ("b", "gamma"), ("c", "beta beta"))
+        .toDF("doc_id", "text")
+      TextIndex.buildIndex(db, "idx", strIds, Buckets, budget)
+      for (t <- Seq("idx", "idx_len"))
+        assert(db.readBucketed(t).schema("doc_id").dataType ==
+          org.apache.spark.sql.types.StringType, s"$budget $t")
+      assert(TextIndex.searchAll(db, "idx", Seq("beta")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap ==
+        Map("a" -> 1L, "c" -> 2L), s"$budget")
+      assert(TextIndex.searchRanked(db, "idx", Seq("beta"), 10).collect()
+        .map(_.getString(0)).toSeq == Seq("c", "a"), s"$budget")
+      assert(db.read("idx_corpus").collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq == Seq((-1L, 3L, 5L)))
+    }
   }
 
   private def served(db: GraftDatabase, qs: Seq[Seq[String]]) = qs.map { q =>

@@ -18,10 +18,11 @@ import graft.streaming.StreamingTextIndex
   * has yet to run its job. */
 class FailLenWritesCommitter(out: org.apache.hadoop.fs.Path,
     ctx: TaskAttemptContext) extends ParquetOutputCommitter(out, ctx) {
+  // the index's writes stage into `_staging_<table>/<batchId>`
   override def setupJob(job: JobContext): Unit = {
-    if (out.getName.endsWith("_len"))
+    if (out.getParent.getName.endsWith("_len"))
       throw new java.io.IOException(s"forced failure writing $out")
-    if (out.getName.endsWith("_df")) Thread.sleep(1000)
+    if (out.getParent.getName.endsWith("_df")) Thread.sleep(1000)
     super.setupJob(job)
   }
 }
@@ -188,12 +189,16 @@ class ResidentServingSpec extends AnyFunSuite with SparkTestBase {
     s.conf.set("spark.sql.parquet.output.committer.class",
       classOf[FailLenWritesCommitter].getName)
     val db = GraftDatabase(s, scratch("resident_build_fail"))
+    // the Spark tier, whose `_len`, `_df` and `_corpus` writes run
+    // concurrently
     val err = intercept[Exception](
-      TextIndex.buildIndex(db, "idx", sessionDocs(s), 4))
+      TextIndex.buildIndex(db, "idx", sessionDocs(s), 4, Off))
     // read at once: a write still running past the throw has not
-    // committed yet
+    // committed yet. The staged output is probed: a failed batch
+    // publishes nothing, and a publish moves only the data files.
     val committed = Seq("idx_df", "idx_corpus").map(t =>
-      new java.io.File(db.tablePath(t), "_SUCCESS").exists())
+      new java.io.File(db.tablePath(s"_staging_$t/${TextIndex.BaseBatch}"),
+        "_SUCCESS").exists())
     assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
       .exists(e => String.valueOf(e.getMessage).contains("forced failure")), err)
     assert(committed == Seq(true, true),

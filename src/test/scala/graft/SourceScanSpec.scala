@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Rules on the library's own source: its defaults are constants, not
   * environment reads, it carries no probe programs or shims, and the
-  * upload and streaming-ingest lifecycles are each written once.
+  * upload and streaming-ingest lifecycles and the text index's writer
+  * are each written once.
   * Operators take their gates as parameters, and a session setting is
   * overridden with `.config(key, value)` after `GraftSession.configure`.
   */
@@ -55,6 +56,18 @@ class SourceScanSpec extends AnyFunSuite {
       .filter(_.getName.contains("Ingest"))
       .filter(f => start.findFirstIn(text(f)).isDefined).map(_.getName)
     assert(sites == Seq("IngestPublish.scala"), sites.mkString(", "))
+  }
+
+  test("one writer writes the text index") {
+    val write = """\b(saveAsTable|writeBucketed|prepareWrite)\s*\(""".r
+    val sites = Seq("operators/TextIndex.scala",
+        "streaming/StreamingTextIndex.scala")
+      .map(p => new java.io.File(s"src/main/scala/graft/$p"))
+      .filter(f => write.findFirstIn(text(f)).isDefined).map(_.getName)
+    assert(sites == Seq("TextIndex.scala"), sites.mkString(", "))
+    val stale = scalaFiles("src/main").filter(f =>
+      text(f).contains("batchArtifacts")).map(_.getName)
+    assert(stale.isEmpty, stale.mkString(", "))
   }
 
   test("no probe shim remains under graft/operators") {

@@ -415,6 +415,19 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(db.read("pq_results").count() == pqWant.count())
   }
 
+  test("publishFiles counts the staged rows from their footers: the write is its only job") {
+    val db = graft.catalog.GraftDatabase(spark, scratch("publish_jobs") + "/db")
+    // three write tasks, so three staged files to count
+    val batch = spark.range(0, 250, 1, 3).selectExpr("id", "concat('r', id) AS v")
+    for (attempt <- Seq("first", "replay")) {
+      val (n, jobs) = jobsLaunchedBy(
+        graft.streaming.IngestPublish.publishFiles(db, "pub", batch, 0L))
+      assert(n == 250L, attempt)
+      assert(jobs == 1, s"$attempt: the publish launched $jobs jobs")
+    }
+    assert(db.read("pub").count() == 250L)
+  }
+
   test("G11: streamed LM scores equal the batch served scores") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
