@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
 /** Release persisted intermediates without leaking them for the
   * session lifetime (operators return lazy DataFrames, so they cannot
@@ -47,6 +48,20 @@ object CacheHygiene {
     * so retirement rides the next completed action of ANY query.
     */
   private val StaleRetireNs = 30L * 60 * 1000 * 1000 * 1000
+
+  /** `df` persisted MEMORY_AND_DISK, unless its plan is cached
+    * already. Spark keys its cache by plan, and an operator's cache is
+    * released only after the listener bus delivers its consuming
+    * action (or never, for a frame only planned), so a second operator
+    * over the same plan (the embeddings vectors, a corpus's shingle
+    * hashes) would otherwise persist it again: Spark ignores that and
+    * logs `Asked to cache already cached data`. The earlier persist
+    * serves both, and the newer [[unpersistAfterUse]] registration
+    * owns its release.
+    */
+  def persist(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else df.persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Arrange for `cached` (already persisted by the caller) to be
     * unpersisted after the next completed action that consumes it.

@@ -7,7 +7,12 @@ import org.apache.spark.sql.SparkSession
   * [[configure]] applies the settings every timed and checked run
   * uses (Bench, Verify, the specs, the flow benchmark): AQE with
   * byte-sized coalescing, the broadcast threshold, no automatic
-  * bucketed-scan pruning, UTC, nanosecond timestamps as longs.
+  * bucketed-scan pruning, UTC, nanosecond timestamps as longs, and
+  * [[catalog.NoForkLocalFileSystem]] for `file:` paths, so a local
+  * file or directory the engine creates sets its mode with a syscall
+  * instead of forking `chmod`. Hadoop caches a filesystem per scheme
+  * and user, not per configuration: a `file:` filesystem created in
+  * the JVM before the session keeps the stock class.
   * [[local]] adds a `local[cores]` master with one shuffle partition
   * per core, `cores` defaulting to the JVM's available processors.
   * Each setting is a constant; a caller that wants another value sets
@@ -54,6 +59,8 @@ object GraftSession {
     // operator has to mutate conf as a side effect.
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    .config("spark.hadoop.fs.file.impl",
+      classOf[catalog.NoForkLocalFileSystem].getName)
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = configure(

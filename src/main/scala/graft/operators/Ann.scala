@@ -186,9 +186,8 @@ object Ann {
   def ivfTopk(spark: SparkSession, dir: String, k: Int = 10,
       nQueries: Int = 5, nCells: Int = 16, iters: Int = 3,
       nProbe: Int = 2): DataFrame = {
-    val e = Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = graft.CacheHygiene.persist(Tables(spark, dir, "embeddings")
+      .select(col("vec_id"), col("embedding")))
     val centroids = trainCentroids(e, nCells, iters)
     // after the eager training sample (which consumes the cache);
     // released when the caller's action completes
@@ -237,7 +236,7 @@ object Ann {
     // the corpus plan — persist across the two so an expensive
     // upstream (joins/filters, not just a bare scan) executes once;
     // released after the write action
-    val ep = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ep = graft.CacheHygiene.persist(e)
     val cents = trainCentroids(ep, nCells, iters)
     graft.CacheHygiene.unpersistAfterUse(ep)
     import spark.implicits._

@@ -890,9 +890,8 @@ object Curation {
     */
   def clusterMix(spark: SparkSession, dir: String, k: Int = 8,
       iters: Int = 3): DataFrame = {
-    val e = Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = graft.CacheHygiene.persist(Tables(spark, dir, "embeddings")
+      .select(col("vec_id"), col("embedding")))
     val cents = Ann.trainCentroids(e, k, iters)
     val counts = e.withColumn("cell", Ann.cellExpr(cents, col("embedding")))
       .groupBy(col("cell")).agg(count(lit(1)).as("n_members"))

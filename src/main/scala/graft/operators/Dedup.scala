@@ -142,8 +142,7 @@ object Dedup {
     // the family regressed 1.05->1.49 s (ngram) / 0.98->1.51 s
     // (split_leakage audit) under a spread base - the r5 rejection
     // holds for this pipeline.
-    val docs = docShingleHashesOf(docsIn)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = graft.CacheHygiene.persist(docShingleHashesOf(docsIn))
     val out = ngramJaccardOfHashed(docs, threshold)
     // Register hygiene only AFTER ngramJaccardOfHashed's eager
     // hot-set jobs have run — those actions consume `docs` too, and
@@ -279,8 +278,7 @@ object Dedup {
       k: Int = 128, bands: Int = 32,
       maxBucket: Int = 1000): DataFrame = {
     val r = k / bands
-    val docs = docShingleHashes(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = graft.CacheHygiene.persist(docShingleHashes(spark, dir))
     // Eager corpus stats for the width pins — materializes the
     // shingle cache the signatures and verify read anyway, so the
     // only added cost is one job barrier. Hygiene registers AFTER
@@ -623,10 +621,7 @@ object Dedup {
     val doPersist =
       base.queryExecution.optimizedPlan.stats.sizeInBytes
         .min(BigInt(Long.MaxValue)).toLong <= maxPersistBytes
-    val hashed =
-      if (doPersist)
-        base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else base
+    val hashed = if (doPersist) graft.CacheHygiene.persist(base) else base
     def banded(df: DataFrame, idAlias: String): DataFrame =
       df.select(col("doc_id").as(idAlias),
           minhashFromHashes(col("sh"), k, 42L).as("sig"))

@@ -558,9 +558,8 @@ object Hnsw {
       efSearch: Int = 48, nCells: Int = 16, iters: Int = 3,
       nProbe: Int = 8): DataFrame = {
     import spark.implicits._
-    val e = Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = graft.CacheHygiene.persist(Tables(spark, dir, "embeddings")
+      .select(col("vec_id"), col("embedding")))
     val cents = Ann.trainCentroids(e, nCells, iters)
     val qs = e.filter(col("vec_id") < nQueries)
       .as[(Long, Seq[Float])].collect()
@@ -608,8 +607,8 @@ object Hnsw {
       efConstruction: Int = 64): Unit = {
     val spark = db.spark
     import spark.implicits._
-    val ep = e.select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ep =
+      graft.CacheHygiene.persist(e.select(col("vec_id"), col("embedding")))
     val cents = Ann.trainCentroids(ep, nCells, iters)
     graft.CacheHygiene.unpersistAfterUse(ep)
     db.write(cents.zipWithIndex

@@ -24,9 +24,8 @@ object IvfPq {
   def annIvfPq(spark: SparkSession, dir: String, k: Int = 10,
       nQueries: Int = 5, nCells: Int = 16, nProbe: Int = 2): DataFrame = {
     import spark.implicits._
-    val e = Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = graft.CacheHygiene.persist(Tables(spark, dir, "embeddings")
+      .select(col("vec_id"), col("embedding")))
 
     // Coarse quantizer + residuals (float, so Pq.train's sample path
     // reads them like any embedding column). Training is in-core over
@@ -122,7 +121,7 @@ object IvfPq {
       name: String, nCells: Int = 16): Unit = {
     val spark = db.spark
     import spark.implicits._
-    val ep = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ep = graft.CacheHygiene.persist(e)
     val coarse = Ann.trainCentroids(ep, nCells, iters = 1)
     val assigned = ep
       .withColumn("cell", Ann.cellExpr(coarse, col("embedding")))

@@ -58,9 +58,8 @@ object StreamingAnn {
       k: Int = 10, nCells: Int = 16, iters: Int = 3, nProbe: Int = 2,
       window: String = "5 minutes", watermark: String = "10 minutes")
       : IvfServing = {
-    val corpus = Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = graft.CacheHygiene.persist(Tables(spark, dir, "embeddings")
+      .select(col("vec_id"), col("embedding")))
     val centroids = Ann.trainCentroids(corpus, nCells, iters)
     val assigned = corpus
       .withColumn("cell", Ann.cellExpr(centroids, col("embedding")))

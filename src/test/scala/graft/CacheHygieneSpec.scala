@@ -42,6 +42,28 @@ class CacheHygieneSpec extends AnyFunSuite with SparkTestBase {
       "cache still resident after its consuming action")
   }
 
+  test("operators over one plan persist it once: no already-cached warning") {
+    spark.catalog.clearCache()
+    val db = graft.catalog.GraftDatabase(spark, scratch("cache_once") + "/db")
+    val vectors = Tables(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    // planned, not yet actioned: each frame keeps its operator's
+    // persist, which the next operator over the same plan meets
+    val (planned, lines) = logged {
+      val frames = Seq(operators.Ann.ivfTopk(spark, sf),
+        operators.IvfPq.annIvfPq(spark, sf),
+        operators.Curation.clusterMix(spark, sf),
+        operators.Dedup.ngramJaccard(spark, sf),
+        operators.Dedup.minhashLsh(spark, sf))
+      operators.Ann.buildIvfIndex(db, vectors, "ivf")
+      frames
+    }
+    val twice = lines.filter(_.contains("Asked to cache already cached data"))
+    assert(twice.isEmpty, twice.mkString("\n"))
+    planned.foreach(_.count())
+    spark.catalog.clearCache()
+  }
+
   test("operator-level: fluency leaves no resident cache behind") {
     spark.catalog.clearCache()
     // maxBroadcastVocab=0 forces the JOIN path — the one that

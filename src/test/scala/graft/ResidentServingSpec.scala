@@ -208,31 +208,15 @@ class ResidentServingSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("buildIndex leaves no listener that logs an error for a later failed query") {
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     val s = spark.newSession()
     TextIndex.buildIndex(GraftDatabase(s, scratch("resident_build_quiet")),
       "idx", sessionDocs(s), 2)
-    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
-        "resident-spec", null, null, true,
-        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getMessage.getFormattedMessage.contains("threw an exception"))
-          logged.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
-    }
-    appender.start()
-    val ctx = LoggerContext.getContext(false)
-    ctx.getConfiguration.getRootLogger.addAppender(appender, null, null)
-    ctx.updateLoggers()
-    try {
+    val (_, lines) = logged {
       intercept[org.apache.spark.sql.AnalysisException](
         s.sql("SELECT no_such_column FROM range(1)").collect())
       org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-    } finally {
-      ctx.getConfiguration.getRootLogger.removeAppender("resident-spec")
-      ctx.updateLoggers()
-      appender.stop()
     }
-    assert(logged.isEmpty, logged.asScala.mkString("\n"))
+    val threw = lines.filter(_.contains("threw an exception"))
+    assert(threw.isEmpty, threw.mkString("\n"))
   }
 }

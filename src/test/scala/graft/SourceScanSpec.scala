@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Rules on the library's own source: its defaults are constants, not
   * environment reads, it carries no probe programs or shims, and the
   * upload and streaming-ingest lifecycles and the text index's writer
-  * are each written once.
+  * are each written once; only one class sets a local file's mode.
   * Operators take their gates as parameters, and a session setting is
   * overridden with `.config(key, value)` after `GraftSession.configure`.
   */
@@ -68,6 +68,16 @@ class SourceScanSpec extends AnyFunSuite {
     val stale = scalaFiles("src/main").filter(f =>
       text(f).contains("batchArtifacts")).map(_.getName)
     assert(stale.isEmpty, stale.mkString(", "))
+  }
+
+  test("only NoForkLocalFileSystem sets a local file's mode") {
+    val impl = scalaFiles("src/main")
+      .filter(f => text(f).contains("fs.file.impl")).map(_.getName)
+    assert(impl == Seq("GraftSession.scala"), impl.mkString(", "))
+    val chmod = """\b(Shell\s*\.|FileUtil\s*\.\s*chmod\b|setPermission\b)""".r
+    val sites = scalaFiles("src/main")
+      .filter(f => chmod.findFirstIn(text(f)).isDefined).map(_.getName)
+    assert(sites == Seq("NoForkLocalFileSystem.scala"), sites.mkString(", "))
   }
 
   test("no probe shim remains under graft/operators") {

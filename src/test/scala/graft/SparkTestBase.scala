@@ -31,6 +31,52 @@ trait SparkTestBase {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Run `body` and count the `chmod` processes the JVM started
+    * meanwhile, from an in-process JFR recording of `jdk.ProcessStart`.
+    * Only `chmod` counts: Spark's heartbeat and cleanup threads may
+    * start other commands (`getconf`, `rm`) at any time.
+    */
+  def processesStartedBy[T](body: => T): (T, Int) = {
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val out = try body finally rec.stop()
+    val file = java.nio.file.Files.createTempFile("process_start", ".jfr")
+    try {
+      rec.dump(file)
+      val chmods = jdk.jfr.consumer.RecordingFile.readAllEvents(file)
+        .stream().filter(_.getString("command").split(" ").head == "chmod")
+        .count()
+      (out, chmods.toInt)
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(file)
+    }
+  }
+
+  /** Run `body` and collect every log line logged meanwhile, as
+    * `LEVEL logger: message`. */
+  def logged[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "spark-test-base", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(s"${e.getLevel} ${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val ctx = LoggerContext.getContext(false)
+    ctx.getConfiguration.getRootLogger.addAppender(appender, null, null)
+    ctx.updateLoggers()
+    try (body, lines.toArray(Array.empty[String]).toSeq)
+    finally {
+      ctx.getConfiguration.getRootLogger.removeAppender("spark-test-base")
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
   /** Test scratch under the working directory's `target/`, so two
     * checkouts' suites never share corpora. */
   val scratchRoot: String =
