@@ -8,11 +8,13 @@ import org.apache.spark.sql.SparkSession
   * uses (Bench, Verify, the specs, the flow benchmark): AQE with
   * byte-sized coalescing, the broadcast threshold, no automatic
   * bucketed-scan pruning, UTC, nanosecond timestamps as longs, and
-  * [[catalog.NoForkLocalFileSystem]] for `file:` paths, so a local
-  * file or directory the engine creates sets its mode with a syscall
-  * instead of forking `chmod`. Hadoop caches a filesystem per scheme
-  * and user, not per configuration: a `file:` filesystem created in
-  * the JVM before the session keeps the stock class.
+  * [[catalog.NoForkLocalFileSystem]] (and, for `FileContext` users
+  * such as streaming checkpoints, [[catalog.NoForkLocalFs]]) for
+  * `file:` paths, so a local file or directory the engine creates
+  * sets its mode with a syscall instead of forking `chmod`. Hadoop
+  * caches a filesystem per scheme and user, not per configuration: a
+  * `file:` filesystem created in the JVM before the session keeps the
+  * stock class.
   * [[local]] adds a `local[cores]` master with one shuffle partition
   * per core, `cores` defaulting to the JVM's available processors.
   * Each setting is a constant; a caller that wants another value sets
@@ -61,6 +63,8 @@ object GraftSession {
     .config("spark.ui.enabled", "false")
     .config("spark.hadoop.fs.file.impl",
       classOf[catalog.NoForkLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[catalog.NoForkLocalFs].getName)
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = configure(

@@ -1,11 +1,14 @@
 package graft.catalog
 
+import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Hadoop's checksummed local filesystem, except that a file's or
@@ -38,7 +41,7 @@ object NoForkLocalFileSystem {
     * first: value `i` is mode bit `8 - i`. */
   private val bits = PosixFilePermission.values.toSeq.zipWithIndex
 
-  private class Raw extends RawLocalFileSystem {
+  private[catalog] class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit = {
       val mode = permission.toShort & 0xfff // 07777
       if (mode > 0x1ff) super.setPermission(p, permission) // above 0777
@@ -46,5 +49,31 @@ object NoForkLocalFileSystem {
         bits.collect { case (v, i) if (mode & (1 << (8 - i))) != 0 => v }
           .toSet.asJava)
     }
+  }
+}
+
+/** [[NoForkLocalFileSystem]]'s counterpart for `FileContext`, the API
+  * Spark's streaming checkpoints write through: Hadoop's `LocalFs` (a
+  * `ChecksumFs` over `RawLocalFs`) with the raw layer delegating to
+  * the non-forking raw filesystem. Without it every checkpoint file,
+  * its `.crc` and its directory fork `chmod` (20 per micro-batch of a
+  * windowed aggregation). [[graft.GraftSession.configure]] registers it
+  * for `FileContext`'s `file:` scheme.
+  */
+class NoForkLocalFs(uri: URI, conf: Configuration)
+    extends ChecksumFs(new NoForkLocalFs.Raw(uri, conf))
+
+object NoForkLocalFs {
+
+  /** Hadoop's `RawLocalFs` over [[NoForkLocalFileSystem.Raw]]. */
+  private class Raw(uri: URI, conf: Configuration)
+      extends DelegateToFileSystem(uri, new NoForkLocalFileSystem.Raw, conf,
+        FsConstants.LOCAL_FS_URI.getScheme, false) {
+    override def getUriDefaultPort: Int = -1
+    override def getServerDefaults(f: Path): FsServerDefaults =
+      LocalConfigKeys.getServerDefaults()
+    override def getServerDefaults(): FsServerDefaults =
+      LocalConfigKeys.getServerDefaults()
+    override def isValidName(src: String): Boolean = true
   }
 }

@@ -60,13 +60,21 @@ object CsvUploader {
       val (encoding, sniff) = detectEncodingAndSniff(spark, csvPath,
         sniffBytes)
       val windowText = decodeSniff(encoding, sniff)
+      val truncated = sniff.length == sniffBytes
       // A16: when the caller names no delimiter, sniff it from the
       // same window — field-count consistency voting over the RFC
       // 4180 candidates (',' tab ';' '|'), so a TSV or semicolon
-      // export uploads with zero configuration.
-      val delim = delimiter.getOrElse(windowText
-        .map(sniffDelimiter(_, truncated = sniff.length == sniffBytes))
-        .getOrElse(","))
+      // export uploads with zero configuration. The window's one scan
+      // with the chosen delimiter (the winning candidate's, when
+      // sniffed) serves every probe below.
+      val (delim, scan) = delimiter match {
+        case Some(d) =>
+          (d, windowText.map(scanWindow(_, if (d.isEmpty) ',' else d.head)))
+        case None => windowText.map(sniffDelimiterScan(_, truncated)) match {
+          case Some((d, s)) => (d, Some(s))
+          case None         => (",", None)
+        }
+      }
       // A15: a quoted newline in the sniff window flips the parse to
       // multiLine (whole-file univocity) — the only mode that keeps
       // the reference's csv.reader record semantics on such files.
@@ -76,7 +84,7 @@ object CsvUploader {
       // survives. Explicit `multiLine` overrides the bounded sniff.
       val delimCh = if (delim.isEmpty) ',' else delim.head
       val multi = multiLine.getOrElse(
-        windowText.exists(quotedNewline(_, delimCh)) ||
+        scan.exists(_.quotedNewline) ||
           quotedNewlineInOtherParts(spark, csvPath, encoding, delimCh))
       Upload.Sniffed(encoding, () => Upload.Parsed.inferred(
         if (alter) readRawEvolving(spark, csvPath, encoding, delim, multi)
@@ -96,17 +104,13 @@ object CsvUploader {
           // provided schema (permissive mode then silently pads
           // every row) — fall through to Spark's own header naming
           // instead (r15 ADVICE).
-          val sniffHeader = windowText
+          val sniffHeader = scan
             .filter(_ => delim.length == 1)
             .filter(_ => lineSepFor(encoding).forall(_ == "\n"))
-            .flatMap { t =>
-            val scanned = scanWindow(t, delimCh)
-            if (sniff.length == sniffBytes && scanned.fieldCounts.size < 2)
-              None
-            else Some(scanned.header)
-          }
+            .filter(s => !truncated || s.fieldCounts.size >= 2)
+            .map(_.header)
           dictZipColumns(readRaw(spark, csvPath, encoding, delim,
-            multi, sniffHeader = sniffHeader), windowText, delim)
+            multi, sniffHeader = sniffHeader), scan.map(_.header))
         }))
     }
 
@@ -370,12 +374,17 @@ object CsvUploader {
     * qualifies (single-column file, ragged counts) → ','.
     */
   private[graft] def sniffDelimiter(text: String,
-      truncated: Boolean): String = {
+      truncated: Boolean): String = sniffDelimiterScan(text, truncated)._1
+
+  /** [[sniffDelimiter]]'s verdict with the window's scan under it. */
+  private[graft] def sniffDelimiterScan(text: String,
+      truncated: Boolean): (String, WindowScan) = {
     val scored = DelimiterCandidates.map { d =>
-      val all = scanWindow(text, d).fieldCounts
+      val scan = scanWindow(text, d)
+      val all = scan.fieldCounts
       // a truncated window's final record may be cut mid-field
       val counts = if (truncated && all.nonEmpty) all.init else all
-      if (counts.size < 2) (d, 1, 0.0)
+      if (counts.size < 2) (scan, d, 1, 0.0)
       else {
         val mode = counts.groupBy(identity)
           .maxBy { case (v, g) => (g.size, v) }._1
@@ -384,12 +393,15 @@ object CsvUploader {
         // while punctuation that merely recurs in single-column data
         // (log lines with consistent '|'s) leaves a 1-field header
         val m = if (counts.head == mode) mode else 1
-        (d, m, counts.count(_ == mode).toDouble / counts.size)
+        (scan, d, m, counts.count(_ == mode).toDouble / counts.size)
       }
     }
-    scored.filter { case (_, m, frac) => m >= 2 && frac >= 0.8 }
-      .sortBy { case (d, _, frac) => (-frac, DelimiterCandidates.indexOf(d)) }
-      .headOption.map(_._1.toString).getOrElse(",")
+    // nothing qualifies → ',', the first candidate
+    val (scan, d, _, _) = scored
+      .filter { case (_, _, m, frac) => m >= 2 && frac >= 0.8 }
+      .sortBy { case (_, d, _, frac) => (-frac, DelimiterCandidates.indexOf(d)) }
+      .headOption.getOrElse(scored.head)
+    (d.toString, scan)
   }
 
   /** cp1252 differs from latin-1 ONLY in 0x80–0x9F (27 defined
@@ -440,10 +452,9 @@ object CsvUploader {
     * any window/count mismatch — the safety guard) pass through
     * untouched; the evolving path keeps per-file union semantics.
     */
-  private def dictZipColumns(df: DataFrame, windowText: Option[String],
-      delimiter: String): DataFrame = {
-    val d = if (delimiter.isEmpty) ',' else delimiter.head
-    val names = windowText.map(scanWindow(_, d).header).getOrElse(return df)
+  private def dictZipColumns(df: DataFrame,
+      header: Option[Seq[String]]): DataFrame = {
+    val names = header.getOrElse(return df)
     // Duplicates detected CASE-INSENSITIVELY: Python's dict is
     // case-sensitive, but Spark's analyzer and the parquet writer are
     // not (default caseSensitive=false) — 'ID' and 'id' cannot

@@ -11,7 +11,7 @@ import graft.catalog.{GraftDatabase, ProgressReporter}
   * table, start its `_csv_progress_` row, load, then mark the row
   * complete or failed. A format supplies only its sniff and parse.
   */
-private[sources] object Upload {
+private[graft] object Upload {
 
   /** A format's parse: the typed frame to write, its row count when the
     * parse counted it (None: count the written parquet) and the

@@ -110,6 +110,15 @@ class UploaderFormatSpec extends AnyFunSuite with SparkTestBase {
       == ";")
   }
 
+  test("A16: the delimiter sniff hands back the winning candidate's window scan") {
+    import CsvUploader.{scanWindow, sniffDelimiterScan}
+    for (text <- Seq("a,b,c\n1,2,3", "a;b\n\"x\ny\";2\n3;4", "one\n1\n2",
+        "a;b\n1\n2;3;4\n5")) {
+      val (d, scan) = sniffDelimiterScan(text, truncated = false)
+      assert(scan == scanWindow(text, d.head), text)
+    }
+  }
+
   test("A17: fixed-width upload — trim, null-fill, typed inference") {
     import graft.sources.FixedWidthUploader
     val dir = scratch("fw")

@@ -4,7 +4,7 @@ import java.nio.charset.Charset
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{AnalysisException, DataFrame}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, concat, lit, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.GraftDatabase
@@ -214,6 +214,57 @@ class TypeInferenceSpec extends AnyFunSuite with SparkTestBase {
     val typed = TypeInference.inferAndApply(Seq("1", big).toDF("c"))._1
     assert(typed.filter(typed("c").isNull).count() == 0)
   }
+  test("numeric spellings only the JVM parses are text, as float() rejects them") {
+    for (v <- Seq("1d", "1f", "1.5F", "0x1p3", "0X1P3", "1.5\u0000",
+        "\u00011.5", "\u001c1.5"))
+      assert(inferOf(Seq(v, "2.5")) == TextT, v)
+  }
+
+  test("edge spellings get Python's int()/float() verdicts, deviations as documented") {
+    val integers = Seq(" 4 ", "+1", "-0", "00", "0_1")
+    val floats = Seq("\t1.5", "1_0.", "1e1_0", "-NaN", "iNf", "infinity",
+      "-Infinity", "+nan", "1e5", "1E+05", ".5", "5.", "+.5e-3",
+      "1_000.000_1", "1.5 ", "\n2.5\r", "\u000b1.5",
+      // deviations: int() takes these; a Long or a space-only trim does not
+      "9223372036854775808", "\t1", "\f3\f")
+    val texts = Seq("Nancy", "12 Main St", "infinit", "in f", "1__0", "_1",
+      "1_", ".", "e5", "1e", "1.5e3.2", "1,000", "$5", "5%", "1.5\u007f",
+      // deviations: float() takes non-ASCII digits and a no-break space
+      "\u0661\u0662", "\uff11\uff12", "\u00a01.5")
+    for ((values, want) <- Seq(integers -> IntegerT, floats -> FloatT,
+        texts -> TextT); v <- values)
+      assert(inferOf(Seq(v)) == want, v)
+  }
+
+  test("inf and nan spellings cast in any case") {
+    import spark.implicits._
+    val typed = TypeInference.inferAndApply(
+      Seq("iNf", "-INFINITY", "+nan", " 2.5\t").toDF("c"))._1
+    val got = typed.collect().map(_.getDouble(0))
+    assert(got.take(2).toSeq == Seq(Double.PositiveInfinity,
+      Double.NegativeInfinity))
+    assert(got(2).isNaN)
+    assert(got(3) == 2.5)
+  }
+
+  test("inference and the typed cast build no NumberFormatException") {
+    // 10k rows of an int, a float and a text column, 5 % empty cells
+    val id = col("id")
+    def cell(c: org.apache.spark.sql.Column) =
+      when(id % 20 === 7, lit("")).otherwise(c)
+    val raw = spark.range(10000).select(
+      cell(id.cast("string")).as("i"),
+      cell(concat((id % 97).cast("string"), lit(".5"))).as("f"),
+      cell(concat(lit("w"), id.cast("string"))).as("t"))
+    val ((parsed, rows), thrown) = exceptionsThrownBy {
+      val p = graft.sources.Upload.Parsed.inferred(raw)
+      (p, p.typed.collect())
+    }
+    assert(parsed.types == Seq("i" -> IntegerT, "f" -> FloatT, "t" -> TextT))
+    assert(rows.length == 10000 && rows.count(_.isNullAt(0)) == 500)
+    assert(thrown == 0, s"$thrown NumberFormatExceptions")
+  }
+
   test("applyTypes casts and nulls missing") {
     import spark.implicits._
     val df = Seq(("1", "2.5", "x"), ("", "", "")).toDF("i", "f", "t")
@@ -1004,6 +1055,87 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
     val (cur, jobs) = jobsLaunchedBy(db.progress.current())
     assert(jobs == 0, s"constructing current() launched $jobs job(s)")
     assert(cur.count() == 2L)
+  }
+
+  /** The resident tier's answer equals the window plan's, rows and
+    * schema, and polling it launches no job. */
+  private def tiersAgree(db: GraftDatabase, id: String): Unit = {
+    def rows(df: DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    val resident = db.progress.current()
+    val plan = db.progress.current(residentBudget = 0L)
+    assert(resident.schema == plan.schema)
+    assert(rows(resident) == rows(plan))
+    assert(graft.catalog.ResidentArtifact.history("progress",
+      Seq(db.tablePath(db.progress.tableName))).isDefined)
+    val (polled, jobs) = jobsLaunchedBy(
+      db.progress.current().filter(col("id") === id).collect())
+    assert(jobs == 0, s"a progress poll launched $jobs job(s)")
+    assert(polled.length == 1)
+  }
+
+  test("progress tiers agree: start, updates, complete, failure, resume, compaction") {
+    val db = progressLog("progress_tiers")
+    val t = db.progress
+    tiersAgree(db, "t1")
+    // the failed task keeps its start time and denominator
+    val failed = t.current().filter(col("id") === "t2").head()
+    assert(failed.getAs[Long]("bytes_todo") == 50L)
+    assert(failed.getAs[String]("started").nonEmpty)
+    assert(failed.getAs[String]("error") == "boom")
+    // a streaming task: batches publish seq = batchId + 1, and a resumed
+    // query continues from the recorded seq; each read folds new files
+    t.start("s1", "stream", 0L)
+    for (batchId <- 0L to 1L)
+      t.update("s1", "stream", 0L, 0L, 10L * (batchId + 1), seq = batchId + 1)
+    tiersAgree(db, "s1")
+    t.update("s1", "stream", 0L, 0L, 30L, seq = 3L)
+    tiersAgree(db, "s1")
+    val (_, folds, _) = graft.catalog.ResidentArtifact.history("progress",
+      Seq(db.tablePath(t.tableName))).get
+    assert(folds >= 2)
+    assert(t.current().filter(col("id") === "s1").head()
+      .getAs[Long]("rows_done") == 30L)
+    // a compacted log reloads, then folds on
+    db.compact(t.tableName)
+    tiersAgree(db, "t1")
+    t.complete("s1", "stream", 0L, 30L)
+    tiersAgree(db, "s1")
+    assert(t.current().filter(col("completed").isNotNull).count() == 2L)
+  }
+
+  test("progress rows publish whole: a poller never lists a partial file") {
+    val db = GraftDatabase(spark, scratch("progress_atomic") + "/db")
+    val t = db.progress
+    t.start("a1", "tbl", 1000L)
+    val dir = db.tablePath(t.tableName)
+    val conf = spark.sessionState.newHadoopConf()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val partial = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // one thread lists in a tight loop, opening each newly listed file
+    // once; another reads current() over and over
+    def poll(body: => Unit) = {
+      val th = new Thread(() => while (!done.get) body)
+      th.start()
+      th
+    }
+    val whole = scala.collection.mutable.Set.empty[String]
+    val pollers = Seq(
+      poll(for (f <- graft.sources.ParquetStats.listing(conf, dir).getOrElse(Nil)
+          if !whole(f.getPath.getName))
+        try {
+          graft.sources.ParquetStats.footerRowCount(f, conf)
+          whole += f.getPath.getName
+        } catch { case e: Exception => partial.add(s"${f.getPath}: $e"); () }),
+      poll(try t.current().filter(col("id") === "a1").collect()
+        catch { case e: Exception => failed.add(e.toString); () }))
+    try for (i <- 1 to 1000) t.update("a1", "tbl", 1000L, i, i, seq = i)
+    finally { done.set(true); pollers.foreach(_.join()) }
+    assert(partial.isEmpty, partial)
+    assert(failed.isEmpty, failed)
+    assert(t.current().filter(col("id") === "a1").head()
+      .getAs[Long]("rows_done") == 1000L)
   }
 }
 

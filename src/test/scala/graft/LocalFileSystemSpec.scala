@@ -4,15 +4,17 @@ import java.net.URI
 import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{AbstractFileSystem, CreateFlag, FileContext, FileSystem, LocalFileSystem, Options, Path}
+import org.apache.hadoop.fs.local.LocalFs
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.{GraftDatabase, NoForkLocalFileSystem}
+import graft.catalog.{GraftDatabase, NoForkLocalFileSystem, NoForkLocalFs}
 import graft.operators.TextIndex
 import graft.sources.CsvUploader
-import graft.streaming.StreamingTextIndex
+import graft.streaming.{EventStreams, StreamingTextIndex}
 
 /** The session's `file:` filesystem sets modes without forking
   * `chmod`: the engine's local writes start no `chmod` process, and
@@ -33,8 +35,55 @@ class LocalFileSystemSpec extends AnyFunSuite with SparkTestBase {
   test("file: resolves to NoForkLocalFileSystem through the session's confs") {
     val uri = new Path(scratch("nofork_wiring")).toUri
     for (conf <- Seq(spark.sparkContext.hadoopConfiguration,
-        spark.sessionState.newHadoopConf()))
+        spark.sessionState.newHadoopConf())) {
       assert(FileSystem.get(uri, conf).getClass == classOf[NoForkLocalFileSystem])
+      // FileContext, the API streaming checkpoints write through
+      assert(AbstractFileSystem.get(URI.create("file:///"), conf).getClass ==
+        classOf[NoForkLocalFs])
+    }
+  }
+
+  test("no chmod process: one micro-batch of a windowed aggregation") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
+    val (n, chmods) = processesStartedBy {
+      val q = EventStreams.windowedAgg(mem.toDF().toDF("ts", "event_type", "value"))
+        .writeStream.outputMode("complete")
+        .format("memory").queryName("nofork_win").start()
+      try {
+        mem.addData(
+          (java.sql.Timestamp.valueOf("2024-01-01 10:05:00"), "click", 1.0))
+        q.processAllAvailable()
+        spark.table("nofork_win").count()
+      } finally q.stop()
+    }
+    assert(n == 1L)
+    assert(chmods == 0)
+  }
+
+  test("FileContext makes files, checksum files and dirs with LocalFs's modes") {
+    val conf = spark.sessionState.newHadoopConf()
+    val stock = new Configuration(conf)
+    stock.set("fs.AbstractFileSystem.file.impl", "org.apache.hadoop.fs.local.LocalFs")
+    val root = scratch("nofork_fc_modes")
+    val trees = Seq(("stock", stock, classOf[LocalFs]),
+        ("ours", conf, classOf[NoForkLocalFs])).map { case (name, c, cls) =>
+      val base = new Path(s"$root/$name")
+      assert(AbstractFileSystem.get(URI.create("file:///"), c).getClass == cls)
+      val fc = FileContext.getFileContext(base.toUri, c)
+      fc.create(new Path(base, "made/by/create/f"),
+        java.util.EnumSet.of(CreateFlag.CREATE),
+        Options.CreateOpts.createParent()).close()
+      fc.mkdir(new Path(base, "with/mode"), new FsPermission(octal("750")), true)
+      val local = Paths.get(base.toString)
+      val walk = Files.walk(local)
+      try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .map(p => local.relativize(p).toString -> mode(p)).sorted
+      finally walk.close()
+    }
+    assert(trees.head.exists(_._1.endsWith(".f.crc")), trees.head)
+    assert(trees(1) == trees.head)
   }
 
   test("no chmod process: a driver-tier append of 25 docs") {

@@ -71,9 +71,11 @@ class SourceScanSpec extends AnyFunSuite {
   }
 
   test("only NoForkLocalFileSystem sets a local file's mode") {
-    val impl = scalaFiles("src/main")
-      .filter(f => text(f).contains("fs.file.impl")).map(_.getName)
-    assert(impl == Seq("GraftSession.scala"), impl.mkString(", "))
+    for (key <- Seq("fs.file.impl", "fs.AbstractFileSystem.file.impl")) {
+      val impl = scalaFiles("src/main")
+        .filter(f => text(f).contains(key)).map(_.getName)
+      assert(impl == Seq("GraftSession.scala"), s"$key: ${impl.mkString(", ")}")
+    }
     val chmod = """\b(Shell\s*\.|FileUtil\s*\.\s*chmod\b|setPermission\b)""".r
     val sites = scalaFiles("src/main")
       .filter(f => chmod.findFirstIn(text(f)).isDefined).map(_.getName)

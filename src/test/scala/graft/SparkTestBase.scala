@@ -54,6 +54,33 @@ trait SparkTestBase {
     }
   }
 
+  /** Run `body` and count the `NumberFormatException`s (subclasses
+    * included, such as Spark's `SparkNumberFormatException`) the JVM
+    * built meanwhile, on any thread, from an in-process JFR recording
+    * of `jdk.JavaExceptionThrow`. A local session's executors are
+    * threads of this JVM, so their casts count too.
+    */
+  def exceptionsThrownBy[T](body: => T): (T, Int) = {
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.JavaExceptionThrow")
+    rec.start()
+    val out = try body finally rec.stop()
+    val file = java.nio.file.Files.createTempFile("exception_throw", ".jfr")
+    try {
+      rec.dump(file)
+      def isNfe(name: String) =
+        scala.util.Try(Class.forName(name, false, getClass.getClassLoader))
+          .toOption.exists(classOf[NumberFormatException].isAssignableFrom)
+      val thrown = jdk.jfr.consumer.RecordingFile.readAllEvents(file)
+        .stream().filter(e => isNfe(e.getClass("thrownClass").getName))
+        .count()
+      (out, thrown.toInt)
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(file)
+    }
+  }
+
   /** Run `body` and collect every log line logged meanwhile, as
     * `LEVEL logger: message`. */
   def logged[T](body: => T): (T, Seq[String]) = {
