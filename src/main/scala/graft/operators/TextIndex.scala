@@ -9,14 +9,16 @@ import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder, UnsafeArrayData, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
@@ -133,16 +135,19 @@ object TextIndex {
     * DRIVER, when the batch's plan-estimated bytes
     * (`optimizedPlan.stats.sizeInBytes`, no job) times
     * [[DriverHeapPerPlanByte]] fit `driverBudget` and doc_id is an
-    * integral or string column. One job collects the tokenized
-    * batch with Spark's own `dl`, so tokenizing and NULL text stay
-    * Spark's; the postings, `_len`, `_df` and `_corpus` rows are built
-    * in plain Scala and written through Spark's parquet writer on up
-    * to one driver thread per core, one file per non-empty bucket,
-    * rows sorted by the bucket column, the bucket id from the hash
-    * bucket pruning uses. Each file holds exactly the rows, schema and
-    * Spark row metadata of the file the Spark tier writes for that
-    * bucket (spec-pinned), so serving cannot tell the tiers apart. A
-    * 25-doc append takes one job instead of twelve.
+    * integral or string column. One job collects the tokenized batch
+    * as internal rows with Spark's own `dl`, so tokenizing and NULL
+    * text stay Spark's and a token stays a slice of its row
+    * ([[collectOnDriver]]). Each distinct term is interned once and
+    * the postings kept in primitive arrays ([[DriverBatch]]); each
+    * file's rows are built while the file is written, through Spark's
+    * parquet writer on up to [[WriteThreads]] driver threads, one file
+    * per non-empty bucket, rows sorted by the bucket column, the
+    * bucket id from the hash bucket pruning uses. Each file holds
+    * exactly the rows, schema and Spark row metadata of the file the
+    * Spark tier writes for that bucket (spec-pinned), so serving
+    * cannot tell the tiers apart. A 25-doc append takes one job
+    * instead of twelve, and so does a 2k-document base build.
     *
     * SPARK, otherwise: bucketed Spark writes over one persisted
     * tokenize. The postings go first; `_df` is an exchange-free
@@ -167,23 +172,37 @@ object TextIndex {
   }
 
   /** Driver heap per byte of the batch's plan-estimated size while
-    * the driver tier builds its artifacts: the collected rows, the
-    * postings groups and the rows to write. Measured with
-    * `SizeEstimator` on parquet batches: 48–53 for the serve_mixed
-    * 25-document append files, 73–102 for sf0.001–sf0.1 `documents`
-    * slices of 50–5000 rows (larger files compress better), 89–91 for
-    * serve_mixed's 2k-document base build (406–413 KB of parquet,
-    * seeds 1–3); rounded up. At a 3 GB heap the gate admits parquet
-    * batches of up to ~375 KB, so that base build takes the Spark
-    * tier. */
-  private val DriverHeapPerPlanByte = 128
+    * the driver tier builds its artifacts, rounded up from 1.25× the
+    * largest factor measured with `SizeEstimator` on the collected
+    * rows, the term ids and posting arrays, and the rows of the
+    * largest file per write thread held whole (the writes stream them,
+    * so this over-counts; `DriverAppendSpec` pins the bound):
+    *
+    * | batch                            | plan bytes | structures | bound |
+    * |----------------------------------|-----------:|-----------:|------:|
+    * | sf0.001 / sf0.01 `documents`     |   28 KB    |    27      |  91   |
+    * | 2k docs of 20–80 Zipf words      |  402 KB    |    10.5    |  50   |
+    * | edge frames (7 rows and fewer)   |  ≤ 336 B   |   6–8      | 12–15 |
+    *
+    * At a 3 GB heap the gate admits parquet batches of up to ~431 KB,
+    * so serve_mixed's 2k-document base build (406–413 KB) takes the
+    * driver tier. */
+  private[graft] val DriverHeapPerPlanByte = 114
+
+  /** The most files the driver tier writes at once, so the heap its
+    * writes take does not grow with the driver's core count. */
+  private[graft] val WriteThreads = 4
+
+  /** The batch's plan-estimated bytes: the gate's input, read without
+    * a job. */
+  private[graft] def planBytes(docs: DataFrame): BigInt =
+    docs.queryExecution.optimizedPlan.stats.sizeInBytes
 
   private def fitsDriver(docs: DataFrame, budget: Long): Boolean =
     (docs.schema("doc_id").dataType match {
       case LongType | IntegerType | ShortType | ByteType | StringType => true
       case _ => false // grouping equality differs from the value's
-    }) && docs.queryExecution.optimizedPlan.stats.sizeInBytes *
-      DriverHeapPerPlanByte < budget
+    }) && planBytes(docs) * DriverHeapPerPlanByte < budget
 
   /** `table`'s staging dir for `batchId`, named like a table of `db`
     * so its catalog identifier follows the per-path rule. */
@@ -227,66 +246,209 @@ object TextIndex {
 
   private def stageOnDriver(db: GraftDatabase, table: String,
       docs: DataFrame, nBuckets: Int, batchId: Long): Seq[StructType] = {
-    val tok = tokenized(docs)
     // the frames are analyzed for their schemas only, never run
-    val (postings, lens, stats) = artifacts(tok, batchId)
-    val dfs = dfPartials(postings, batchId)
-    val toCatalyst = CatalystTypeConverters.convertToCatalyst _
-    // (term, doc_id) → positions, in first-seen order: the groups of
-    // `groupBy(term, doc_id)`, a NULL doc_id a key like any other
-    val groups = mutable.LinkedHashMap[(String, Any), mutable.ArrayBuilder.ofInt]()
-    val lenRows = mutable.ArrayBuffer[InternalRow]()
-    var totalLen: java.lang.Long = null
-    val collected = tok.select(col("doc_id"), col("__t"),
-      size(col("__t")).cast("bigint").as("dl")).collect()
-    collected.foreach { r =>
-      val doc = toCatalyst(r.get(0))
-      val dl = r.get(2).asInstanceOf[java.lang.Long]
-      lenRows += InternalRow(doc, dl)
-      if (dl != null) totalLen = (if (totalLen == null) 0L else totalLen.longValue) + dl
-      if (!r.isNullAt(1)) r.getSeq[String](1).iterator.zipWithIndex.foreach {
-        case (term, pos) =>
-          groups.getOrElseUpdate((term, doc), new mutable.ArrayBuilder.ofInt) += pos
-      }
-    }
-    val dfOf = mutable.LinkedHashMap[String, Long]()
-    val postingRows = groups.iterator.map { case ((term, doc), b) =>
-      val positions = b.result()
-      java.util.Arrays.sort(positions)
-      dfOf(term) = dfOf.getOrElse(term, 0L) + 1L
-      InternalRow(UTF8String.fromString(term), doc,
-        new GenericArrayData(positions), positions.length.toLong)
-    }.toArray
-    val dfRows = dfOf.iterator.map { case (term, df) =>
-      InternalRow(batchId, UTF8String.fromString(term), df) }.toArray
-    val staged = Seq((postings.schema, postingRows),
-      (lens.schema, lenRows.toArray), (dfs.schema, dfRows),
-      (stats.schema,
-        Array(InternalRow(batchId, collected.length.toLong, totalLen))))
+    val (postings, lens, stats) = artifacts(tokenized(docs), batchId)
+    val schemas = Seq(postings.schema, lens.schema,
+      dfPartials(postings, batchId).schema, stats.schema)
+    val files = collectOnDriver(docs).files(nBuckets, batchId)
     // all files are written in parallel, as a Spark write's tasks
     // would write them: a serve_mixed 25-doc append writes its 25
     // files in a median 10 ms this way and in 20 ms one after another
     // (4 cores, 80 appends each)
-    onThreads(artifactTables(table).zip(staged).flatMap {
-      case ((t, bucketCol), (schema, rows)) =>
+    onThreads(artifactTables(table).zip(schemas).zip(files).flatMap {
+      case (((t, _), schema), parts) =>
         driverFiles(db.spark, new Path(db.tablePath(stage(t, batchId))),
-          schema, bucketCol.map(_ -> nBuckets), rows)
+          schema, parts)
     })
-    staged.map(_._1)
+    schemas
   }
 
-  /** The writes of `rows` of `schema` as parquet files into `dir`,
-    * one task per file, through Spark's own parquet writer (the
+  /** The driver tier's one job: the tokenized batch collected as
+    * internal (doc_id, tokens, dl) rows — what `Dataset.collect` runs,
+    * under the same SQL execution, minus its conversion to external
+    * rows, so every token stays a slice of its row's bytes — and
+    * indexed into a [[DriverBatch]]. */
+  private[graft] def collectOnDriver(docs: DataFrame): DriverBatch = {
+    val qe = tokenized(docs).select(col("doc_id"), col("__t"),
+      size(col("__t")).cast("bigint").as("dl")).queryExecution
+    new DriverBatch(
+      SQLExecution.withNewExecutionId(qe, Some("collect"))(
+        qe.executedPlan.executeCollect()),
+      docs.schema("doc_id").dataType)
+  }
+
+  /** A tokenized batch on the driver, its postings in primitive
+    * arrays: each distinct term interned once into a [[TermIds]], and
+    * one posting per (term, doc_id) group — rows with equal doc_ids,
+    * NULL included, are one group, as in `groupBy(term, doc_id)`. A
+    * group's postings come from one sort of its `(termId << 32 | pos)`
+    * longs: a posting is the group's first row (`postDoc`) and the
+    * end of its sorted positions in the shared `positions`
+    * (`postEnd`); `byTerm` lists the postings by term id, those of
+    * term t at `termStart(t)` until `termStart(t + 1)`, in doc order.
+    * The artifacts' rows exist only inside the write of their file
+    * ([[files]]). */
+  private[graft] final class DriverBatch(rows: Array[InternalRow],
+      docType: DataType) {
+    private val terms = new TermIds
+    private val (postDoc, postEnd, positions, byTerm, termStart) = {
+      // the next row with the row's doc_id, or -1, for each row; a
+      // group starts at the first row of its doc_id
+      val next = Array.fill(rows.length)(-1)
+      val first = new Array[Boolean](rows.length)
+      val last = new java.util.HashMap[Any, Integer]()
+      for (i <- rows.indices) {
+        val prev = last.put(docOf(i), i)
+        if (prev == null) first(i) = true else next(prev) = i
+      }
+      val postTerm, postDoc, postEnd = new mutable.ArrayBuilder.ofInt
+      val positions = new Array[Int](rows.indices.map(tokens(_).numElements()).sum)
+      var end = 0
+      var keys = new Array[Long](0)
+      for (g <- rows.indices if first(g)) {
+        var m = 0
+        var i = g
+        while (i >= 0) {
+          val ts = tokens(i)
+          val n = ts.numElements()
+          if (m + n > keys.length) keys = java.util.Arrays.copyOf(keys, 2 * (m + n))
+          for (p <- 0 until n) {
+            keys(m) = terms.idOf(ts.getUTF8String(p)).toLong << 32 | p
+            m += 1
+          }
+          i = next(i)
+        }
+        java.util.Arrays.sort(keys, 0, m)
+        var k = 0
+        while (k < m) {
+          val t = (keys(k) >>> 32).toInt
+          while (k < m && (keys(k) >>> 32).toInt == t) {
+            positions(end) = keys(k).toInt
+            end += 1
+            k += 1
+          }
+          postTerm += t
+          postDoc += g
+          postEnd += end
+        }
+      }
+      // counting sort of the postings by term id, stable
+      val pt = postTerm.result()
+      val termStart = new Array[Int](terms.size + 1)
+      pt.foreach(t => termStart(t + 1) += 1)
+      for (t <- 0 until terms.size) termStart(t + 1) += termStart(t)
+      val fill = termStart.clone()
+      val byTerm = new Array[Int](pt.length)
+      for (e <- pt.indices) {
+        byTerm(fill(pt(e))) = e
+        fill(pt(e)) += 1
+      }
+      (postDoc.result(), postEnd.result(), positions, byTerm, termStart)
+    }
+
+    private def docOf(i: Int): Any =
+      if (rows(i).isNullAt(0)) null else rows(i).get(0, docType)
+
+    private def tokens(i: Int): ArrayData =
+      if (rows(i).isNullAt(1)) new GenericArrayData(Array.empty[Any])
+      else rows(i).getArray(1)
+
+    private def postingRow(t: Int, e: Int): InternalRow = {
+      val start = if (e == 0) 0 else postEnd(e - 1)
+      val n = postEnd(e) - start
+      InternalRow(terms(t), docOf(postDoc(e)), UnsafeArrayData.fromPrimitiveArray(
+        positions, Platform.INT_ARRAY_OFFSET + 4 * start, n, 4), n.toLong)
+    }
+
+    /** The batch's files, in [[artifactTables]] order: each table's
+      * (bucket, rows) per non-empty bucket (None for `_corpus`'s one
+      * file), the rows in bucket-column order, built as the file is
+      * written. */
+    def files(nBuckets: Int, batchId: Long)
+        : Seq[Seq[(Option[Int], () => Iterator[InternalRow])]] = {
+      val byBucket = Array.range(0, terms.size)
+        .sortWith((a, b) => terms(a).compareTo(terms(b)) < 0)
+        .groupBy(bucketIds(StringType, nBuckets, terms.size, terms(_)))
+        .toSeq
+      val postings = byBucket.map { case (b, ts) => Some(b) -> (() =>
+        ts.iterator.flatMap(t => (termStart(t) until termStart(t + 1))
+          .iterator.map(i => postingRow(t, byTerm(i))))) }
+      val dfs = byBucket.map { case (b, ts) => Some(b) -> (() =>
+        ts.iterator.map(t => InternalRow(batchId, terms(t),
+          (termStart(t + 1) - termStart(t)).toLong))) }
+      def dl(i: Int): java.lang.Long =
+        if (rows(i).isNullAt(2)) null else rows(i).getLong(2)
+      val byDoc = new InterpretedOrdering(Seq(SortOrder(
+        BoundReference(0, docType, nullable = true), Ascending)))
+      val lens = rows.indices.toArray
+        .groupBy(bucketIds(docType, nBuckets, rows.length, docOf)).toSeq
+        .map { case (b, is) => Some(b) -> (() =>
+          is.map(i => InternalRow(docOf(i), dl(i))).sorted(byDoc).iterator) }
+      val dls = rows.indices.flatMap(i => Option(dl(i)).map(_.longValue))
+      val corpus = Seq(None -> (() => Iterator(InternalRow(batchId,
+        rows.length.toLong, if (dls.isEmpty) null else dls.sum))))
+      Seq(postings, lens, dfs, corpus)
+    }
+  }
+
+  /** Bucket ids of `n` values `value(i)` of type `t`: the expression
+    * `BucketingUtils.getBucketIdFromValue` evaluates (the bucket id of
+    * a bucketed write and of bucket pruning), compiled once — that
+    * function generates its projection on every call. */
+  private def bucketIds(t: DataType, nBuckets: Int, n: Int,
+      value: Int => Any): Array[Int] = {
+    val bucketOf = UnsafeProjection.create(Seq(HashPartitioning(
+      Seq(BoundReference(0, t, nullable = true)), nBuckets).partitionIdExpression))
+    Array.tabulate(n)(i => bucketOf(InternalRow(value(i))).getInt(0))
+  }
+
+  /** Distinct terms → dense ids in first-seen order: open addressing
+    * over the ids, probed from the term's hash. A term is held as a
+    * copy of its bytes, not as a view pinning its collected row. */
+  private final class TermIds {
+    private var slots = new Array[Int](16) // id + 1; 0 is free
+    private var terms = new Array[UTF8String](8)
+    private var n = 0
+
+    def size: Int = n
+
+    def apply(id: Int): UTF8String = terms(id)
+
+    def idOf(t: UTF8String): Int = {
+      val s = slot(t)
+      if (slots(s) != 0) slots(s) - 1
+      else {
+        if (n == terms.length) terms = java.util.Arrays.copyOf(terms, 2 * n)
+        terms(n) = t.clone()
+        n += 1
+        slots(s) = n
+        if (2 * n > slots.length) {
+          val old = slots
+          slots = new Array[Int](2 * old.length)
+          old.foreach(id => if (id != 0) slots(slot(terms(id - 1))) = id)
+        }
+        n - 1
+      }
+    }
+
+    /** The slot holding `t`, or the free slot it goes in. */
+    private def slot(t: UTF8String): Int = {
+      val mask = slots.length - 1
+      var s = t.hashCode & mask
+      while (slots(s) != 0 && terms(slots(s) - 1) != t) s = (s + 1) & mask
+      s
+    }
+  }
+
+  /** The writes of the parquet files of `schema` into `dir`, one task
+    * per (bucket, rows) part, through Spark's own parquet writer (the
     * `ParquetFileFormat.prepareWrite` → `OutputWriterFactory` path a
     * write task takes), so the footers and Spark's row metadata match
-    * a task-written file. `bucketing` = (column, bucket count) writes
-    * one file per non-empty bucket, named with the bucket id (the
-    * hash a bucketed write and bucket pruning use) as a bucketed write
-    * names it, rows sorted by the column; None writes one file. Any
+    * a task-written file. A bucket's file is named with its bucket id
+    * as a bucketed write names it; None names one unbucketed file. Any
     * files of an earlier attempt in `dir` are deleted. */
   private def driverFiles(spark: SparkSession, dir: Path, schema: StructType,
-      bucketing: Option[(String, Int)],
-      rows: Array[InternalRow]): Seq[() => Unit] = {
+      parts: Seq[(Option[Int], () => Iterator[InternalRow])]): Seq[() => Unit] = {
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     job.setOutputKeyClass(classOf[Void])
     job.setOutputValueClass(classOf[InternalRow])
@@ -300,34 +462,22 @@ object TextIndex {
     val fs = dir.getFileSystem(job.getConfiguration)
     fs.delete(dir, true)
     fs.mkdirs(dir)
-    def writeFile(name: String, part: => Iterable[InternalRow]) = () => {
-      val w = factory.newInstance(new Path(dir, name).toString, schema, ctx)
-      try part.foreach(w.write) finally w.close()
-    }
-    bucketing match {
-      case None => Seq(writeFile(s"part-00000-$jobId-c000$ext", rows))
-      case Some((column, n)) =>
-        val i = schema.fieldIndex(column)
-        val t = schema(i).dataType
-        val value = BoundReference(i, t, nullable = true)
-        // the expression BucketingUtils.getBucketIdFromValue evaluates
-        // (the bucket id of a write and of bucket pruning), compiled
-        // once: that function generates its projection on every call
-        val bucketOf = UnsafeProjection.create(
-          Seq(HashPartitioning(Seq(value), n).partitionIdExpression))
-        val order = new InterpretedOrdering(Seq(SortOrder(value, Ascending)))
-        rows.groupBy(r => bucketOf(r).getInt(0)).toSeq.map { case (b, part) =>
-          writeFile(f"part-$b%05d-$jobId${BucketingUtils.bucketIdToString(b)}" +
-            s".c000$ext", part.sorted(order))
-        }
+    parts.map { case (bucket, rows) =>
+      val name = bucket.fold(s"part-00000-$jobId-c000$ext")(b =>
+        f"part-$b%05d-$jobId${BucketingUtils.bucketIdToString(b)}.c000$ext")
+      () => {
+        val w = factory.newInstance(new Path(dir, name).toString, schema, ctx)
+        try rows().foreach(w.write) finally w.close()
+      }
     }
   }
 
-  /** Run `tasks` on up to one thread per driver core and wait for all
-    * of them; then rethrow the first failure. */
+  /** Run `tasks` on up to one thread per driver core, at most
+    * [[WriteThreads]], and wait for all of them; then rethrow the first
+    * failure. */
   private def onThreads(tasks: Seq[() => Unit]): Unit = if (tasks.nonEmpty) {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(tasks.size, Runtime.getRuntime.availableProcessors))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(Seq(
+      tasks.size, Runtime.getRuntime.availableProcessors, WriteThreads).min)
     val outcomes = try tasks.map(t => pool.submit[Unit](() => t()))
       .map(f => scala.util.Try(f.get()))
     finally pool.shutdown()

@@ -27,10 +27,11 @@ import org.apache.spark.sql.types.{LongType, DoubleType, StringType, DataType}
   * values are normalized before the cast. Remaining deviations,
   * documented: integers beyond Long range vote float, not integer —
   * Python's ints are arbitrary-precision, but casting such a value
-  * to a fixed-width long would NULL it (see isInt); an integer inside
-  * whitespace other than spaces (`\t1`) votes float, where int()
-  * strips it; digits outside ASCII (`١٢`) are text, where Python
-  * reads them as numbers.
+  * to a fixed-width long would NULL it (see isInt); digits outside
+  * ASCII (`١٢`) and a no-break space around a number (`\u00a01.5`)
+  * are text, where Python reads them as numbers. Both parses strip
+  * the ASCII whitespace `[ \t\n\x0B\f\r]` around a value, as
+  * int() and float() do, so `\t1` and `\f3\f` are integers.
   */
 object TypeInference {
 
@@ -53,9 +54,13 @@ object TypeInference {
     s"^$ws[+-]?(($D\\.?|$D\\.$D|\\.$D)([eE][+-]?$D)?|(?i:inf|infinity|nan))$ws$$"
   }
 
-  /** An integer as the Long cast reads it: trimmed, digit-grouping
-    * underscores stripped. */
-  private def digits(c: Column): Column = translate(trim(c), "_", "")
+  /** `c` without the ASCII whitespace around it that FloatRe accepts
+    * and int() strips; `trim(c)` strips spaces only. */
+  private def stripped(c: Column): Column = trim(c, " \t\n\u000b\f\r")
+
+  /** An integer as the Long cast reads it: [[stripped]], digit-grouping
+    * underscores removed. */
+  private def digits(c: Column): Column = translate(stripped(c), "_", "")
 
   /** Normalize a Python-parseable numeric string to what the JVM cast
     * parses without a fallback: strip digit-grouping underscores, and
@@ -92,7 +97,7 @@ object TypeInference {
   // to float (Python's arbitrary-precision int can't overflow; a
   // fixed-width engine keeps the value, approximately, instead).
   private def isInt(c: Column): Column =
-    trim(c).rlike(IntRe) && digits(c).try_cast(LongType).isNotNull
+    stripped(c).rlike(IntRe) && digits(c).try_cast(LongType).isNotNull
   // The grammar is Python's: the JVM's double parse also accepts
   // `1d`, `1.5F`, `0x1p3` and control characters around the number,
   // all of which float() rejects. The cast then only confirms.

@@ -221,12 +221,12 @@ class TypeInferenceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("edge spellings get Python's int()/float() verdicts, deviations as documented") {
-    val integers = Seq(" 4 ", "+1", "-0", "00", "0_1")
+    val integers = Seq(" 4 ", "+1", "-0", "00", "0_1", "\t1", "\f3\f")
     val floats = Seq("\t1.5", "1_0.", "1e1_0", "-NaN", "iNf", "infinity",
       "-Infinity", "+nan", "1e5", "1E+05", ".5", "5.", "+.5e-3",
       "1_000.000_1", "1.5 ", "\n2.5\r", "\u000b1.5",
-      // deviations: int() takes these; a Long or a space-only trim does not
-      "9223372036854775808", "\t1", "\f3\f")
+      // deviation: int() takes it; a Long does not
+      "9223372036854775808")
     val texts = Seq("Nancy", "12 Main St", "infinit", "in f", "1__0", "_1",
       "1_", ".", "e5", "1e", "1.5e3.2", "1,000", "$5", "5%", "1.5\u007f",
       // deviations: float() takes non-ASCII digits and a no-break space
@@ -234,6 +234,14 @@ class TypeInferenceSpec extends AnyFunSuite with SparkTestBase {
     for ((values, want) <- Seq(integers -> IntegerT, floats -> FloatT,
         texts -> TextT); v <- values)
       assert(inferOf(Seq(v)) == want, v)
+  }
+
+  test("an integer inside ASCII whitespace casts to its value") {
+    import spark.implicits._
+    val (typed, types) = TypeInference.inferAndApply(
+      Seq("\t1", "\f3\f", " 7\r\n", "\u000b-2").toDF("c"))
+    assert(types == Seq("c" -> IntegerT))
+    assert(typed.collect().map(_.getLong(0)).toSeq == Seq(1L, 3L, 7L, -2L))
   }
 
   test("inf and nan spellings cast in any case") {

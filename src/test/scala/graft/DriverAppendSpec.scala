@@ -9,6 +9,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions.col
+import org.apache.spark.util.SizeEstimator
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.{GraftDatabase, ResidentArtifact}
@@ -252,5 +253,77 @@ class DriverAppendSpec extends AnyFunSuite with SparkTestBase {
     val (_, onSpark) = jobsLaunchedBy(
       StreamingTextIndex.appendBatch(db, "idx", batch, Buckets, 0L, Spark))
     assert(onSpark > 1)
+  }
+
+  /** A served search corpus's shape, generated here: 2000 documents of
+    * 20–80 words, each word drawn Zipf(1) from a vocabulary of 8000
+    * pseudo-words of 3–9 letters or, one time in ten, a stopword, a
+    * period every 12th word; written as 4 parquet files. */
+  private lazy val zipfCorpus: DataFrame = {
+    import spark.implicits._
+    val rng = new scala.util.Random(20)
+    val vocab = Iterator.continually(Seq.fill(3 + rng.nextInt(7))(
+      ('a' + rng.nextInt(26)).toChar).mkString).distinct.take(8000).toIndexedSeq
+    val cum = vocab.indices.scanLeft(0.0)((c, i) => c + 1.0 / (i + 1)).tail.toArray
+    def word() = {
+      val at = java.util.Arrays.binarySearch(cum, rng.nextDouble() * cum.last)
+      vocab(math.min(if (at < 0) -at - 1 else at, vocab.size - 1))
+    }
+    val stops = Seq("the", "and", "of", "to", "is", "in", "it", "a")
+    val docs = (0 until 2000).map { id =>
+      val words = Seq.tabulate(20 + rng.nextInt(61)) { i =>
+        val w = if (rng.nextDouble() < 0.1) stops(rng.nextInt(stops.size)) else word()
+        if (i % 12 == 11) w + "." else w
+      }
+      (id.toLong, words.mkString(" "))
+    }
+    val dir = scratch("driver_zipf_corpus") + "/docs.parquet"
+    docs.toDF("doc_id", "text").repartition(4).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("base build: the driver gate admits a batch one byte under the budget and refuses one at it") {
+    val frame = docs(sf)
+    val estimate = TextIndex.planBytes(frame) * TextIndex.DriverHeapPerPlanByte
+    assert(estimate.isValidLong && estimate > 0, s"estimate $estimate")
+    for ((budget, driver) <- Seq(estimate.toLong + 1 -> true, estimate.toLong -> false)) {
+      val db = GraftDatabase(spark, scratch(s"driver_append_gate$driver"))
+      val (_, jobs) = jobsLaunchedBy(
+        TextIndex.buildIndex(db, "idx", frame, Buckets, budget))
+      if (driver) assert(jobs <= 1, s"budget $budget: $jobs jobs, not the driver tier")
+      else assert(jobs > 1, s"budget $budget: $jobs jobs, not the Spark tier")
+    }
+  }
+
+  test("base build: a 2k-document Zipf corpus takes the driver tier at the default budget") {
+    val (db, corpus) = (GraftDatabase(spark, scratch("driver_append_zipf")), zipfCorpus)
+    val (_, jobs) = jobsLaunchedBy(TextIndex.buildIndex(db, "idx", corpus, Buckets))
+    assert(jobs <= 1, s"the default gate's build launched $jobs jobs")
+    // and it would at a 3 GB driver heap too: budget = heap / 64
+    assert(TextIndex.planBytes(corpus) * TextIndex.DriverHeapPerPlanByte <
+      (3L << 30) / 64)
+  }
+
+  test("the driver tier's heap per plan byte stays below DriverHeapPerPlanByte") {
+    val frames = oracleSets.map(d => s"sf${d.drop(d.indexOf("sf") + 2)}" -> docs(d)) ++
+      edgeFrames :+ ("zipf2k" -> zipfCorpus)
+    for ((name, frame) <- frames) {
+      val planBytes = TextIndex.planBytes(frame)
+      val batch = TextIndex.collectOnDriver(frame)
+      val files = batch.files(Buckets, 0L).flatten.map(_._2().toArray)
+      // the writes stream each file's rows; every write thread holding
+      // a whole file of the largest ones bounds what they hold
+      val held = files.sortBy(f => -SizeEstimator.estimate(f))
+        .take(TextIndex.WriteThreads)
+      // the batch last: estimated first, so the rows' references into
+      // it count once, at their own size
+      val peak = SizeEstimator.estimate(held.toArray[AnyRef] :+ batch)
+      info(f"$name: $peak%,d bytes of heap for $planBytes%,d plan bytes " +
+        f"(${peak.toDouble / planBytes.toDouble}%.1f per byte; structures " +
+        f"${SizeEstimator.estimate(batch)}%,d)")
+      if (planBytes == 0) assert(peak < 4096, s"$name: $peak bytes for an empty plan")
+      else assert(peak <= planBytes * TextIndex.DriverHeapPerPlanByte,
+        s"$name: $peak bytes of heap for $planBytes plan bytes")
+    }
   }
 }

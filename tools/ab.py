@@ -29,7 +29,10 @@ of the median and the parent's IQR/median. A metric reads:
 `--extra` adds a second table of workload metrics that BENCHMARK.json
 does not list, read from the run's `perfbench metrics` line (and its
 `perfbench layers` line under --trace 1), e.g. `append_s_p50,serve_s_p95`,
-so the mechanism can be shown next to the claim. It gives q1/median/q3
+so the mechanism can be shown next to the claim. The `perfbench setup`
+line's parts of setup_s read as `setup.session_s`,
+`setup.workload_setup_s` (the workload's index builds) and
+`setup.warmup_s`, so an untraced run can attribute setup_s. It gives q1/median/q3
 per side and the pairs the change won, and no verdict. A metric whose
 unit ends in `/s` counts as better higher, any other as better lower.
 
@@ -45,6 +48,10 @@ import sys
 import time
 
 ROOT = os.getcwd()
+SETUP_TAG = "perfbench setup "
+# the parts of setup_s the `perfbench setup` line times: JVM and session
+# start, the workload's index builds, its warmup
+SETUP_PARTS = ("session_s", "workload_setup_s", "warmup_s")
 
 
 def parse_seeds(s, n):
@@ -97,6 +104,11 @@ def run_once(root, workload, seed, seconds, trace):
         for tag in ("perfbench metrics ", "perfbench layers "):
             if line.startswith(tag):
                 last["workload_metrics"].update(json.loads(line[len(tag):]))
+        if line.startswith(SETUP_TAG):
+            setup = json.loads(line[len(SETUP_TAG):])
+            last["workload_metrics"].update(
+                {f"setup.{k}": {"value": setup[k], "unit": "s"}
+                 for k in SETUP_PARTS if k in setup})
     return last
 
 
