@@ -18,19 +18,8 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
 
   val name: String = new Path(path).getName
 
-  private def fs: FileSystem =
+  private[graft] def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Hadoop rename reports most failures (existing destination,
-    * missing parent, cross-FS move) by returning FALSE rather than
-    * throwing. Every rename in the z-order/compact commit protocols
-    * must either happen or abort the protocol — a silently-skipped
-    * rename desynchronizes the sidecar from the data files, the exact
-    * corruption the sidecar-authority design exists to prevent.
-    */
-  private def renameOrThrow(src: Path, dst: Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"rename failed: $src -> $dst")
 
   def tablePath(table: String): String = s"$path/$table"
 
@@ -418,12 +407,12 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
     val backup = new Path(tablePath(s"_zold_$table"))
     fs.mkdirs(backup)
     replaced.foreach(n =>
-      renameOrThrow(new Path(tablePath(table), n), new Path(backup, n)))
+      Publish.move(fs, new Path(tablePath(table), n), new Path(backup, n)))
     val moved = fs.listStatus(stage)
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
       .map { s =>
         val dst = new Path(tablePath(table), s.getPath.getName)
-        renameOrThrow(s.getPath, dst)
+        Publish.move(fs, s.getPath, dst)
         dst.toString
       }.toSeq
     writeZMeta(table, metas, keep ++ fileRanges(moved, metas))
@@ -533,7 +522,7 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
       known.filterNot(n => fs.exists(new Path(dir, n)))
         .foreach { n =>
           val src = new Path(backup, n)
-          if (fs.exists(src)) renameOrThrow(src, new Path(dir, n))
+          if (fs.exists(src)) Publish.move(fs, src, new Path(dir, n))
         }
     }
     fs.delete(backup, true)
@@ -550,8 +539,8 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
   def upsertZOrdered(table: String, batch: DataFrame, zCols: Seq[String],
       nFiles: Int): Unit =
     // Bootstrapped means "a complete sidecar exists", and after a
-    // crash inside writeZMeta's rename window the last complete
-    // sidecar is the .bak (meta moved aside, tmp not yet moved in).
+    // crash inside writeZMeta's swap the last complete sidecar is the
+    // .bak (meta moved aside, tmp not yet moved in).
     // Testing zMetaPath alone would misread that state as
     // un-bootstrapped and writeZOrdered's SaveMode.Overwrite would
     // replace the whole table with just this batch — silent data
@@ -641,29 +630,22 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
       sb.append(s"file\t${f.name}\t${f.zmin}\t${f.zmax}\n"))
     // The sidecar is the recovery AUTHORITY — it must never be
     // half-written (an in-place overwrite truncated by a crash would
-    // shrink `known` and make recoverZ delete good files). Protocol:
-    // write complete tmp → move current aside to .bak → move tmp in →
-    // drop .bak. Every crash window leaves either the old sidecar,
-    // the .bak (readZMeta falls back to it), or the new sidecar.
-    val meta = zMetaPath(table)
+    // shrink `known` and make recoverZ delete good files): a complete
+    // tmp is swapped in, so every crash window leaves either the old
+    // sidecar, the .bak (readZMeta heals from it), or the new sidecar.
     val tmp = new Path(tablePath(table), "_zorder_meta.tsv.tmp")
-    val bak = zMetaBakPath(table)
     val out = fs.create(tmp, true)
     try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(bak, false)
-    if (fs.exists(meta)) renameOrThrow(meta, bak)
-    renameOrThrow(tmp, meta)
-    fs.delete(bak, false)
+    Publish.swap(fs, tmp, zMetaPath(table), zMetaBakPath(table))
   }
 
   private def zMetaBakPath(table: String): Path =
     new Path(tablePath(table), "_zorder_meta.tsv.bak")
 
   private def readZMeta(table: String): (Seq[ZColMeta], Seq[ZFileMeta]) = {
-    // A crash between writeZMeta's two renames leaves only the .bak —
-    // the last complete sidecar; restore it before reading.
-    if (!fs.exists(zMetaPath(table)) && fs.exists(zMetaBakPath(table)))
-      renameOrThrow(zMetaBakPath(table), zMetaPath(table))
+    // A crash inside writeZMeta's swap leaves only the .bak — the
+    // last complete sidecar; restore it before reading.
+    Publish.heal(fs, zMetaPath(table), zMetaBakPath(table))
     val in = fs.open(zMetaPath(table))
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
@@ -787,49 +769,36 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
     * swap, with its crash recovery and its reader contract.
     */
   def compact(table: String, targetBytes: Long = 128L * 1024 * 1024): Unit = {
-    restoreStranded(table)
+    Publish.heal(fs, new Path(tablePath(table)),
+      new Path(tablePath(s"_old_$table")))
     val bytes = fs.getContentSummary(new Path(tablePath(table))).getLength
     replaceTable(read(table).repartition(
       math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)), table)
   }
 
   /** Replace `table`'s contents with `df`: write to a scratch dir,
-    * rename current out to `_old_<table>`, rename the new files in,
-    * drop the backup. Unlike `SaveMode.Overwrite` on the live path —
-    * which DELETES the current files before the job's first commit, so
-    * a concurrent reader planning mid-write sees an empty or partial
-    * table — the readable window here is two metadata renames. Built
+    * then [[Publish.swap]] it in through the backup `_old_<table>`.
+    * Unlike `SaveMode.Overwrite` on the live path — which DELETES the
+    * current files before the job's first commit, so a concurrent
+    * reader planning mid-write sees an empty or partial table — the
+    * readable window here is two metadata renames. Built
     * for the served-model maintainers (G22 gate recalibration): a
     * serving stream re-plans the static side per micro-batch and must
     * never observe a half-published model.
     *
     * NOT atomic for concurrent readers: HDFS/local rename cannot swap
     * two directories in one operation, so a reader racing the swap
-    * can observe a missing table path for the instant between the two
-    * renames. Crash-safe, though: data is never lost — a crash
-    * between the renames strands the table in `_old_<table>`, which
-    * the next replaceTable (or compact) restores before proceeding.
-    * True atomic swap needs a table format with a metadata pointer
-    * (manifest), out of scope here.
+    * can observe a missing table path between the two moves. A crash
+    * there strands the table in `_old_<table>`, which the next
+    * replaceTable (or compact) restores: no data is lost. True atomic
+    * swap needs a table format with a metadata pointer, out of scope.
     */
   def replaceTable(df: DataFrame, table: String): Unit = {
-    restoreStranded(table)
-    val src = new Path(tablePath(table))
     val tmp = new Path(tablePath(s"_swap_$table"))
     fs.delete(tmp, true)
     df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val bak = new Path(tablePath(s"_old_$table"))
-    fs.delete(bak, true)
-    if (fs.exists(src)) renameOrThrow(src, bak)
-    renameOrThrow(tmp, src)
-    fs.delete(bak, true)
-  }
-
-  /** Undo a swap that crashed between its two renames. */
-  private def restoreStranded(table: String): Unit = {
-    val src = new Path(tablePath(table))
-    val bak = new Path(tablePath(s"_old_$table"))
-    if (!fs.exists(src) && fs.exists(bak)) renameOrThrow(bak, src)
+    Publish.swap(fs, tmp, new Path(tablePath(table)),
+      new Path(tablePath(s"_old_$table")))
   }
 
   // ---- H18: versioned tables (snapshot reads / time travel) ------
@@ -838,18 +807,17 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
   //   <table>/_versions/v00001/…parquet   — IMMUTABLE once renamed in
   //   <table>/_current                    — one line naming the
   //                                         served version
-  // Publish protocol: stage → rename into _versions (atomic dir
-  // move; an existing destination fails LOUDLY — two writers cannot
-  // silently interleave) → flip the pointer file. The pointer flip
-  // is delete+rename (Hadoop rename refuses existing destinations),
-  // so there is a crash window with NO pointer — readers then fall
-  // back to the HIGHEST published version, which the protocol makes
-  // identical to what the pointer would have said (data rename
-  // strictly precedes pointer flip), and the next write re-heals the
-  // pointer. Versions are immutable: a reader pinned to vN (a
-  // reproducible training run reading "corpus @ vN") is unaffected
-  // by later writes; only [[vacuumVersions]] deletes, never the
-  // current version — the Delta-style retention contract, stated.
+  // Publish protocol: stage → Publish.move into _versions (an
+  // existing version is refused with an exception, so two writers
+  // cannot silently interleave) → flip the pointer file. The pointer
+  // flip is delete+move, so there is a crash window with NO pointer —
+  // readers then fall back to the HIGHEST published version, which
+  // the protocol makes identical to what the pointer would have said
+  // (the data move strictly precedes the pointer flip), and the next
+  // write re-heals the pointer. Versions are immutable: a reader
+  // pinned to vN (a reproducible training run reading "corpus @ vN")
+  // is unaffected by later writes; only [[vacuumVersions]] deletes,
+  // never the current version — the Delta-style retention contract.
   // Single concurrent writer per table, like [[replaceTable]].
 
   private def versionsDir(table: String) =
@@ -893,12 +861,15 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
     val next = publishedVersions(table).lastOption.getOrElse(0) + 1
     val staging = new Path(tdir, s"_staging_${vName(next)}")
     df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    renameOrThrow(staging, new Path(versionsDir(table), vName(next)))
+    Publish.move(fs, staging, new Path(versionsDir(table), vName(next)))
     val tmp = new Path(tdir, "_current_tmp")
     val out = fs.create(tmp, true)
     try out.write(vName(next).getBytes("UTF-8")) finally out.close()
+    // delete-then-move, not a swap: with no pointer the highest
+    // published version serves, which is the new one; healing a
+    // backup pointer would serve the older version for a while
     fs.delete(currentPtr(table), false)
-    renameOrThrow(tmp, currentPtr(table))
+    Publish.move(fs, tmp, currentPtr(table))
     next
   }
 

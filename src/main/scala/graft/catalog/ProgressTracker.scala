@@ -107,10 +107,8 @@ class ProgressTracker(db: GraftDatabase) {
       g.append("seq", seq)
       writer.write(g)
     } finally writer.close()
-    if (!fs.rename(tmp, file)) {
-      fs.delete(tmp, false)
-      throw new IOException(s"could not publish progress row $file")
-    }
+    try Publish.move(fs, tmp, file)
+    catch { case e: IOException => fs.delete(tmp, false); throw e }
   }
 
   def start(id: String, table: String, bytesTodo: Long,

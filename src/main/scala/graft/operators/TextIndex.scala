@@ -156,9 +156,8 @@ object TextIndex {
     * failure is rethrown.
     *
     * Both tiers stage all four tables under `_staging_<table>/<batchId>`
-    * before either publishes one through
-    * [[graft.streaming.IngestPublish.moveUnderPrefix]], so a replay
-    * converges and a failed batch publishes nothing.
+    * before either publishes one through [[graft.catalog.Publish.files]],
+    * so a replay converges and a failed batch publishes nothing.
     */
   private[graft] def writeBatch(db: GraftDatabase, table: String,
       docs: DataFrame, nBuckets: Int, batchId: Long,
@@ -488,17 +487,15 @@ object TextIndex {
     }
   }
 
-  /** Rename the staged files of `table` into the artifact dir under the
+  /** Move the staged files of `table` into the artifact dir under the
     * batch prefix, replacing an earlier attempt's, then drop the
     * catalog's cached listing of the table: a served query planned
     * after the append would otherwise miss the new files.
     */
   private def commit(db: GraftDatabase, table: String, batchId: Long): Unit = {
-    val dir = new Path(db.tablePath(stage(table, batchId)))
-    val fs = dir.getFileSystem(db.spark.sparkContext.hadoopConfiguration)
-    graft.streaming.IngestPublish.moveUnderPrefix(fs, dir,
-      new Path(db.tablePath(table)), batchId)
-    fs.delete(dir.getParent, true)
+    val staged = new Path(db.tablePath(stage(table, batchId)))
+    graft.catalog.Publish.files(db.fs, staged, new Path(db.tablePath(table)),
+      graft.streaming.IngestPublish.prefix(batchId))
     db.refreshBucketed(table)
   }
 

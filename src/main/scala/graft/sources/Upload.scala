@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
-import graft.catalog.{GraftDatabase, ProgressReporter}
+import graft.catalog.{GraftDatabase, ProgressReporter, Publish}
 
 /** The one batch upload lifecycle behind [[CsvUploader]],
   * [[JsonlUploader]] and [[FixedWidthUploader]] — the reference's
@@ -35,6 +35,9 @@ private[graft] object Upload {
     * less one of `extensions`, then the `_2`/`_3` conflict suffix.
     * Every failure, the size lookup of a missing path included, lands
     * in `_csv_progress_.error` and in the result; nothing throws.
+    * The table is written under `_staging_upload_<taskId>`, then
+    * [[Publish.move]]d to its name: a failed write leaves no table, and
+    * a name another writer took meanwhile fails the upload.
     *
     * The parse and the write run inside the legacy-charset scope
     * (Spark reads that setting when a scan runs, not when it is
@@ -47,6 +50,7 @@ private[graft] object Upload {
     val spark = db.spark
     val resolved = db.resolveTableName(
       tableName.getOrElse(db.tableNameForFile(path, extensions)))
+    val staging = new Path(db.tablePath(s"_staging_upload_$taskId"))
     val started = java.time.Instant.now().toString
     var bytesTodo = 0L
     try {
@@ -61,8 +65,9 @@ private[graft] object Upload {
           val parsed = sniffed.parse()
           new ProgressReporter(db, taskId, resolved, bytesTodo,
             progressIntervalMs).around {
-            db.write(parsed.typed, resolved, SaveMode.ErrorIfExists)
+            parsed.typed.write.mode(SaveMode.Overwrite).parquet(staging.toString)
           }
+          Publish.move(db.fs, staging, new Path(db.tablePath(resolved)))
           // footer-stats count of the written parquet, not the input
           val rows = parsed.rows.getOrElse(db.read(resolved).count())
           db.progress.complete(taskId, resolved, bytesTodo, rows)
@@ -72,6 +77,7 @@ private[graft] object Upload {
       }
     } catch {
       case e: Exception =>
+        db.fs.delete(staging, true)
         db.progress.fail(taskId, resolved, String.valueOf(e.getMessage))
         CsvUploader.UploadResult(db.name, resolved, taskId, 0L, bytesTodo,
           "", Nil, Some(String.valueOf(e.getMessage)))

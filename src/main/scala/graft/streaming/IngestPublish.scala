@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery, Trigger}
 
-import graft.catalog.GraftDatabase
+import graft.catalog.{GraftDatabase, Publish}
 
 /** The one start of the streaming ingest paths (CSV, JSONL and
   * fixed-width — SURVEY §2.A9/G2): resume-aware progress and an
@@ -17,11 +17,12 @@ import graft.catalog.GraftDatabase
   * `foreachBatch` is only at-least-once (a batch replays if the write
   * succeeded but the checkpoint commit didn't), so a blind append
   * would duplicate rows. Each batch stages to a scratch dir and
-  * renames into the table under a batchId-unique file prefix, with
-  * any files from an earlier attempt of the same batch deleted first
-  * — a replay converges to exactly one copy no matter where the
-  * previous attempt died. Progress rows are keyed seq=batchId+1 and
-  * replayed batches at-or-below the resume point don't re-count.
+  * moves into the table under a batchId-unique file prefix
+  * ([[graft.catalog.Publish.files]]), with any files from an earlier
+  * attempt of the same batch deleted first — a replay converges to
+  * exactly one copy no matter where the previous attempt died.
+  * Progress rows are keyed seq=batchId+1 and replayed batches
+  * at-or-below the resume point don't re-count.
   */
 private[graft] object IngestPublish {
 
@@ -78,58 +79,29 @@ private[graft] object IngestPublish {
     }
   }
 
-  /** The progress-free core: stage `df` and rename its files into
-    * `table` under a batchId-unique prefix, deleting any files from
-    * an earlier attempt of the same batch first — a replay converges
-    * to exactly one copy. Returns the staged row count, summed from
-    * the staged files' footers on the driver: no Spark job, no source
-    * recompute. Shared by ingest progress publishing and the
-    * index-maintenance appends (D10).
+  /** The progress-free core: stage `df` and move its files into
+    * `table` through [[graft.catalog.Publish.files]] under a
+    * batchId-unique prefix, so a replay converges to exactly one copy.
+    * Returns the staged row count, summed from the staged files'
+    * footers on the driver: no Spark job, no source recompute. Shared
+    * by ingest progress publishing and the index-maintenance appends
+    * (D10).
     */
   def publishFiles(db: GraftDatabase, table: String, df: DataFrame,
       batchId: Long): Long = {
     val spark = df.sparkSession
-    val dest = new Path(db.tablePath(table))
     val staging = new Path(db.tablePath(s"_staging_$table"),
       batchId.toString)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = db.fs
     fs.delete(staging, true)
     df.write.mode("overwrite").parquet(staging.toString)
     val conf = spark.sessionState.newHadoopConf()
     val n = fs.listStatus(staging).filter(_.getPath.getName.endsWith(".parquet"))
       .map(graft.sources.ParquetStats.footerRowCount(_, conf)).sum
-    moveUnderPrefix(fs, staging, dest, batchId)
-    fs.delete(staging, true)
+    Publish.files(fs, staging, new Path(db.tablePath(table)), prefix(batchId))
     n
   }
 
-  /** The exactly-once move core, ONE definition (r15 review: a
-    * verbatim copy lived in StreamingTextIndex, the divergence class
-    * the ServedArtifact consolidation already documented): delete any
-    * earlier attempt's files under the batch's zero-padded prefix,
-    * then rename every staged data file in — with the rename result
-    * CHECKED. Hadoop rename reports failure by returning `false`
-    * (the renameOrThrow rule at GraftDatabase.scala): unchecked, a
-    * failed rename silently drops part of a batch while the
-    * checkpoint commits and the batch never replays — data loss
-    * reported as success. Throwing instead fails the micro-batch;
-    * the restart replays it and the earlier-attempt delete converges
-    * to exactly one copy.
-    */
-  def moveUnderPrefix(
-      fs: org.apache.hadoop.fs.FileSystem, staging: Path, dest: Path,
-      batchId: Long): Unit = {
-    val prefix = f"b$batchId%019d-"
-    fs.mkdirs(dest)
-    fs.listStatus(dest).filter(_.getPath.getName.startsWith(prefix))
-      .foreach(s => fs.delete(s.getPath, false))
-    fs.listStatus(staging)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .foreach { f =>
-        val to = new Path(dest, prefix + f.getPath.getName)
-        if (!fs.rename(f.getPath, to))
-          throw new java.io.IOException(
-            s"publish rename failed: ${f.getPath} -> $to")
-      }
-  }
+  /** The file-name prefix of batch `batchId`'s published files. */
+  def prefix(batchId: Long): String = f"b$batchId%019d-"
 }

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Rules on the library's own source: its defaults are constants, not
   * environment reads, it carries no probe programs or shims, and the
   * upload and streaming-ingest lifecycles and the text index's writer
-  * are each written once; only one class sets a local file's mode.
+  * are each written once; only one class sets a local file's mode, and
+  * only `catalog.Publish` renames to publish.
   * Operators take their gates as parameters, and a session setting is
   * overridden with `.config(key, value)` after `GraftSession.configure`.
   */
@@ -80,6 +81,23 @@ class SourceScanSpec extends AnyFunSuite {
     val sites = scalaFiles("src/main")
       .filter(f => chmod.findFirstIn(text(f)).isDefined).map(_.getName)
     assert(sites == Seq("NoForkLocalFileSystem.scala"), sites.mkString(", "))
+  }
+
+  test("only Publish renames: every publish goes through catalog.Publish") {
+    // the filesystem itself, and the build lock's tomb renames (a lock
+    // protocol, not a publish)
+    def allowed(file: String, line: String) = file match {
+      case "Publish.scala" | "NoForkLocalFileSystem.scala" => true
+      case "ServedArtifact.scala" => line.contains("tomb")
+      case _ => false
+    }
+    val renames = for {
+      f <- scalaFiles("src/main")
+      line <- text(f).linesIterator.toSeq if line.contains(".rename(")
+    } yield (f.getName, line.trim)
+    val offenders = renames.filterNot { case (f, l) => allowed(f, l) }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    assert(renames.exists(_._1 == "Publish.scala"))
   }
 
   test("no probe shim remains under graft/operators") {

@@ -428,6 +428,20 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(db.read("pub").count() == 250L)
   }
 
+  test("a published batch leaves no _staging_ entry in the db directory") {
+    val dir = scratch("publish_no_staging")
+    val csvDir = s"$dir/incoming"
+    Files.createDirectories(Paths.get(csvDir))
+    Files.write(Paths.get(s"$csvDir/part1.csv"), "name,age\nCleo,5".getBytes)
+    val db = GraftDatabase(spark, s"$dir/db")
+    val q = StreamingCsvIngest.start(db, csvDir, "dogs", "task-staging")
+    try q.processAllAvailable() finally q.stop()
+    graft.streaming.IngestPublish.publishFiles(db, "pub", spark.range(5).toDF(), 0L)
+    assert(db.read("dogs").count() == 1L && db.read("pub").count() == 5L)
+    val left = new java.io.File(db.path).list().filter(_.startsWith("_staging_"))
+    assert(left.isEmpty, left.mkString(", "))
+  }
+
   test("G11: streamed LM scores equal the batch served scores") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

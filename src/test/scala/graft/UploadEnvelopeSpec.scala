@@ -2,11 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.GraftDatabase
-import graft.sources.{CsvUploader, FixedWidthUploader, JsonlUploader}
+import graft.sources.{CsvUploader, FixedWidthUploader, JsonlUploader, TypeInference, Upload}
 
 /** The one batch upload envelope, seen through all three formats: a
   * failure lands in `_csv_progress_.error` and leaves no table, and
@@ -68,6 +68,55 @@ class UploadEnvelopeSpec extends AnyFunSuite with SparkTestBase {
       assert(good.tableName == "t" && good.rowsDone == ids.size.toLong)
       assert(db.read("t").count() == ids.size.toLong)
     }
+
+  /** Upload a one-line file as `t` with `parse` injected for the
+    * format's own. */
+  private def injected(db: GraftDatabase, dir: String)(
+      parse: => Upload.Parsed): CsvUploader.UploadResult = {
+    Files.write(Paths.get(s"$dir/in.csv"), "x\n1\n".getBytes("UTF-8"))
+    Upload.run(db, s"$dir/in.csv", Some("t"), Seq(".csv"), "task-injected",
+      progressIntervalMs = 250L)(Upload.Sniffed("", () => parse))
+  }
+
+  private def stagings(db: GraftDatabase): Seq[String] =
+    new java.io.File(db.path).list().toSeq.filter(_.startsWith("_staging_"))
+
+  test("a write that fails in a task leaves no table, no staging, the name free") {
+    val dir = scratch("envelope_task_failure")
+    val db = GraftDatabase(spark, s"$dir/db")
+    val bad = injected(db, dir) {
+      val typed = spark.range(0, 100, 1, 4).select(
+        when(col("id") === 57L, raise_error(lit("planted task failure")))
+          .otherwise(col("id")).as("x"))
+      Upload.Parsed(typed, None, Seq("x" -> TypeInference.IntegerT))
+    }
+    assert(bad.error.exists(_.contains("planted task failure")), bad)
+    val rows = db.progress.current().filter(col("id") === bad.taskId).collect()
+    assert(rows.map(_.getAs[String]("error")).toSeq == bad.error.toSeq)
+    assert(!db.tableExists("t"), "a failed write left a table dir")
+    assert(stagings(db).isEmpty, stagings(db))
+    Files.write(Paths.get(s"$dir/t.csv"), "x\n1\n2\n".getBytes("UTF-8"))
+    val good = CsvUploader.upload(db, s"$dir/t.csv")
+    assert(good.error.isEmpty && good.tableName == "t", good)
+    assert(db.read("t").count() == 2L)
+  }
+
+  test("a name taken during the upload fails it and leaves that table whole") {
+    val dir = scratch("envelope_name_taken")
+    val db = GraftDatabase(spark, s"$dir/db")
+    val res = injected(db, dir) {
+      // another writer wins the resolved name while this parse runs
+      db.write(spark.range(3).toDF("x"), "t")
+      Upload.Parsed(spark.range(10).toDF("x"), Some(10L),
+        Seq("x" -> TypeInference.IntegerT))
+    }
+    assert(res.error.isDefined && res.tableName == "t", res)
+    assert(db.read("t").count() == 3L)
+    val nested = new java.io.File(db.tablePath("t")).listFiles()
+      .filter(_.isDirectory).map(_.getName)
+    assert(nested.isEmpty, nested.mkString(", "))
+    assert(stagings(db).isEmpty, stagings(db))
+  }
 
   test("an upload, current() and SQL over _csv_progress_ log no ignored-path warning") {
     val dir = scratch("envelope_quiet")
