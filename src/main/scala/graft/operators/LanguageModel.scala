@@ -460,7 +460,7 @@ object LanguageModel {
       targetSrcs: Seq[String] = defaultTargetSrcs): Unit = {
     db.write(mlByTgt(docs, targetSrcs), s"${name}_bytgt",
       org.apache.spark.sql.SaveMode.Overwrite)
-    mlServeMemo.remove(db.tablePath(s"${name}_bytgt")); ()
+    mlModels.invalidate(db.tablePath(s"${name}_bytgt"))
   }
 
   /** Score a (doc_id, text) frame against a stored [[buildMlModel]]
@@ -490,10 +490,9 @@ object LanguageModel {
         "ml", targetSrcs)
     }
 
-  // Served-ML broadcast memo — lmServeMemo's discipline (appId
-  // validity, file-listing staleness, caller-cap re-check, LRU 8)
-  // for the PAIR of maps one Moore-Lewis model folds to.
-  private case class ServedMl(appId: String, sig: String, nRows: Int,
+  // One Moore-Lewis model folded to the PAIR of broadcast count maps
+  // (target, background) and their vocabulary sizes.
+  private case class ServedMl(nRows: Int,
     bcT: org.apache.spark.broadcast.Broadcast[
       java.util.HashMap[org.apache.spark.unsafe.types.UTF8String,
         java.lang.Long]],
@@ -502,49 +501,41 @@ object LanguageModel {
         java.lang.Long]],
     vT: Long, vB: Long)
 
-  private val mlServeMemo: java.util.Map[String, ServedMl] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, ServedMl](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, ServedMl]): Boolean = size > 8
-      })
+  // Moore-Lewis models by artifact path, memoized as lmModels
+  private val mlModels = new graft.catalog.ListingMemo[ServedMl]
+
+  /** ONE take bounds the driver, ONE collect builds BOTH maps; None
+    * when `byTgt` holds more than `cap` rows. */
+  private def mlModelOf(byTgt: DataFrame, cap: Int): Option[ServedMl] = {
+    val rows = byTgt.take(cap + 1)
+    if (rows.length > cap) None
+    else {
+      val (mT, mB, vT, vB) = mlFoldRows(rows)
+      val sc = byTgt.sparkSession.sparkContext
+      Some(ServedMl(rows.length, sc.broadcast(mT), sc.broadcast(mB), vT, vB))
+    }
+  }
+
+  /** The model stored at `path` (read as `byTgt`) when it fits `cap`,
+    * memoized while the artifact is unchanged. */
+  private def storedMl(byTgt: DataFrame, path: String,
+      cap: Int): Option[ServedMl] =
+    mlModels.get(byTgt.sparkSession, path, Seq(path))(mlModelOf(byTgt, cap))
+      .filter(_.nRows <= cap)
 
   /** The shared scoring tail: broadcast fast path under the cap
-    * (ONE take bounds the driver, ONE collect builds BOTH maps, ONE
-    * corpus scan carries both LmScore byte passes — VERDICT r7 #6),
-    * join path above it (the 100 TB shape). `memoKey` is the
-    * artifact path when the counts come from storage — the only
-    * case with a staleness signal, hence the only one memoized.
+    * (ONE corpus scan carries both LmScore byte passes — VERDICT r7
+    * #6), join path above it (the 100 TB shape). `artifact` is the
+    * model's path when the counts come from storage — the only case
+    * with a staleness signal, hence the only one memoized.
     */
   private def mlScored(byTgt: DataFrame, ids: DataFrame,
-      maxBroadcastModel: Int, memoKey: Option[String]): DataFrame = {
-    val spark = ids.sparkSession
-    if (maxBroadcastModel > 0) {
-      val appId = spark.sparkContext.applicationId
-      val sigOpt = memoKey.map(k => artifactSig(spark, k))
-      val memoHit = memoKey.flatMap { key =>
-        val hit = mlServeMemo.get(key)
-        if (hit != null && hit.appId == appId &&
-            sigOpt.contains(hit.sig) && hit.nRows <= maxBroadcastModel)
-          Some(hit)
-        else None
-      }
-      memoHit match {
-        case Some(h) =>
-          return mlScoreBroadcast(ids, h.bcT, h.bcB, h.vT, h.vB)
-        case None => ()
-      }
-      val rows = byTgt.take(maxBroadcastModel + 1)
-      if (rows.length <= maxBroadcastModel) {
-        val (mT, mB, vT, vB) = mlFoldRows(rows)
-        val sc = spark.sparkContext
-        val (bcT, bcB) = (sc.broadcast(mT), sc.broadcast(mB))
-        for (key <- memoKey; sig <- sigOpt)
-          mlServeMemo.put(key, ServedMl(appId, sig, rows.length,
-            bcT, bcB, vT, vB))
-        return mlScoreBroadcast(ids, bcT, bcB, vT, vB)
-      }
-    }
+      maxBroadcastModel: Int, artifact: Option[String]): DataFrame = {
+    val fast =
+      if (maxBroadcastModel <= 0) None
+      else artifact.fold(mlModelOf(byTgt, maxBroadcastModel))(
+        storedMl(byTgt, _, maxBroadcastModel))
+    if (fast.isDefined) return mlScoreBroadcast(ids, fast.get)
     val splitBg = (df: DataFrame) => df.select(
       split(col("bg"), " ").getItem(0).as("w1"),
       split(col("bg"), " ").getItem(1).as("w2"), col("c2"))
@@ -624,48 +615,26 @@ object LanguageModel {
   def mooreLewisStream(db: graft.catalog.GraftDatabase, name: String,
       docs: DataFrame, carry: Seq[String] = Seq("ts"),
       maxBroadcastModel: Int = defaultModelCap): DataFrame = {
-    val spark = docs.sparkSession
     val key = db.tablePath(s"${name}_bytgt")
-    val appId = spark.sparkContext.applicationId
-    val sig = artifactSig(spark, key)
-    val hit = mlServeMemo.get(key)
-    val served =
-      if (hit != null && hit.appId == appId && hit.sig == sig &&
-          hit.nRows <= maxBroadcastModel) hit
-      else {
-        val rows = db.read(s"${name}_bytgt").select("bg", "tgt", "c2")
-          .take(maxBroadcastModel + 1)
-        require(rows.length <= maxBroadcastModel,
-          s"Moore-Lewis model $key exceeds maxBroadcastModel=" +
-            s"$maxBroadcastModel rows; streaming scoring requires the " +
-            "broadcast fast path — raise the cap or score in batch")
-        val (mT, mB, vT, vB) = mlFoldRows(rows)
-        val sc = spark.sparkContext
-        val e = ServedMl(appId, sig, rows.length,
-          sc.broadcast(mT), sc.broadcast(mB), vT, vB)
-        mlServeMemo.put(key, e)
-        e
-      }
-    mlScoreBroadcast(docs, served.bcT, served.bcB, served.vT, served.vB,
-      carry)
+    val served = storedMl(db.read(s"${name}_bytgt").select("bg", "tgt", "c2"),
+      key, maxBroadcastModel)
+    require(served.isDefined,
+      s"Moore-Lewis model $key exceeds maxBroadcastModel=" +
+        s"$maxBroadcastModel rows; streaming scoring requires the " +
+        "broadcast fast path — raise the cap or score in batch")
+    mlScoreBroadcast(docs, served.get, carry)
   }
 
   /** Both LmScore byte passes in ONE corpus scan — the fast path's
     * scoring tail, shared by fresh folds and memo hits. */
-  private def mlScoreBroadcast(ids: DataFrame,
-      bcT: org.apache.spark.broadcast.Broadcast[
-        java.util.HashMap[org.apache.spark.unsafe.types.UTF8String,
-          java.lang.Long]],
-      bcB: org.apache.spark.broadcast.Broadcast[
-        java.util.HashMap[org.apache.spark.unsafe.types.UTF8String,
-          java.lang.Long]],
-      vT: Long, vB: Long, carry: Seq[String] = Seq.empty): DataFrame = {
+  private def mlScoreBroadcast(ids: DataFrame, m: ServedMl,
+      carry: Seq[String] = Seq.empty): DataFrame = {
     val gf = graft.functions.GraftFunctions
     val keep = carry.map(col)
     ids
       .select(keep ++ Seq(col("doc_id"),
-        gf.lmScore(lower(col("text")), bcT, vT).as("st"),
-        gf.lmScore(lower(col("text")), bcB, vB).as("sb")): _*)
+        gf.lmScore(lower(col("text")), m.bcT, m.vT).as("st"),
+        gf.lmScore(lower(col("text")), m.bcB, m.vB).as("sb")): _*)
       .filter(col("st").isNotNull && col("sb").isNotNull)
       .select(keep ++ Seq(col("doc_id"),
         (col("st.sum_mb").cast("double") /
@@ -897,51 +866,22 @@ object LanguageModel {
     db.write(c1, s"${name}_contexts", ow)
     db.write(v, s"${name}_meta", ow)
     // A rebuild in this JVM must not serve the previous broadcast
-    // (the sig check would also catch it, but only at modtime
+    // (the listing check would also catch it, but only at modtime
     // resolution — removal is exact).
-    lmServeMemo.remove(servedKey(db, name)); ()
+    lmModels.invalidate(db.tablePath(s"${name}_bigrams"))
   }
 
-  // Served-model broadcast memo: the stored model is immutable
-  // between rebuilds, so the per-invocation take(cap+1) job + driver
-  // map fold + broadcast (the serve path's only non-scan work) are
-  // artifact-level, not query-level, cost. Keyed by artifact path;
-  // an entry is valid only under ITS SparkContext (a Broadcast dies
-  // with its context — the stored applicationId is checked on every
-  // hit, so a restarted session re-folds instead of serving a dead
-  // handle), only while the bigrams directory's file listing matches
-  // (name/len/modtime — an O(files) driver metadata call, no Spark
-  // job — so a rebuild from ANOTHER process invalidates too), and
-  // only when its row count fits the CALLER's maxBroadcastModel (a
-  // tight explicit cap must still get the join path, whatever an
-  // earlier looser call cached). Bounded: access-order LRU of 8
-  // models — a long-lived driver serving many corpora evicts, never
-  // accumulates. The join path (model above the cap) is unaffected —
-  // it never had per-invocation driver work.
-  private case class ServedLm(appId: String, sig: String, nRows: Int,
+  // Served bigram models by the bigrams table's path: the stored
+  // model is immutable between rebuilds, so the take(cap+1) job, the
+  // driver map fold and the broadcast are paid per artifact, not per
+  // invocation.
+  private case class ServedLm(nRows: Int,
     bc: org.apache.spark.broadcast.Broadcast[
       java.util.HashMap[org.apache.spark.unsafe.types.UTF8String,
         java.lang.Long]],
     vocabSize: Long)
 
-  private val lmServeMemo: java.util.Map[String, ServedLm] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, ServedLm](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, ServedLm]): Boolean = size > 8
-      })
-
-  private def servedKey(db: graft.catalog.GraftDatabase,
-      name: String): String = db.tablePath(s"${name}_bigrams")
-
-  private def artifactSig(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "missing"
-    else fs.listStatus(p).filterNot(_.getPath.getName.startsWith("_"))
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-  }
+  private val lmModels = new graft.catalog.ListingMemo[ServedLm]
 
   /** Score a (doc_id, text) frame against a stored [[buildLmModel]]
     * artifact — identical output to the inline path on the same
@@ -953,24 +893,22 @@ object LanguageModel {
       docs: DataFrame,
       maxBroadcastModel: Int = defaultModelCap): DataFrame = {
     val held = docs.select(col("doc_id"), col("text"))
-    if (maxBroadcastModel > 0) {
-      val key = servedKey(db, name)
-      val appId = db.spark.sparkContext.applicationId
-      val sig = artifactSig(db.spark, db.tablePath(s"${name}_bigrams"))
-      val hit = lmServeMemo.get(key)
-      if (hit != null && hit.appId == appId && hit.sig == sig &&
-          hit.nRows <= maxBroadcastModel)
-        return scoreBroadcast(held, hit.bc, hit.vocabSize)
-      val rows = db.read(s"${name}_bigrams").take(maxBroadcastModel + 1)
-      if (rows.length <= maxBroadcastModel) {
-        val (m, vs) = foldModelRows(rows)
-        val bc = db.spark.sparkContext.broadcast(m)
-        lmServeMemo.put(key, ServedLm(appId, sig, rows.length, bc, vs))
-        return scoreBroadcast(held, bc, vs)
-      }
+    val bigrams = db.tablePath(s"${name}_bigrams")
+    val served =
+      if (maxBroadcastModel <= 0) None
+      else lmModels.get(db.spark, bigrams, Seq(bigrams)) {
+        val rows = db.read(s"${name}_bigrams").take(maxBroadcastModel + 1)
+        if (rows.length > maxBroadcastModel) None
+        else {
+          val (m, vs) = foldModelRows(rows)
+          Some(ServedLm(rows.length, db.spark.sparkContext.broadcast(m), vs))
+        }
+      }.filter(_.nRows <= maxBroadcastModel)
+    served match {
+      case Some(m) => scoreBroadcast(held, m.bc, m.vocabSize)
+      case None    => scoreAgainst(db.read(s"${name}_bigrams"),
+        db.read(s"${name}_contexts"), db.read(s"${name}_meta"), held, 0)
     }
-    scoreAgainst(db.read(s"${name}_bigrams"),
-      db.read(s"${name}_contexts"), db.read(s"${name}_meta"), held, 0)
   }
 
   /** C33: DSIR-style importance weighting (Xie et al. 2023,

@@ -689,34 +689,22 @@ object Pipeline {
   // action was C27's whole constant). The memo holds the ranked
   // frame per corpus; its zipRanked offsets are already folded, and
   // later actions re-read the SAME rdd's shuffle files (stage skip),
-  // re-running only the post-shuffle stage. Staleness rides the
-  // parquet listing signature, the ServedArtifact rule — a swapped
-  // corpus rebuilds, never serves a stale permutation. n_chars is
-  // carried through the exchange (~8 bytes/row) so C27 needs no
-  // corpus-scale join back.
-  private val shuffleMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, DataFrame)]()
+  // re-running only the post-shuffle stage. A swapped corpus
+  // rebuilds, never serves a stale permutation. n_chars is carried
+  // through the exchange (~8 bytes/row) so C27 needs no corpus-scale
+  // join back.
+  private val shuffleRanks = new graft.catalog.ListingMemo[DataFrame]
 
-  private def shuffleRanked(spark: SparkSession, dir: String): DataFrame = {
-    val sig = graft.sources.ParquetStats
-      .listingSig(spark, s"$dir/documents.parquet")
-      .getOrElse(throw new IllegalStateException(
-        s"documents table not listable: $dir"))
-    // the staleness key folds in the SparkContext's identity (r14
-    // ADVICE): a cached frame is bound to the session that planned
-    // it, and a same-JVM session restart with an unchanged listing
-    // would otherwise serve a frame whose context is stopped —
-    // every downstream action would fail on a dead SparkContext
-    val ctxSig = s"${spark.sparkContext.applicationId}:$sig"
-    shuffleMemo.compute(dir, (_, cur) =>
-      if (cur != null && cur._1 == ctxSig) cur
-      else (ctxSig, Ranks.hashOrderedRowNumber(
+  private def shuffleRanked(spark: SparkSession, dir: String): DataFrame =
+    shuffleRanks.get(spark, dir, Seq(s"$dir/documents.parquet")) {
+      Some(Ranks.hashOrderedRowNumber(
         Tables(spark, dir, "documents")
           .select(col("doc_id"), col("n_chars"),
             md5(col("doc_id").cast("string")).as("h")),
         col("h"),
-        Seq(col("h").asc, col("doc_id").asc), "pos")))._2
-  }
+        Seq(col("h").asc, col("doc_id").asc), "pos"))
+    }.getOrElse(throw new IllegalStateException(
+      s"documents table not listable: $dir"))
 
   /** C27: training-shard manifest — the release artifact a training
     * run consumes: fixed-size shards cut from the C22 global shuffle

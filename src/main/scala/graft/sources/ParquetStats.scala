@@ -7,7 +7,7 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{CodecFactory, Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, ParquetMetadata}
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.MessageType
@@ -45,19 +45,22 @@ import scala.util.control.NonFatal
   */
 object ParquetStats {
 
-  /** Top-level name:len:mtime listing signature of `dir` — the same
-    * staleness contract as the served-model memos (C30/C31 sidecars):
-    * any rewrite of a flat table layout changes it. None when the
-    * path is missing or unreadable (callers must treat None as "no
-    * memo, take the uncached route"). Top-level only: every table
-    * layout these memos guard (single file, or a flat directory of
-    * part files) keeps its data files as direct children.
+  /** Top-level name:len:mtime listing signature of `dir`: any
+    * rewrite of a flat table layout changes it. None when the path is
+    * missing or unreadable (callers must treat None as "no memo, take
+    * the uncached route"). Top-level only: every table layout it
+    * guards (single file, or a flat directory of part files) keeps
+    * its data files as direct children. Its consumers are
+    * [[graft.catalog.ListingMemo]] (the served LM and Moore-Lewis
+    * broadcast models, the shared shuffle rank, and this object's
+    * footer statistics) and [[graft.catalog.ServedArtifact]]'s
+    * sidecars; [[graft.catalog.ResidentArtifact]] compares the same
+    * [[listing]] per file.
     *
     * Deliberate staleness caveat (ADVICE r12): a file rewritten
     * in-place to the IDENTICAL byte length within one mtime tick
-    * yields the same signature, so consumers ([[longColumnRange]]'s
-    * bounds memo, the served-model sidecars) would serve the
-    * pre-rewrite metadata. This is the listing-only contract's price
+    * yields the same signature, so consumers would serve the
+    * pre-rewrite value. This is the listing-only contract's price
     * and it is kept on purpose: a content-derived component would put
     * a read of every file on every memo lookup — the exact per-call
     * cost the memos exist to remove — to close a window that real
@@ -209,7 +212,7 @@ object ParquetStats {
   private[graft] def footerRowCount(st: FileStatus, conf: Configuration): Long =
     footerOf(st, conf).getBlocks.asScala.map(_.getRowCount).sum
 
-  /** Shared footer walker: fold `f` over every column chunk of every
+  /** The one footer walker: fold `f` over every row group of every
     * parquet file under `dir` (recursive listing, `_`/`.` entries
     * skipped). `f` returns None to abort — the whole fold becomes
     * None (callers fall back to their scan-job path). None also on
@@ -217,7 +220,7 @@ object ParquetStats {
     */
   private def foldFooters[A](spark: SparkSession, dir: String,
       maxFiles: Int)(zero: A)(
-      f: (A, ColumnChunkMetaData) => Option[A]): Option[A] = {
+      f: (A, BlockMetaData) => Option[A]): Option[A] = {
     try {
       val conf = spark.sessionState.newHadoopConf()
       val root = new Path(dir)
@@ -234,11 +237,9 @@ object ParquetStats {
           files += 1
           if (files > maxFiles) return None
           footerOf(st, conf).getBlocks.asScala.foreach { b =>
-            b.getColumns.asScala.foreach { c =>
-              f(acc, c) match {
-                case Some(next) => acc = next
-                case None       => return None
-              }
+            f(acc, b) match {
+              case Some(next) => acc = next
+              case None       => return None
             }
           }
         }
@@ -247,85 +248,45 @@ object ParquetStats {
     } catch { case NonFatal(_) => None }
   }
 
-  // rowCount memo: (dir # listingSig) -> exact row total.
-  // BOXED java.lang.Long like the sibling memos (r16 fix): with a
-  // primitive Scala Long value type, a map MISS returned null which
-  // unboxed to 0L, and the `hit != null` guard re-boxed it to a
-  // non-null java.lang.Long(0) — so EVERY lookup "hit" with 0 rows
-  // and rowCount always answered Some(0). Locally harmless (every
-  // caller's gate correctly read "small"), but the q5 big-join gate
-  // could never fire at scale.
-  private val countMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** The chunks of `column` in one row group. */
+  private def chunks(b: BlockMetaData,
+      column: String): Seq[ColumnChunkMetaData] =
+    b.getColumns.asScala.toSeq.filter(_.getPath.toDotString == column)
+
+  private val counts = new graft.catalog.ListingMemo[Long]
+  private val colBytes = new graft.catalog.ListingMemo[Long]
+  private val ranges = new graft.catalog.ListingMemo[(Long, Long)]
 
   /** Exact row count of the parquet table under `dir` from footer
-    * record counts alone — no Spark job, no data pages; memoized per
-    * [[listingSig]]. The r14 scale-adaptive join gate reads this
-    * (rows are the right regime signal for JOIN strategy — byte
-    * stats see compression, and the q5 gate wants "how many rows
-    * will the sorts move"). None when the listing or a footer is
-    * unreadable, or past `maxFiles` — callers take the safe default.
+    * record counts alone — no Spark job, no data pages; memoized
+    * while `dir`'s listing is unchanged. The r14 scale-adaptive join
+    * gate reads this (rows are the right regime signal for JOIN
+    * strategy — byte stats see compression, and the q5 gate wants
+    * "how many rows will the sorts move"). None when the listing or
+    * a footer is unreadable, or past `maxFiles` — callers take the
+    * safe default.
     */
   def rowCount(spark: SparkSession, dir: String,
-      maxFiles: Int = 65536): Option[Long] = {
-    val sig = listingSig(spark, dir).getOrElse(return None)
-    val key = s"$dir#$sig"
-    val hit = countMemo.get(key)
-    if (hit != null) return Some(hit)
-    try {
-      val conf = spark.sessionState.newHadoopConf()
-      val root = new Path(dir)
-      val fs = root.getFileSystem(conf)
-      if (!fs.exists(root)) return None
-      val it = fs.listFiles(root, true)
-      var total = 0L
-      var files = 0
-      while (it.hasNext) {
-        val st = it.next()
-        val name = st.getPath.getName
-        if (st.isFile && st.getLen > 0 &&
-            !name.startsWith("_") && !name.startsWith(".")) {
-          files += 1
-          if (files > maxFiles) return None
-          total += footerRowCount(st, conf)
-        }
-      }
-      countMemo.put(key, total)
-      Some(total)
-    } catch { case NonFatal(_) => None }
-  }
-
-  // (dir # column # listingSig) -> Σ uncompressed bytes
-  private val colBytesMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.lang.Long]()
+      maxFiles: Int = 65536): Option[Long] =
+    counts.get(spark, dir, Seq(dir)) {
+      foldFooters(spark, dir, maxFiles)(0L)((n, b) => Some(n + b.getRowCount))
+    }
 
   /** Σ total_uncompressed_size of `column` over every parquet file
     * under `dir` (recursive). None when the listing or any footer is
     * unreadable, or past `maxFiles` (callers must treat None as
-    * "unknown — take the safe-at-scale route"). Memoized per
-    * (dir, column, [[listingSig]]) like [[longColumnRange]] — the
-    * clean-corpus gate re-reads it every invocation (r15), and a
-    * footer walk per query is pure constant; a rewrite changes the
-    * signature and re-reads.
+    * "unknown — take the safe-at-scale route"). Memoized while
+    * `dir`'s listing is unchanged — the clean-corpus gate re-reads
+    * it every invocation (r15), and a footer walk per query is pure
+    * constant.
     */
   def uncompressedColumnBytes(spark: SparkSession, dir: String,
-      column: String, maxFiles: Int = 65536): Option[Long] = {
-    val sig = listingSig(spark, dir).getOrElse(return None)
-    val key = s"$dir#$column#$sig"
-    val hit = colBytesMemo.get(key)
-    if (hit != null) return Some(hit.longValue)
-    val r = foldFooters(spark, dir, maxFiles)(0L) { (total, c) =>
-      Some(if (c.getPath.toDotString == column)
-        total + c.getTotalUncompressedSize
-      else total)
+      column: String, maxFiles: Int = 65536): Option[Long] =
+    colBytes.get(spark, s"$dir#$column", Seq(dir)) {
+      foldFooters(spark, dir, maxFiles)(0L) { (total, b) =>
+        Some(total + chunks(b, column).map(_.getTotalUncompressedSize).sum)
+      }
     }
-    r.foreach(v => colBytesMemo.put(key, java.lang.Long.valueOf(v)))
-    r
-  }
-
-  // (lo, hi, seenNonNull) accumulator for longColumnRange
-  private val rangeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Long)]()
 
   /** Exact global (min, max) of an INT64 `column` from parquet FOOTER
     * statistics — no Spark job, no data pages. Parquet writers record
@@ -336,41 +297,30 @@ object ParquetStats {
     * None (callers fall back to the scan) when any chunk lacks usable
     * statistics, the column isn't physically INT64, no file carries a
     * non-null value, or the listing is unreadable — None is always
-    * safe, a Some is always exact.
-    *
-    * Results are memoized per (dir, column, [[listingSig]]) — repeat
-    * pack/budget invocations over unchanged data skip the footer
-    * walk entirely; a rewrite changes the signature and re-reads.
+    * safe, a Some is always exact. Memoized while `dir`'s listing is
+    * unchanged: repeat pack/budget invocations skip the footer walk.
     */
   def longColumnRange(spark: SparkSession, dir: String,
       column: String, maxFiles: Int = 65536): Option[(Long, Long)] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val sig = listingSig(spark, dir).getOrElse(return None)
-    val key = s"$dir#$column#$sig"
-    val hit = rangeMemo.get(key)
-    if (hit != null) return Some(hit)
-    val r = foldFooters(spark, dir, maxFiles)(
-      (Long.MaxValue, Long.MinValue, false)) { case ((lo, hi, seen), c) =>
-      if (c.getPath.toDotString != column) Some((lo, hi, seen))
-      else if (c.getPrimitiveType.getPrimitiveTypeName !=
-        PrimitiveTypeName.INT64) None
-      else {
-        val s = c.getStatistics
-        if (s == null || s.isEmpty) None
-        else if (!s.hasNonNullValue) Some((lo, hi, seen)) // all-null
-        else {
-          val mn = s.genericGetMin.asInstanceOf[java.lang.Long].longValue
-          val mx = s.genericGetMax.asInstanceOf[java.lang.Long].longValue
-          Some((math.min(lo, mn), math.max(hi, mx), true))
+    ranges.get(spark, s"$dir#$column", Seq(dir)) {
+      foldFooters(spark, dir, maxFiles)((Long.MaxValue, Long.MinValue,
+          false)) { (acc, b) =>
+        chunks(b, column).foldLeft(Option(acc)) {
+          case (Some((lo, hi, seen)), c) =>
+            val s = c.getStatistics
+            if (c.getPrimitiveType.getPrimitiveTypeName !=
+              PrimitiveTypeName.INT64) None
+            else if (s == null || s.isEmpty) None
+            else if (!s.hasNonNullValue) Some((lo, hi, seen)) // all-null
+            else {
+              val mn = s.genericGetMin.asInstanceOf[java.lang.Long].longValue
+              val mx = s.genericGetMax.asInstanceOf[java.lang.Long].longValue
+              Some((math.min(lo, mn), math.max(hi, mx), true))
+            }
+          case (None, _) => None
         }
-      }
-    }
-    r match {
-      case Some((lo, hi, true)) =>
-        if (rangeMemo.size > 4096) rangeMemo.clear() // scratch churn cap
-        rangeMemo.put(key, (lo, hi))
-        Some((lo, hi))
-      case _ => None
+      }.collect { case (lo, hi, true) => (lo, hi) }
     }
   }
 }

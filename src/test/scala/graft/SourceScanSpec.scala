@@ -5,8 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Rules on the library's own source: its defaults are constants, not
   * environment reads, it carries no probe programs or shims, and the
   * upload and streaming-ingest lifecycles and the text index's writer
-  * are each written once; only one class sets a local file's mode, and
-  * only `catalog.Publish` renames to publish.
+  * are each written once; only one class sets a local file's mode,
+  * only `catalog.Publish` renames to publish, and a listing signature
+  * or the Spark application id is read only by `ParquetStats`,
+  * `catalog.ServedArtifact` and `catalog.ListingMemo`.
   * Operators take their gates as parameters, and a session setting is
   * overridden with `.config(key, value)` after `GraftSession.configure`.
   */
@@ -98,6 +100,18 @@ class SourceScanSpec extends AnyFunSuite {
     val offenders = renames.filterNot { case (f, l) => allowed(f, l) }
     assert(offenders.isEmpty, offenders.mkString("\n"))
     assert(renames.exists(_._1 == "Publish.scala"))
+  }
+
+  test("only ListingMemo and ServedArtifact sign listings for freshness") {
+    // HashExpressions' per-task Bloom LRU is executor-side and reads
+    // neither, so it is outside this rule
+    val allowed =
+      Set("ParquetStats.scala", "ServedArtifact.scala", "ListingMemo.scala")
+    for (use <- Seq("listingSig(", "sparkContext.applicationId")) {
+      val sites = scalaFiles("src/main")
+        .filter(f => text(f).contains(use)).map(_.getName)
+      assert(sites.forall(allowed), s"$use: ${sites.mkString(", ")}")
+    }
   }
 
   test("no probe shim remains under graft/operators") {
