@@ -912,7 +912,7 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
   /** Recursively remove the whole database. */
   def drop(): Unit = fs.delete(new Path(path), true)
 
-  def progress: ProgressTracker = new ProgressTracker(this)
+  lazy val progress: ProgressTracker = new ProgressTracker(this)
 }
 
 object GraftDatabase {

@@ -5,14 +5,11 @@ import java.io.IOException
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.ParquetStats
@@ -29,6 +26,12 @@ import graft.sources.ParquetStats
   * surface, and an audit trail for free. At scale the log is tiny
   * (O(state changes), not O(rows loaded)).
   *
+  * The log's layout is declared once, as the Spark schema
+  * `ProgressTracker.Schema`; each event is one parquet file written on
+  * the driver through [[DriverParquet]], the writer the text index's
+  * driver tier uses, so its footer is the one Spark's own one-row
+  * write gives.
+  *
   * [[current]] has two tiers, like the served artifacts. While the
   * log's on-disk bytes fit [[ResidentArtifact.budget]] (the same
   * budget, shared with the text index and the HNSW graphs), a
@@ -40,41 +43,19 @@ import graft.sources.ParquetStats
   * Both tiers resolve the same field-wise merge.
   */
 class ProgressTracker(db: GraftDatabase) {
+  import ProgressTracker.Schema
 
   val tableName = "_csv_progress_"
   private def path = db.tablePath(tableName)
   private val spark = db.spark
+  private val toRow = CatalystTypeConverters.createToCatalystConverter(Schema)
+  private val writer = new DriverParquet(spark, Schema)
 
-  /** Parquet schema of the event log — identical shape to what a
-    * Spark 1-row append would produce; readable by spark.read.parquet
-    * and the DuckDB oracle alike. The one declaration of the layout:
-    * [[sparkSchema]] is derived from it.
-    */
-  private val progressSchema = MessageTypeParser.parseMessageType(
-    """message graft_progress {
-      |  optional binary id (UTF8);
-      |  optional binary table_name (UTF8);
-      |  optional int64 bytes_todo;
-      |  optional int64 bytes_done;
-      |  optional int64 rows_done;
-      |  optional binary started (UTF8);
-      |  optional binary completed (UTF8);
-      |  optional binary error (UTF8);
-      |  optional int64 seq;
-      |}""".stripMargin)
-
-  /** The event log's schema as `spark.read.parquet` would infer it —
-    * converted from [[progressSchema]] by Spark's own converter, so
-    * [[current]] reads without a footer-inference Spark job.
-    */
-  private val sparkSchema =
-    new ParquetToSparkSchemaConverter().convert(progressSchema)
-
-  /** One-row metadata append, written DIRECTLY with a ParquetWriter —
-    * a progress update must not cost a Spark job (the Spark write
-    * path schedules a full job per append; measured ~200 ms each,
-    * several per upload once live progress flushes mid-load). Direct
-    * file write is ~ms, and bookkeeping stays off the data path.
+  /** One-row event append, written on the driver through
+    * [[DriverParquet]] — a progress update must not cost a Spark job
+    * (the Spark write path schedules a full job per append; measured
+    * ~200 ms each, several per upload once live progress flushes
+    * mid-load). Bookkeeping stays off the data path.
     *
     * The row is written under a `.`-prefixed name, which listings and
     * Spark's file index skip, and renamed into place once its footer
@@ -83,30 +64,14 @@ class ProgressTracker(db: GraftDatabase) {
   private def append(id: String, table: String, bytesTodo: Long,
       bytesDone: Long, rowsDone: Long, started: String,
       completed: Option[String], error: Option[String], seq: Long): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val row = toRow(Row(id, table, bytesTodo, bytesDone, rowsDone, started,
+      completed.orNull, error.orNull, seq)).asInstanceOf[InternalRow]
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
     val name = s"part-${java.util.UUID.randomUUID().toString}.parquet"
     val (tmp, file) = (new Path(dir, s".$name"), new Path(dir, name))
-    val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(tmp, conf))
-      .withConf(conf) // else the builder parses a default Configuration per row
-      .withType(progressSchema)
-      .build()
-    try {
-      val g = new SimpleGroupFactory(progressSchema).newGroup()
-      g.append("id", id)
-      g.append("table_name", table)
-      g.append("bytes_todo", bytesTodo)
-      g.append("bytes_done", bytesDone)
-      g.append("rows_done", rowsDone)
-      g.append("started", started)
-      completed.foreach(g.append("completed", _))
-      error.foreach(g.append("error", _))
-      g.append("seq", seq)
-      writer.write(g)
-    } finally writer.close()
+    writer.write(tmp, Iterator(row))
     try Publish.move(fs, tmp, file)
     catch { case e: IOException => fs.delete(tmp, false); throw e }
   }
@@ -153,12 +118,12 @@ class ProgressTracker(db: GraftDatabase) {
     ResidentArtifact.get(spark, "progress", Seq(path), residentBudget)(
         ProgressTracker.Loader(spark))
       .map(latest => spark.createDataFrame(
-        latest.values.map(_.row).toSeq.asJava, sparkSchema))
+        latest.values.map(_.row).toSeq.asJava, Schema))
       .getOrElse(windowPlan())
 
   private def windowPlan(): DataFrame = {
     val w = Window.partitionBy(col("id"))
-    ParquetStats.read(spark, path, sparkSchema)
+    ParquetStats.read(spark, path, Schema)
       .withColumn("__rn", row_number().over(w.orderBy(col("seq").desc)))
       .withColumn("__started", max(col("started")).over(w))
       .withColumn("__todo", max(col("bytes_todo")).over(w))
@@ -175,15 +140,16 @@ class ProgressTracker(db: GraftDatabase) {
 
 private object ProgressTracker {
 
-  /** The event log's columns, in [[ProgressTracker.sparkSchema]]'s
-    * order, and which of them are int64. */
-  private val Columns = Seq("id", "table_name", "bytes_todo", "bytes_done",
-    "rows_done", "started", "completed", "error", "seq")
-  private val Longs = Set("bytes_todo", "bytes_done", "rows_done", "seq")
-  private val IdIx = Columns.indexOf("id")
-  private val TodoIx = Columns.indexOf("bytes_todo")
-  private val StartedIx = Columns.indexOf("started")
-  private val SeqIx = Columns.indexOf("seq")
+  /** The event log's one declaration: [[ProgressTracker.current]]'s
+    * schema, the window plan's read schema, the resident fold's columns
+    * and every appended row. */
+  val Schema: StructType = StructType.fromDDL("id STRING, table_name STRING, " +
+    "bytes_todo BIGINT, bytes_done BIGINT, rows_done BIGINT, started STRING, " +
+    "completed STRING, error STRING, seq BIGINT")
+  private val IdIx = Schema.fieldIndex("id")
+  private val TodoIx = Schema.fieldIndex("bytes_todo")
+  private val StartedIx = Schema.fieldIndex("started")
+  private val SeqIx = Schema.fieldIndex("seq")
 
   /** `a > b` as the window plan orders: nulls below every value,
     * strings by UTF-8 bytes like Spark's `max`. */
@@ -220,12 +186,12 @@ private object ProgressTracker {
       val conf = spark.sessionState.newHadoopConf()
       var state = prior
       for (file <- added.flatten)
-        ParquetStats.readRows(conf, file, Columns) { g =>
-          val e = Columns.map { c =>
-            if (g.getFieldRepetitionCount(c) == 0) null
-            else if (Longs(c)) g.getLong(c, 0)
-            else g.getString(c, 0)
-          }.toArray[Any]
+        ParquetStats.readRows(conf, file, Schema.fieldNames.toSeq) { g =>
+          val e = Schema.fields.map { f =>
+            if (g.getFieldRepetitionCount(f.name) == 0) null
+            else if (f.dataType == LongType) g.getLong(f.name, 0)
+            else g.getString(f.name, 0)
+          }
           val id = e(IdIx).asInstanceOf[String]
           state = state.updated(id,
             state.get(id).fold(Latest(e, e(StartedIx), e(TodoIx)))(_.plus(e)))

@@ -5,9 +5,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder, UnsafeArrayData, UnsafeProjection}
@@ -15,14 +12,13 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.BucketingUtils
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
-import graft.catalog.GraftDatabase
+import graft.catalog.{DriverParquet, GraftDatabase}
 import graft.sources.ParquetStats.readRows
 
 /** E11/E12: persisted inverted text index + keyword search
@@ -440,34 +436,21 @@ object TextIndex {
   }
 
   /** The writes of the parquet files of `schema` into `dir`, one task
-    * per (bucket, rows) part, through Spark's own parquet writer (the
-    * `ParquetFileFormat.prepareWrite` → `OutputWriterFactory` path a
-    * write task takes), so the footers and Spark's row metadata match
-    * a task-written file. A bucket's file is named with its bucket id
-    * as a bucketed write names it; None names one unbucketed file. Any
-    * files of an earlier attempt in `dir` are deleted. */
+    * per (bucket, rows) part, through [[graft.catalog.DriverParquet]].
+    * A bucket's file is named with its bucket id as a bucketed write
+    * names it; None names one unbucketed file. Any files of an earlier
+    * attempt in `dir` are deleted. */
   private def driverFiles(spark: SparkSession, dir: Path, schema: StructType,
       parts: Seq[(Option[Int], () => Iterator[InternalRow])]): Seq[() => Unit] = {
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    job.setOutputKeyClass(classOf[Void])
-    job.setOutputValueClass(classOf[InternalRow])
-    FileOutputFormat.setOutputPath(job, dir)
-    val factory = new ParquetFileFormat()
-      .prepareWrite(spark, job, Map.empty, schema)
-    val jobId = java.util.UUID.randomUUID().toString
-    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
-      new TaskAttemptID(new TaskID(new JobID(jobId, 0), TaskType.MAP, 0), 0))
-    val ext = factory.getFileExtension(ctx)
-    val fs = dir.getFileSystem(job.getConfiguration)
+    val writer = new DriverParquet(spark, schema)
+    val (jobId, ext) = (java.util.UUID.randomUUID().toString, writer.extension)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(dir, true)
     fs.mkdirs(dir)
     parts.map { case (bucket, rows) =>
       val name = bucket.fold(s"part-00000-$jobId-c000$ext")(b =>
         f"part-$b%05d-$jobId${BucketingUtils.bucketIdToString(b)}.c000$ext")
-      () => {
-        val w = factory.newInstance(new Path(dir, name).toString, schema, ctx)
-        try rows().foreach(w.write) finally w.close()
-      }
+      () => writer.write(new Path(dir, name), rows())
     }
   }
 

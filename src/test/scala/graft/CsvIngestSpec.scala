@@ -786,7 +786,7 @@ class CsvUploaderSpec extends AnyFunSuite with SparkTestBase {
     // at least one mid-load row (0 < rows_done < total), counts must
     // be nondecreasing in seq order, and current() must resolve to
     // the exact completed state.
-    val log = spark.read.parquet(db.tablePath("_csv_progress_"))
+    val log = spark.read.parquet(partFiles(db.tablePath("_csv_progress_")): _*)
       .filter(col("id") === "task-live")
       .select("seq", "rows_done", "bytes_done", "bytes_todo")
       .collect().sortBy(_.getLong(0))
@@ -1054,7 +1054,8 @@ class CatalogSpec extends AnyFunSuite with SparkTestBase {
 
   test("progress current() has the schema parquet inference gives the log") {
     val db = progressLog("progress_schema")
-    val inferred = spark.read.parquet(db.tablePath(db.progress.tableName)).schema
+    val inferred =
+      spark.read.parquet(partFiles(db.tablePath(db.progress.tableName)): _*).schema
     assert(db.progress.current().schema == inferred)
   }
 

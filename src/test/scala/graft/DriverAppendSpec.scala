@@ -3,11 +3,8 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.BucketingUtils
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions.col
 import org.apache.spark.util.SizeEstimator
 import org.scalatest.funsuite.AnyFunSuite
@@ -51,13 +48,6 @@ class DriverAppendSpec extends AnyFunSuite with SparkTestBase {
       case s: scala.collection.Seq[_] => s.toList
       case v => v
     })
-
-  private def footer(p: Path) = {
-    val f = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromPath(p, spark.sessionState.newHadoopConf()),
-      ParquetMetadataConverter.NO_FILTER).getFileMetaData
-    (f.getSchema, f.getKeyValueMetaData.asScala.toMap)
-  }
 
   /** Spark's ascending order on a bucket column's values, NULL first. */
   private def cmp(a: Any, b: Any): Int = (a, b) match {

@@ -1,6 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 
 /** One shared local session across all suites (Spark sessions are
   * expensive; getOrCreate dedupes).
@@ -119,5 +126,22 @@ trait SparkTestBase {
     if (f.exists()) rm(f)
     f.mkdirs()
     dir
+  }
+
+  /** The `part-*.parquet` data files directly under `dir`, sorted by
+    * name: what a baseline hands `spark.read.parquet` for a table whose
+    * root name Spark's file index hides (`_csv_progress_`), which it
+    * would otherwise log as `All paths were ignored`. */
+  def partFiles(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).sorted
+      .map(n => s"$dir/$n").toSeq
+
+  /** A parquet file's footer schema and key-value metadata. */
+  def footer(p: Path): (MessageType, Map[String, String]) = {
+    val f = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(p, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.NO_FILTER).getFileMetaData
+    (f.getSchema, f.getKeyValueMetaData.asScala.toMap)
   }
 }

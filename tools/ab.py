@@ -12,7 +12,8 @@ pairs the change, so neither side owns the warmer half of a sitting.
 `--seeds` is a first seed (pairs use S, S+1, ...), a range `A-B` or a
 comma list; use seeds the change was not tuned on.
 
-The metrics are the ones BENCHMARK.json lists: `end_to_end` (with
+W is any workload perfbench/run.py runs, corpus_shards included. The
+metrics are the ones BENCHMARK.json lists: `end_to_end` (with
 their bounds) for untraced runs, `per_layer` with --trace 1. For each
 it prints q1/median/q3 per side (statistics.quantiles, n=4), the pairs
 the change won (strictly better in the metric's direction), the shift
@@ -40,6 +41,7 @@ It reads BENCHMARK.json and calls perfbench/run.py; it changes
 neither. A run that exits non-zero stops the tool with its stderr.
 """
 import argparse
+import ast
 import json
 import os
 import statistics
@@ -139,6 +141,17 @@ def verdict(parent, change, better, bound, pairs_won, pairs):
     return "flat", iqr_frac
 
 
+def perfbench_workloads():
+    """perfbench/run.py's WORKLOADS, read from its source without
+    importing it."""
+    with open(os.path.join(ROOT, "perfbench", "run.py")) as f:
+        tree = ast.parse(f.read())
+    return next(ast.literal_eval(n.value) for n in tree.body
+                if isinstance(n, ast.Assign)
+                and any(getattr(t, "id", None) == "WORKLOADS"
+                        for t in n.targets))
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--parent", required=True)
@@ -155,8 +168,8 @@ def main():
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    if a.workload not in [w["name"] for w in bench["workloads"]]:
-        raise SystemExit(f"{a.workload} is not a BENCHMARK.json workload")
+    if a.workload not in perfbench_workloads():
+        raise SystemExit(f"{a.workload} is not a perfbench/run.py workload")
     metrics = bench["per_layer" if a.trace else "end_to_end"]
     seeds = parse_seeds(a.seeds, a.pairs)
     sha, parent_root = extract_parent(
